@@ -35,9 +35,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from logboost_spark.session import default_cores  # noqa: E402
+
 ROOT = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 PIPELINE_ROWS = int(os.environ.get("BENCH_PIPELINE_ROWS", "2000000"))
 BIG_ROWS = int(os.environ.get("BENCH_PIPELINE_ROWS_BIG", "16000000"))
 BIG_ENABLED = os.environ.get("BENCH_BIG", "1") != "0"

@@ -14,6 +14,11 @@ Stand-ins for the reference's live sources (FIXTURES.md §2):
   (helpers/helpers.go:560-762).
 * ``shodan_idb`` — InternetDB responses (helpers/helpers.go:523-557).
 
+Enrich probes two tables derived from these (``operators.enrich.
+derive_lookups``): ``geo_merged`` (geo_asn ∪ geo_city as one disjoint
+interval table, plus ``is_dc``) and ``ip_combined`` (one row per IP key
+across ti, dns_ptr, whois_domain via the TLD, whois_ip and shodan_idb).
+
 All content is generated from a fixed seed; IP keys deliberately overlap
 the transcript generator's IP pool so a fixed fraction of turns hit each
 table.
@@ -23,7 +28,9 @@ from __future__ import annotations
 
 import ipaddress
 import os
+from collections.abc import Mapping
 from functools import lru_cache
+from types import MappingProxyType
 
 # ---------------------------------------------------------------------------
 # IP pools (shared with the transcript generator)
@@ -207,10 +214,26 @@ def shodan_idb_rows() -> list[tuple]:
     return rows
 
 
+@lru_cache(maxsize=1)
+def geo_merged_rows() -> list[tuple]:
+    """(net_start, net_end, asn_org, asn_number, country, city): geo_asn and
+    geo_city outer-merged into one disjoint interval table (the ONE
+    range-join side enrich uses). At real GeoLite2 size (~3M intervals)
+    this is an offline fixture build, never a per-session driver job."""
+    from ..operators.geo_join import flatten_intervals, merge_disjoint_interval_tables
+
+    return merge_disjoint_interval_tables(
+        flatten_intervals(geo_asn_rows()),
+        flatten_intervals(geo_city_rows()),
+        n_a=2,
+        n_b=2,
+    )
+
+
 # ---------------------------------------------------------------------------
 # Public-suffix parse: the real PSL matcher lives in functions/psl.py
 # (wildcards, exceptions, multi-label suffixes); re-exported here because
-# the fixture generators and the TLD UDF were built around this name.
+# the fixture generators were built around this name.
 # Every PSL_SUFFIXES entry above is a genuine public-suffix rule, so
 # fixture domains parse identically under the full list.
 # ---------------------------------------------------------------------------
@@ -233,33 +256,39 @@ LOOKUP_PARQUET_DIR = os.path.join(
 )
 
 
-#: one lookups dict per (session, dir): the dict doubles as the
-#: per-session cache slot for derived dimension tables (enrich's
-#: combined ip lookup, the dc-ASN literal list), so repeated
-#: build_lookup_dfs() callers share those instead of re-deriving them
-#: per query. Dimension fixtures only — never fact-derived results.
-_SESSION_LOOKUPS: dict[tuple, dict] = {}
+#: the base tables ``operators.enrich.derive_lookups`` reads. Enrich
+#: itself reads only the derived ``geo_merged``/``ip_combined``; the
+#: DuckDB oracle reads these base tables directly.
+DERIVATION_INPUTS = (
+    "geo_merged", "ti", "dc_asn", "dns_ptr", "whois_domain", "whois_ip", "shodan_idb",
+)
+
+GEO_MERGED_DDL = (
+    "net_start bigint, net_end bigint, asn_org string, "
+    "asn_number bigint, country string, city string"
+)
+
+#: one read-only lookups mapping per (session, dir): nobody can write
+#: into it, so every build_lookup_dfs() caller of a session can share it
+_SESSION_LOOKUPS: dict[tuple, Mapping] = {}
 
 
-def build_lookup_dfs(spark, parquet_dir: str | None = None):
-    """All lookup tables as small Spark DataFrames (broadcast-join sides).
+def build_lookup_dfs(spark, parquet_dir: str | None = None) -> Mapping:
+    """The tables enrich and the TI reports read, as a read-only mapping of
+    small Spark DataFrames (broadcast-join sides): ``geo_asn``,
+    ``geo_city``, ``ti`` and the derived ``geo_merged`` (with ``is_dc``)
+    and ``ip_combined`` (``operators.enrich.derive_lookups``).
 
-    Prefers the committed parquet fixtures: a DataFrame built with
-    ``createDataFrame(list_of_rows)`` scans through a pickled Python RDD,
-    so EVERY broadcast build (one per Spark action — per-group commit
-    jobs, bench reps, every enrich query) paid a Python-worker
-    round-trip per lookup; profiled at 4-8 s of near-zero-CPU task wait
-    per action (guide §4: keep the JVM↔Python boundary off hot paths).
-    The parquet scan is JVM-native and the files are built from the SAME
-    generators (tools/build_fixtures.py, byte-stable, oracle-shared).
-    The in-memory path remains as fallback for environments without the
-    fixture checkout.
+    Prefers the committed parquet fixtures (tools/build_fixtures.py,
+    byte-stable): a parquet scan is JVM-native, while a DataFrame built
+    with ``createDataFrame(list_of_rows)`` scans through a pickled Python
+    RDD on every broadcast build. The derived tables are committed too,
+    so a CLI call starts no lookup-side Spark job. The in-memory path
+    remains as fallback for environments without the fixture checkout;
+    it derives the tables once per session.
 
-    CONTRACT: the returned dict is the per-session shared instance (it
-    doubles as the cache slot for derived dimension tables). Callers
-    that want to REPLACE an entry (e.g. main.py's --intelfile TI merge)
-    must take a shallow ``dict(...)`` copy first; adding private
-    derived-cache keys is fine.
+    Writes raise ``TypeError``. A caller that replaces an entry (main.py's
+    --intelfile TI merge) takes a ``dict(...)`` copy first.
     """
     if parquet_dir is None:
         parquet_dir = LOOKUP_PARQUET_DIR
@@ -278,22 +307,51 @@ def build_lookup_dfs(spark, parquet_dir: str | None = None):
             "geo_city": rd("geo_city"),
             "geo_merged": rd("geo_merged"),
             "ti": rd("ti"),
-            "dc_asn": rd("dc_asn"),
-            # domains_joined/tld are precomputed by the builder with the
-            # same parse_psl_domain the tld_of UDF applies — carrying
-            # them lets enrich skip the per-action ArrowEvalPython
-            "dns_ptr": rd("dns_ptr"),
-            "whois_domain": rd("whois_domain"),
-            "whois_ip": rd("whois_ip"),
-            "shodan_idb": rd("shodan_idb"),
+            "ip_combined": rd("ip_combined"),
         }
     else:
-        out = _build_lookup_dfs_inmemory(spark)
-    _SESSION_LOOKUPS[cache_key] = out
-    return out
+        from ..operators.enrich import derive_lookups
+
+        base = _base_lookup_dfs_inmemory(spark)
+        derived = derive_lookups(base)
+        out = {
+            "geo_asn": base["geo_asn"],
+            "geo_city": base["geo_city"],
+            "ti": base["ti"],
+            # materialized once: the derivation aggregates and joins, and
+            # would otherwise re-run in every broadcast build
+            **{k: v.localCheckpoint() for k, v in derived.items()},
+        }
+    frozen = MappingProxyType(out)
+    _SESSION_LOOKUPS[cache_key] = frozen
+    return frozen
 
 
-def _build_lookup_dfs_inmemory(spark):
+def base_lookup_dfs(spark, parquet_dir: str | None = None) -> dict:
+    """The ``DERIVATION_INPUTS`` tables as Spark DataFrames: the committed
+    parquet fixtures, else the in-memory generator rows."""
+    if parquet_dir is None:
+        parquet_dir = LOOKUP_PARQUET_DIR
+    if not os.path.isdir(parquet_dir):
+        base = _base_lookup_dfs_inmemory(spark)
+        return {k: base[k] for k in DERIVATION_INPUTS}
+    return {
+        k: spark.read.parquet(os.path.join(parquet_dir, f"{k}.parquet"))
+        for k in DERIVATION_INPUTS
+    }
+
+
+def dns_ptr_table_rows() -> list[tuple]:
+    """(ip, domains, domains_joined, tld): the PTR rows with the pipe-joined
+    domain list and the public-suffix parse of the first domain, as the
+    committed ``dns_ptr`` fixture stores them."""
+    return [
+        (ip, domains, "|".join(domains), parse_psl_domain(domains[0]))
+        for ip, domains in dns_ptr_rows()
+    ]
+
+
+def _base_lookup_dfs_inmemory(spark):
     """Fallback constructor from the in-memory row generators."""
     from pyspark.sql import types as T
 
@@ -306,11 +364,13 @@ def _build_lookup_dfs_inmemory(spark):
     ti = spark.createDataFrame(ti_rows(), "ip string, feed_name string, category string")
     dc_asn = spark.createDataFrame([(n,) for n in DC_ASN_NUMBERS], "asn_number bigint")
     dns_ptr = spark.createDataFrame(
-        dns_ptr_rows(),
+        dns_ptr_table_rows(),
         T.StructType(
             [
                 T.StructField("ip", T.StringType()),
                 T.StructField("domains", T.ArrayType(T.StringType())),
+                T.StructField("domains_joined", T.StringType()),
+                T.StructField("tld", T.StringType()),
             ]
         ),
     )
@@ -335,22 +395,7 @@ def _build_lookup_dfs_inmemory(spark):
             ]
         ),
     )
-    # The merged disjoint ASN+City interval table is itself a deterministic
-    # table build — computed here in pure Python from the SAME row
-    # generators (no DataFrame .collect() round-trip; at real GeoLite2
-    # size this is an offline fixture build, see tools/build_fixtures.py).
-    from ..operators.geo_join import flatten_intervals, merge_disjoint_interval_tables
-
-    geo_merged = spark.createDataFrame(
-        merge_disjoint_interval_tables(
-            flatten_intervals(geo_asn_rows()),
-            flatten_intervals(geo_city_rows()),
-            n_a=2,
-            n_b=2,
-        ),
-        "net_start bigint, net_end bigint, asn_org string, "
-        "asn_number bigint, country string, city string",
-    )
+    geo_merged = spark.createDataFrame(geo_merged_rows(), GEO_MERGED_DDL)
     out = {
         "geo_asn": geo_asn,
         "geo_city": geo_city,
@@ -363,8 +408,7 @@ def _build_lookup_dfs_inmemory(spark):
         "shodan_idb": shodan_idb,
     }
     # single-slice dimension frames: createDataFrame spreads even a
-    # 50-row lookup over defaultParallelism (32) partitions, so every
-    # broadcast BUILD was a 32-task job per Spark action — per-group
-    # commit jobs and bench reps each re-paid it (guide §1.1). One
+    # 50-row lookup over defaultParallelism partitions, so every
+    # broadcast BUILD was a many-task job per Spark action. One
     # partition makes each build one trivial task; values unchanged.
     return {k: v.coalesce(1) for k, v in out.items()}

@@ -6,16 +6,18 @@ geo-ASN, geo-city, threat intel (+ datacenter-ASN merge), reverse DNS,
 TLD, WHOIS (domain + IP), Shodan InternetDB — appending the fixed
 ``lb_*`` column suffix with string sentinels on each miss path.
 
-Spark shape: ONE pass over the fact table with
-  * two prefix-bucketed broadcast range joins (geo ASN / city),
-  * five broadcast hash left joins (ti, dns_ptr, whois_domain, whois_ip,
-    shodan_idb),
-  * one ``isin`` literal membership test (dc ASN — ~800 values),
-  * one Arrow-batched pandas UDF (public-suffix TLD parse).
-No fact-side shuffle anywhere; every lookup side broadcasts. Private /
-no-IP rows carry null join keys, so they fall through every join for
-free and get sentinel-filled at the end (the reference's early-exit,
-expressed declaratively).
+Spark shape: ONE pass over the fact table with at most two broadcast
+probes, both against tables derived offline by :func:`derive_lookups`:
+  * one prefix-bucketed broadcast range join against ``geo_merged`` (geo
+    ASN + city merged into one disjoint interval table, carrying the
+    datacenter-ASN flag ``is_dc``),
+  * one broadcast hash left join against ``ip_combined`` (one row per
+    IP: threat intel with its datacenter variants, reverse DNS + TLD,
+    domain WHOIS pre-joined through that TLD, IP WHOIS, InternetDB).
+No fact-side shuffle and no Python anywhere; every lookup side is a
+plain scan of a committed table. Private / no-IP rows carry null join
+keys, so they fall through every join for free and get sentinel-filled
+at the end (the reference's early-exit, expressed declaratively).
 
 Sentinel matrix (see semantics.py for the ragged-row normalization note):
   no IP found / unparseable  → lb_IP="NoIP", every enrich col "NoIP"
@@ -29,23 +31,35 @@ Sentinel matrix (see semantics.py for the ragged-row normalization note):
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.ip import ip_extract_stage
-from ..functions.tld import tld_of
 from ..semantics import (
-    DNS_FIELDS,
-    GEO_FIELDS,
     IDB_FIELDS,
-    THREAT_FIELDS,
     WHOIS_DOMAIN_FIELDS,
     WHOIS_IP_FIELDS,
 )
-from .geo_join import flatten_intervals, merge_disjoint_interval_tables, range_lookup_join
+from .geo_join import range_lookup_join
 
 _DC_CATEGORY = "dc"
 _DC_FEED = "internal datacenter list"
+
+#: ``ip_combined`` columns per enrichment, in output order
+_TI_COLS = [
+    "ti_categories", "ti_feed_count", "ti_feeds",
+    "ti_categories_dc", "ti_feed_count_dc", "ti_feeds_dc",
+]
+_DNS_COLS = ["domains_joined", "tld"]
+_WD_SRC = ["created", "updated", "country", "org"]
+_WI_SRC = ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"]
+_WD_COLS = [f"wd_{c}" for c in _WD_SRC]
+_WI_COLS = [f"wi_{c}" for c in _WI_SRC]
+_IDB_COLS = ["idb_cpes", "idb_hostnames", "idb_ports", "idb_tags", "idb_vulns"]
+
+_GEO_ATTRS = ["asn_org", "asn_number", "country", "city"]
 
 
 def ti_by_ip(ti: DataFrame) -> DataFrame:
@@ -76,13 +90,80 @@ def ti_by_ip(ti: DataFrame) -> DataFrame:
     )
     return base.select(
         "ip",
-        F.array_join("_c", "|").alias("_ti_cats_str"),
-        F.array_join("_f", "|").alias("_ti_feeds_str"),
-        F.size("_f").cast("string").alias("_ti_nfeeds_str"),
-        F.array_join(dc_c, "|").alias("_ti_cats_dc_str"),
-        F.array_join(dc_f, "|").alias("_ti_feeds_dc_str"),
-        F.size(dc_f).cast("string").alias("_ti_nfeeds_dc_str"),
+        F.array_join("_c", "|").alias("ti_categories"),
+        F.size("_f").cast("string").alias("ti_feed_count"),
+        F.array_join("_f", "|").alias("ti_feeds"),
+        F.array_join(dc_c, "|").alias("ti_categories_dc"),
+        F.size(dc_f).cast("string").alias("ti_feed_count_dc"),
+        F.array_join(dc_f, "|").alias("ti_feeds_dc"),
     )
+
+
+def derive_lookups(base: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
+    """The two tables enrich probes, derived from the base dimension tables
+    (``fixtures.lookups.DERIVATION_INPUTS``).
+
+    * ``geo_merged``: the merged ASN+City interval table plus ``is_dc``
+      (its ASN is in ``dc_asn``), so the datacenter test rides on the geo
+      range join instead of a per-row literal membership test.
+    * ``ip_combined``: one row per IP key across ti, dns_ptr, whois_ip and
+      shodan_idb, each source LEFT-joined onto the key union. Dimension
+      tables have unique ip keys, so one fact-side LEFT join against this
+      table is row-for-row identical to one join per source. The domain
+      WHOIS fields are joined here through the row's TLD (only when it is
+      neither null nor ``none``): the TLD is a function of the IP (first
+      PTR domain → public suffix), so the fact side needs no TLD-keyed
+      probe of its own.
+
+    A pure DataFrame function: ``tools/build_fixtures.py`` runs it once to
+    write the committed tables, ``main.py --intelfile`` re-runs it over
+    the merged TI table, and the in-memory fallback of
+    ``build_lookup_dfs`` runs it over the generator rows.
+    """
+    dc = base["dc_asn"].select("asn_number").distinct().withColumn("_dc", F.lit(True))
+    geo = (
+        base["geo_merged"]
+        .select("net_start", "net_end", *_GEO_ATTRS)
+        .join(dc, "asn_number", "left")
+        .select(
+            "net_start", "net_end", *_GEO_ATTRS,
+            F.coalesce(F.col("_dc"), F.lit(False)).alias("is_dc"),
+        )
+    )
+
+    dns = base["dns_ptr"].select("ip", *_DNS_COLS)
+    wd = base["whois_domain"].select(
+        F.col("domain").alias("_wd_domain"),
+        *[F.col(c).alias(f"wd_{c}") for c in _WD_SRC],
+    )
+    has_domain = F.col("tld").isNotNull() & (F.col("tld") != "none")
+    dns = dns.join(
+        wd, F.when(has_domain, F.col("tld")) == F.col("_wd_domain"), "left"
+    ).drop("_wd_domain")
+    wi = base["whois_ip"].select(
+        "ip", *[F.col(c).alias(f"wi_{c}") for c in _WI_SRC]
+    )
+    idb = base["shodan_idb"].select(
+        "ip",
+        F.array_join("cpes", "|").alias("idb_cpes"),
+        F.array_join("hostnames", "|").alias("idb_hostnames"),
+        F.array_join(F.transform("ports", lambda x: x.cast("string")), "|").alias(
+            "idb_ports"
+        ),
+        F.array_join("tags", "|").alias("idb_tags"),
+        F.array_join("vulns", "|").alias("idb_vulns"),
+    )
+    sources = [ti_by_ip(base["ti"]), dns, wi, idb]
+    keys = sources[0].select("ip")
+    for s in sources[1:]:
+        keys = keys.union(s.select("ip"))
+    combined = keys.distinct()
+    for s in sources:
+        combined = combined.join(s, "ip", "left")
+    combined = combined.select(
+        "ip", *_TI_COLS, *_DNS_COLS, *_WD_COLS, *_WI_COLS, *_IDB_COLS
+    )
+    return {"geo_merged": geo, "ip_combined": combined}
 
 
 def enrich_extract(
@@ -109,13 +190,12 @@ def enrich_extract(
 
 def enrich(
     df: DataFrame,
-    lookups: dict[str, DataFrame],
+    lookups: Mapping[str, DataFrame],
     text_col: str = "text",
     use_ti: bool = True,
     use_dns: bool = True,
     use_whois: bool = True,
     use_idb: bool = True,
-    dc_asn_numbers: list[int] | None = None,
     ip_col_name: str | None = None,
     json_col_name: str | None = None,
     barrier: bool = True,
@@ -155,79 +235,64 @@ def enrich(
         use_dns=use_dns,
         use_whois=use_whois,
         use_idb=use_idb,
-        dc_asn_numbers=dc_asn_numbers,
     )
 
 
 def enrich_joins(
     df: DataFrame,
-    lookups: dict[str, DataFrame],
+    lookups: Mapping[str, DataFrame],
     use_ti: bool = True,
     use_dns: bool = True,
     use_whois: bool = True,
     use_idb: bool = True,
-    dc_asn_numbers: list[int] | None = None,
 ) -> DataFrame:
-    """Phase 2 of enrich: broadcast join pyramid + lb_* output columns.
+    """Phase 2 of enrich: two broadcast probes + lb_* output columns.
 
     Expects the enrich_extract columns (``_ip``/``_cls``/``_join_ip``/
-    ``_join_v4``) as real attributes on ``df``.
+    ``_join_v4``) as real attributes on ``df``, and the derived
+    ``geo_merged`` and ``ip_combined`` tables (:func:`derive_lookups`) in
+    ``lookups``.
     """
-    pub = F.col("_cls") == "pub"
+    out_cols = [*df.columns]
 
-    # --- geo (J1/J2): ONE prefix-bucketed broadcast range join ----------
-    # geo_asn + geo_city are outer-merged into a single disjoint interval
-    # table (segments carry asn attrs, city attrs, or both), so the fact
-    # table is range-joined — and its rows re-copied — once instead of
-    # twice. Row-for-row identical to two sequential left joins
-    # (merge_disjoint_interval_tables docstring). The merged table is a
-    # PRECOMPUTED lookup (`geo_merged`, built offline with the other
-    # dimension fixtures — build_lookup_dfs / tools/build_fixtures.py):
-    # a full GeoLite2-City table is ~3M intervals, so merging it through
-    # the driver per session would be minutes of serial time. The
-    # fallback below exists only for callers that hand-roll a lookups
-    # dict; it selects attrs BY NAME (column order must not matter) and
-    # caches per-dict (single-session assumption, like every lookup DF).
-    if "geo_merged" not in lookups:
-        a_rows = flatten_intervals(
-            [
-                tuple(r)
-                for r in lookups["geo_asn"]
-                .select("net_start", "net_end", "asn_org", "asn_number")
-                .collect()
-            ]
-        )
-        b_rows = flatten_intervals(
-            [
-                tuple(r)
-                for r in lookups["geo_city"]
-                .select("net_start", "net_end", "country", "city")
-                .collect()
-            ]
-        )
-        lookups["geo_merged"] = df.sparkSession.createDataFrame(
-            merge_disjoint_interval_tables(a_rows, b_rows, n_a=2, n_b=2),
-            "net_start bigint, net_end bigint, asn_org string, "
-            "asn_number bigint, country string, city string",
-        )
+    # --- geo + datacenter ASN: ONE prefix-bucketed broadcast range join --
+    # geo_asn + geo_city are outer-merged offline into a single disjoint
+    # interval table (segments carry asn attrs, city attrs, or both), so
+    # the fact table is range-joined — and its rows re-copied — once
+    # instead of twice; row-for-row identical to two sequential left
+    # joins (merge_disjoint_interval_tables docstring). ``is_dc`` rides
+    # along: a geo miss has no ASN, so it is not a datacenter.
     df = range_lookup_join(
         df,
         F.col("_join_v4"),
         lookups["geo_merged"],
-        ["asn_org", "asn_number", "country", "city"],
+        [*_GEO_ATTRS, "is_dc"],
         prefix="_g_",
     )
 
-    # --- datacenter ASN membership (J4): literal set, codegen'd ---------
-    if dc_asn_numbers is None:
-        if "_dc_asn_numbers" not in lookups:
-            lookups["_dc_asn_numbers"] = [r[0] for r in lookups["dc_asn"].collect()]
-        dc_asn_numbers = lookups["_dc_asn_numbers"]
-    df = df.withColumn(
-        "_is_dc", F.coalesce(F.col("_g_asn_number").isin(dc_asn_numbers), F.lit(False))
-    )
-
-    out_cols = [*df.columns]
+    # --- ONE broadcast join for every ip-keyed lookup --------------------
+    # TI, DNS + TLD, domain WHOIS, IP WHOIS and IDB all live in the
+    # offline ip_combined table; only the columns the flags need are read.
+    # Every string is precomputed there, so per fact row this is a probe
+    # plus coalesces.
+    need = []
+    if use_ti:
+        need += _TI_COLS
+    if use_dns:
+        need += _DNS_COLS
+    if use_whois and use_dns:
+        need += _WD_COLS
+    if use_whois:
+        need += _WI_COLS
+    if use_idb:
+        need += _IDB_COLS
+    if need:
+        combined = lookups["ip_combined"].select(
+            F.col("ip").alias("_ipk"), *[F.col(c).alias(f"_{c}") for c in need]
+        )
+        df = df.join(
+            F.broadcast(combined), df["_join_ip"] == combined["_ipk"], "left"
+        ).drop("_ipk")
 
     def _sentinel(col, noip="NoIP", pvt="PVT"):
         return (
@@ -238,7 +303,11 @@ def enrich_joins(
 
     # --- geo output columns ---------------------------------------------
     geo_out = [
-        _sentinel(F.col("_ip"), noip="NoIP", pvt=None).alias("lb_IP"),
+        # lb_IP on the PVT path carries the extracted private IP
+        # (helpers.go:349)
+        F.when(F.col("_cls") == "noip", F.lit("NoIP"))
+        .otherwise(F.col("_ip"))
+        .alias("lb_IP"),
         _sentinel(F.coalesce(F.col("_g_asn_org"), F.lit(""))).alias("lb_ASN"),
         _sentinel(
             F.coalesce(F.col("_g_asn_number").cast("string"), F.lit(""))
@@ -246,204 +315,66 @@ def enrich_joins(
         _sentinel(F.coalesce(F.col("_g_country"), F.lit(""))).alias("lb_Country"),
         _sentinel(F.coalesce(F.col("_g_city"), F.lit(""))).alias("lb_City"),
     ]
-    # lb_IP on the PVT path carries the extracted private IP (helpers.go:349)
-    geo_out[0] = (
-        F.when(F.col("_cls") == "noip", F.lit("NoIP"))
-        .otherwise(F.col("_ip"))
-        .alias("lb_IP")
-    )
 
-    # --- ONE broadcast join for every ip-keyed lookup --------------------
-    # TI (J3), DNS (J5), IP-WHOIS (J8) and IDB (J9) all key on _join_ip.
-    # The lookups are dimension-sized with unique ip keys, so pre-joining
-    # them full-outer on the lookup side (key union) and LEFT-joining the
-    # fact table ONCE is row-for-row identical to the sequential left
-    # joins. Wall-clock parity locally (whole-stage codegen already fused
-    # the consecutive probes into one row build), but: one broadcast to
-    # ship instead of four, a shallower analyzed plan, and one probe per
-    # row instead of four — which matters whenever codegen fusion breaks
-    # (stage too wide, method split) or on executors where four separate
-    # broadcast relations would each hold memory.
-    ip_lookups: list[DataFrame] = []
-    if use_ti:
-        ip_lookups.append(ti_by_ip(lookups["ti"]).withColumnRenamed("ip", "_ipk"))
-    if use_dns:
-        dp_src = lookups["dns_ptr"]
-        if "domains_joined" in dp_src.columns and "tld" in dp_src.columns:
-            # fixture-precomputed columns (tools/build_fixtures.py runs
-            # the SAME parse_psl_domain): no per-action ArrowEvalPython,
-            # the dns lookup side stays all-JVM
-            dp = dp_src.select(
-                F.col("ip").alias("_ipk"),
-                F.col("domains_joined").alias("_domains_str"),
-                F.col("tld").alias("_tld_lk"),
-            )
-        else:
-            dp = dp_src.select(
-                F.col("ip").alias("_ipk"),
-                # pipe-join precomputed lookup-side (dimension rows), not
-                # per fact row
-                F.array_join("domains", "|").alias("_domains_str"),
-                # TLD parse on the LOOKUP side (dimension-sized): the
-                # fact table never touches Python — the pandas UDF runs
-                # once per PTR record before the broadcast. (Fact-side
-                # `when` branches would be hoisted by Spark and run on
-                # EVERY row.)
-                tld_of(F.get(F.col("domains"), 0)).alias("_tld_lk"),
-            )
-        ip_lookups.append(dp)
-    if use_whois:
-        ip_lookups.append(
-            lookups["whois_ip"].select(
-                F.col("ip").alias("_ipk"),
-                *[
-                    F.col(c).alias(f"_wi_{c}")
-                    for c in ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"]
-                ],
-            )
-        )
-    if use_idb:
-        ip_lookups.append(
-            lookups["shodan_idb"].select(
-                F.col("ip").alias("_ipk"),
-                F.array_join("cpes", "|").alias("_idb_cpes"),
-                F.array_join("hostnames", "|").alias("_idb_hostnames"),
-                F.array_join(F.transform("ports", lambda x: x.cast("string")), "|").alias(
-                    "_idb_ports"
-                ),
-                F.array_join("tags", "|").alias("_idb_tags"),
-                F.array_join("vulns", "|").alias("_idb_vulns"),
-            )
-        )
-    if ip_lookups:
-        # key union + left joins rather than chained full_outer: full
-        # outer can't broadcast (it would plan lookup-side SortMergeJoins);
-        # left joins of dimension-sized frames stay BroadcastHashJoin all
-        # the way down, keeping the whole enrich plan shuffle-free.
-        #
-        # The combined table is MATERIALIZED once per (lookups dict,
-        # flags): without this every Spark ACTION (each per-group commit
-        # job, every bench rep) re-ran the lookup-side pre-join — two
-        # aggregation exchanges, a union-distinct, and the tld_of
-        # ArrowEvalPython (spawning Python workers) — measured as tens of
-        # seconds of mostly-idle stage time per pipeline run (guide §1.1:
-        # the time was going to broadcast builds, not the fact scan).
-        # Dimension-sized (~1k rows), so the one-time driver collect is
-        # the same pattern as the precomputed geo_merged fixture; the
-        # re-created 1-partition frame makes every later broadcast build
-        # a single trivial task.
-        cache_key = ("_combined_ip", use_ti, use_dns, use_whois, use_idb)
-        if cache_key not in lookups:
-            keys = ip_lookups[0].select("_ipk")
-            for lk in ip_lookups[1:]:
-                keys = keys.union(lk.select("_ipk"))
-            combined = keys.distinct()
-            for lk in ip_lookups:
-                combined = combined.join(F.broadcast(lk), "_ipk", "left")
-            # session-temp parquet round-trip, NOT createDataFrame(rows):
-            # a rows-list frame scans through a pickled Python RDD and
-            # would re-pay a Python worker on every later broadcast
-            # build; the parquet read-back is a trivial JVM scan.
-            # Dimension-only data, removed at interpreter exit.
-            import atexit
-            import shutil
-            import tempfile
-
-            d = tempfile.mkdtemp(prefix="lb_combined_lookup_")
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
-            combined.coalesce(1).write.mode("overwrite").parquet(d)
-            lookups[cache_key] = df.sparkSession.read.parquet(d)
-        combined = lookups[cache_key]
-        df = df.join(
-            F.broadcast(combined), df["_join_ip"] == combined["_ipk"], "left"
-        ).drop("_ipk")
-
-    # --- threat intel (J3+J4+A1) -----------------------------------------
+    # --- threat intel (+ datacenter merge) ---------------------------------
     ti_out = []
     if use_ti:
         # every array op happened lookup-side in ti_by_ip; per fact row
         # this is just a flag-picked string coalesce. Semantics preserved:
-        # dc + ti-hit → merged lists; dc + no-hit → the DC entry alone
-        # (old code's concat-with-empty path); no-dc + no-hit → none/0.
-        is_dc = F.col("_is_dc")
-        ti_out = [
-            _sentinel(
-                F.when(
-                    is_dc, F.coalesce(F.col("_ti_cats_dc_str"), F.lit(_DC_CATEGORY))
-                ).otherwise(F.coalesce(F.col("_ti_cats_str"), F.lit("none")))
-            ).alias("lb_ThreatCategories"),
-            _sentinel(
-                F.when(
-                    is_dc, F.coalesce(F.col("_ti_nfeeds_dc_str"), F.lit("1"))
-                ).otherwise(F.coalesce(F.col("_ti_nfeeds_str"), F.lit("0")))
-            ).alias("lb_ThreatFeedCount"),
-            _sentinel(
-                F.when(
-                    is_dc, F.coalesce(F.col("_ti_feeds_dc_str"), F.lit(_DC_FEED))
-                ).otherwise(F.coalesce(F.col("_ti_feeds_str"), F.lit("none")))
-            ).alias("lb_ThreatFeeds"),
-        ]
+        # dc + ti-hit → merged lists; dc + no-hit → the DC entry alone;
+        # no-dc + no-hit → none/0.
+        is_dc = F.coalesce(F.col("_g_is_dc"), F.lit(False))
+        for name, plain, miss, dc_miss in zip(
+            ["lb_ThreatCategories", "lb_ThreatFeedCount", "lb_ThreatFeeds"],
+            _TI_COLS[:3],
+            ["none", "0", "none"],
+            [_DC_CATEGORY, "1", _DC_FEED],
+        ):
+            ti_out.append(
+                _sentinel(
+                    F.when(
+                        is_dc, F.coalesce(F.col(f"_{plain}_dc"), F.lit(dc_miss))
+                    ).otherwise(F.coalesce(F.col(f"_{plain}"), F.lit(miss)))
+                ).alias(name)
+            )
 
-    # --- DNS + TLD (J5+J6) ------------------------------------------------
+    # --- DNS + TLD -----------------------------------------------------------
     dns_out = []
     if use_dns:
-        df = df.withColumn("_tld", F.when(pub, F.col("_tld_lk")))
         dns_out = [
             _sentinel(
-                F.coalesce(F.col("_domains_str"), F.lit("none"))
+                F.coalesce(F.col("_domains_joined"), F.lit("none"))
             ).alias("lb_Domains"),
             _sentinel(F.coalesce(F.col("_tld"), F.lit("none"))).alias("lb_TLD"),
         ]
 
-    # --- WHOIS domain (J7) -------------------------------------------------
+    # --- WHOIS domain ----------------------------------------------------------
     wd_out = []
     if use_whois and use_dns:
-        wd = lookups["whois_domain"].select(
-            F.col("domain").alias("_wd_domain"),
-            F.col("created").alias("_wd_created"),
-            F.col("updated").alias("_wd_updated"),
-            F.col("country").alias("_wd_country"),
-            F.col("org").alias("_wd_org"),
-        )
-        has_domain = F.col("_tld").isNotNull() & (F.col("_tld") != "none")
-        df = df.join(
-            F.broadcast(wd),
-            F.when(has_domain, F.col("_tld")) == wd["_wd_domain"],
-            "left",
-        )
         # valid domain + lookup miss → "err" (live lookup failed);
         # no domain at all → "NA" (lookup skipped, helpers.go:469-473)
-        for src, name in zip(
-            ["_wd_created", "_wd_updated", "_wd_country", "_wd_org"],
-            WHOIS_DOMAIN_FIELDS,
-        ):
+        has_domain = F.col("_tld").isNotNull() & (F.col("_tld") != "none")
+        for src, name in zip(_WD_COLS, WHOIS_DOMAIN_FIELDS):
             wd_out.append(
                 _sentinel(
                     F.when(~has_domain, F.lit("NA")).otherwise(
-                        F.coalesce(F.col(src), F.lit("err"))
+                        F.coalesce(F.col(f"_{src}"), F.lit("err"))
                     )
                 ).alias(name)
             )
 
-    # --- WHOIS IP (J8) -------------------------------------------------------
+    # --- WHOIS IP + Shodan InternetDB ----------------------------------------
     wi_out = []
     if use_whois:
-        for src, name in zip(
-            ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"],
-            WHOIS_IP_FIELDS,
-        ):
+        for src, name in zip(_WI_COLS, WHOIS_IP_FIELDS):
             wi_out.append(
-                _sentinel(F.coalesce(F.col(f"_wi_{src}"), F.lit("err"))).alias(name)
+                _sentinel(F.coalesce(F.col(f"_{src}"), F.lit("err"))).alias(name)
             )
-
-    # --- Shodan InternetDB (J9) ----------------------------------------------
     idb_out = []
     if use_idb:
-        for src, name in zip(
-            ["cpes", "hostnames", "ports", "tags", "vulns"], IDB_FIELDS
-        ):
+        for src, name in zip(_IDB_COLS, IDB_FIELDS):
             idb_out.append(
-                _sentinel(F.coalesce(F.col(f"_idb_{src}"), F.lit("err"))).alias(name)
+                _sentinel(F.coalesce(F.col(f"_{src}"), F.lit("err"))).alias(name)
             )
 
     keep = [c for c in out_cols if not c.startswith("_") and c != "domains"]
@@ -457,5 +388,3 @@ def enrich_joins(
         *wi_out,
         *idb_out,
     )
-
-

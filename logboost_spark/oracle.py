@@ -229,8 +229,10 @@ def enrich_text(text: str) -> dict[str, str]:
 
 
 def route_category(row: dict) -> str:
-    """Routing rule f(threat-class, ip-class, role/tool) — see plans/route.py."""
-    if row["lb_class"] == "pub" and row["lb_ThreatFeeds"] not in ("none",):
+    """Routing rule f(threat-class, ip-class, role/tool) — see plans/route.py.
+    A row without ``lb_ThreatFeeds`` (threat intel off) never routes to
+    ``threat``."""
+    if row["lb_class"] == "pub" and row.get("lb_ThreatFeeds", "none") != "none":
         return "threat"
     if row["lb_class"] == "pvt":
         return "internal"

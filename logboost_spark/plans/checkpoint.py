@@ -34,6 +34,19 @@ def _manifest_path(out_dir: str, group: int) -> str:
     return os.path.join(out_dir, MANIFEST_DIR, f"group-{group:04d}.json")
 
 
+def _write_manifest(path: str, entry: dict) -> None:
+    """Atomically commit ``entry`` at ``path``: write and fsync a ``.tmp``
+    sibling, then rename it into place. A crash leaves either no manifest
+    or a whole one, never torn JSON; a leftover ``.tmp`` is not a
+    manifest (readers take ``*.json`` only)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(entry, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 def committed_groups(out_dir: str, n_groups: int | None = None) -> set[int]:
     """Groups with a committed manifest. When ``n_groups`` is given,
     REFUSES manifests written under a different bucketing: group
@@ -255,8 +268,7 @@ def write_routed(
         }
         # manifest write is the commit point — crash before this line
         # leaves the group uncommitted and it is redone (overwrite) on resume
-        with open(_manifest_path(out_dir, g), "w") as f:
-            json.dump(entry, f)
+        _write_manifest(_manifest_path(out_dir, g), entry)
         return entry
 
     # Overlap independent group jobs (guide §2.6): commit groups touch

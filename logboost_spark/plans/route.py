@@ -19,25 +19,29 @@ from pyspark.sql import functions as F
 SINKS = ["threat", "internal", "noip", "tool_activity", "general"]
 
 
-def route_category() -> Column:
+def route_category(threat: bool = True) -> Column:
     """f(threat-class, ip-class, role/tool) → sink name.
 
-    Must stay in sync with oracle.route_category (tests enforce it).
+    ``threat=False`` drops the threat branch, for rows enriched without
+    threat intel (no ``lb_ThreatFeeds`` column). Must stay in sync with
+    oracle.route_category (tests enforce it).
     """
-    return (
-        F.when(
-            (F.col("lb_class") == "pub") & (F.col("lb_ThreatFeeds") != "none"),
-            F.lit("threat"),
-        )
-        .when(F.col("lb_class") == "pvt", F.lit("internal"))
+    rest = (
+        F.when(F.col("lb_class") == "pvt", F.lit("internal"))
         .when(F.col("lb_class") == "noip", F.lit("noip"))
         .when((F.col("role") == "tool") | (F.col("tool") != "none"), F.lit("tool_activity"))
         .otherwise(F.lit("general"))
     )
+    if not threat:
+        return rest
+    return F.when(
+        (F.col("lb_class") == "pub") & (F.col("lb_ThreatFeeds") != "none"),
+        F.lit("threat"),
+    ).otherwise(rest)
 
 
 def route_stage(df: DataFrame) -> DataFrame:
-    return df.withColumn("sink", route_category())
+    return df.withColumn("sink", route_category(threat="lb_ThreatFeeds" in df.columns))
 
 
 def salted_repartition(

@@ -69,6 +69,39 @@ _DEFAULTS = {
 }
 
 
+#: cap on the default driver heap, whatever the host's memory
+_MAX_DRIVER_MB = 48 * 1024
+
+
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """$SPARK_DRIVER_MEMORY, else 3/8 of physical memory (``MemTotal``),
+    capped at 48g. Local mode runs every executor inside the driver JVM,
+    whose resident set grows well past its heap (off-heap buffers, code
+    cache) next to the Python workers, so a heap near ``MemTotal`` gets
+    the JVM OOM-killed."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        total_kb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 1024
+    return f"{min(total_kb * 3 // 8 // 1024, _MAX_DRIVER_MB)}m"
+
+
 def get_spark(
     app_name: str = "logboost_spark",
     cores: int | None = None,
@@ -77,19 +110,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. ``shuffle_partitions``
-    defaults to 2× cores — on a real cluster you would size this to
-    total-cores × 2-3 and let AQE coalesce.
+    ``cores`` defaults to :func:`default_cores`, the driver heap to
+    :func:`default_driver_memory`. ``shuffle_partitions`` defaults to 2×
+    cores — on a real cluster you would size this to total-cores × 2-3
+    and let AQE coalesce.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)

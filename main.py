@@ -242,12 +242,9 @@ def main(argv: list[str] | None = None) -> int:
             "rows": n_rows, "distinct_ips": n_ips,
         }))
         return 0
-    # shallow copy of the base tables only: build_lookup_dfs returns the
-    # per-session shared dict (it doubles as the derived-table cache,
-    # tuple-keyed); the --intelfile path below replaces "ti", which must
-    # neither leak into other callers nor reuse a combined-lookup cache
-    # built from the pristine TI table
-    lookups = {k: v for k, v in build_lookup_dfs(spark).items() if isinstance(k, str) and not k.startswith("_")}
+    # build_lookup_dfs returns a read-only mapping shared by the session;
+    # the --intelfile path below replaces entries in this copy
+    lookups = dict(build_lookup_dfs(spark))
     intel_flags = [args.intelfile, args.intelname, args.inteltype]
     if any(intel_flags):
         if not all(intel_flags):
@@ -289,6 +286,14 @@ def main(argv: list[str] | None = None) -> int:
         ]
         print(json.dumps({"feeds": feeds}))
         return 0
+    if any(intel_flags):
+        # the committed ip_combined carries the fixture TI: re-derive it
+        # over the merged TI, materialized once for every group job
+        from logboost_spark.fixtures.lookups import base_lookup_dfs
+        from logboost_spark.operators.enrich import derive_lookups
+
+        derived = derive_lookups({**base_lookup_dfs(spark), "ti": lookups["ti"]})
+        lookups["ip_combined"] = derived["ip_combined"].localCheckpoint()
     if args.input_format == "logs":
         from logboost_spark.sources.readers import read_log_directory
 

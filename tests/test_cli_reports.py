@@ -194,3 +194,26 @@ def test_cli_buildti_and_updateti(spark, tmp_path, capsys):
     # flag hygiene
     assert M.main(["--buildti", "--output", out]) == 2
     assert M.main(["--buildti", "--feeddir", str(tmp_path / "empty"), "--output", out]) == 2
+
+
+def test_cli_no_ti(spark, tmp_path, capsys):
+    """--no-ti: enrich emits no lb_ThreatFeeds, so routing drops its threat
+    branch; every input row still lands in exactly one sink, and the
+    per-sink counts match the oracle's threat-less routing."""
+    from logboost_spark import oracle as O
+    from logboost_spark.fixtures.transcripts import fixture_path
+
+    src = fixture_path("sf0.001")
+    out = str(tmp_path / "sinks")
+    rc = M.main(["--input", src, "--output", out, "--groups", "2", "--no-ti"])
+    assert rc == 0
+    counts = _last_json(capsys)["sink_counts"]
+    pdf = spark.read.parquet(src).toPandas()
+    assert counts["threat"] == 0
+    assert sum(counts.values()) == len(pdf)
+    want = {}
+    for r in pdf.itertuples():
+        e = {k: v for k, v in O.enrich_text(r.text).items() if not k.startswith("lb_Threat")}
+        s = O.route_category({**e, "role": r.role, "tool": r.tool})
+        want[s] = want.get(s, 0) + 1
+    assert {k: v for k, v in counts.items() if v} == want

@@ -253,3 +253,21 @@ def test_concurrent_groups_no_cross_row_bleed(spark, lookups, tmp_path):
             .count()
         )
         assert bad == 0, f"trial {trial}: {bad} rows carry another row's lb_IP"
+
+
+def test_leftover_manifest_tmp_is_ignored(tmp_path):
+    """A crash mid-commit leaves at most a ``.tmp`` sibling of the manifest
+    (written, fsynced, then renamed into place); readers skip it."""
+    from logboost_spark.plans.checkpoint import _manifest_path, _write_manifest
+
+    out = str(tmp_path / "sinks")
+    os.makedirs(os.path.join(out, "_manifest"))
+    entry = {"group": 0, "n_groups": 2, "rows": 3, "rows_general": 2, "rows_noip": 1}
+    _write_manifest(_manifest_path(out, 0), entry)
+    assert os.listdir(os.path.join(out, "_manifest")) == ["group-0000.json"]
+    with open(_manifest_path(out, 1) + ".tmp", "w") as f:
+        f.write('{"group": 1, "n_groups": 2, "rows": 5, "rows_gen')  # torn
+    assert committed_groups(out, n_groups=2) == {0}
+    counts = sink_counts(None, out)
+    assert counts["general"] == 2 and counts["noip"] == 1
+    assert sum(counts.values()) == 3

@@ -17,12 +17,12 @@ def test_enrich_all_joins_broadcast(spark, lookups):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan  # fact side must never shuffle
-    # ONE merged geo range join + ONE combined ip-keyed join (ti/dns/
-    # whois-ip/idb pre-joined lookup-side ONCE per session, then
-    # materialized as a 1-partition local frame — the pre-join no longer
-    # appears in per-query plans) + whois-domain: exactly the 3 fact-side
-    # broadcast probes
-    assert plan.count("BroadcastHashJoin") == 3
+    # ONE merged geo range join (carrying is_dc) + ONE ip-keyed join
+    # against the committed ip_combined table (ti/dns/whois-domain/
+    # whois-ip/idb, pre-joined offline — no lookup-side join or
+    # aggregation in per-query plans): exactly 2 fact-side broadcast
+    # probes with every flag on
+    assert plan.count("BroadcastHashJoin") == 2
 
 
 def test_parquet_filter_pushdown(spark):

@@ -193,8 +193,8 @@ unsaturated pair is the honest analog of adding executors.
 ### Headline throughput (bench.py, 32 cores, 2M-row input)
 
 See BENCH_r*.json: end-to-end parse (11-format router + null-masked
-JSON flatten UDF) → enrich (1 merged-interval range join + combined ip-keyed broadcast + whois-domain, 28 lb_*
-columns; TLD/PSL Python runs on the lookup side only) → route (salted
+JSON flatten UDF) → enrich (1 merged-interval range join + 1 ip-keyed broadcast against
+the offline ip_combined table, 28 lb_* columns) → route (salted
 shuffle) → per-sink parquet with lineage manifests.
 """
     # BENCH/BASELINE.md is hand-curated (adds the per-core curve and the

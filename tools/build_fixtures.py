@@ -2,10 +2,15 @@
 
 * data/transcripts_sf{0.001,0.01,0.1}.parquet — seeded transcript tables
 * data/lookups/*.parquet — the enrichment dimension tables, in the
-  flattened form the DuckDB oracle SQL joins against.
+  flattened form the DuckDB oracle SQL joins against, plus the two tables
+  enrich probes (``geo_merged`` with ``is_dc``, and ``ip_combined``),
+  derived from them by ``operators.enrich.derive_lookups`` in a local
+  Spark session.
 
 Byte-stable: re-running produces identical files (pure function of the
 seed; no RNG state, no timestamps).
+
+    python tools/build_fixtures.py
 """
 import os
 import sys
@@ -54,43 +59,15 @@ write(
         "city": [r[3] for r in gc],
     },
 )
-# The merged disjoint ASN+City interval table (the ONE range-join side the
-# engine uses, enrich.py J1/J2) is itself an offline deterministic build:
-# at real GeoLite2 size (~3M intervals) this runs here once, never in the
-# per-session driver.
-from logboost_spark.operators.geo_join import (  # noqa: E402
-    flatten_intervals,
-    merge_disjoint_interval_tables,
-)
-
-gm = merge_disjoint_interval_tables(
-    flatten_intervals(ga), flatten_intervals(gc), n_a=2, n_b=2
-)
-write(
-    "geo_merged",
-    {
-        "net_start": [r[0] for r in gm],
-        "net_end": [r[1] for r in gm],
-        "asn_org": [r[2] for r in gm],
-        "asn_number": [r[3] for r in gm],
-        "country": [r[4] for r in gm],
-        "city": [r[5] for r in gm],
-    },
-)
 ti = L.ti_rows()
 write(
     "ti",
     {"ip": [r[0] for r in ti], "feed_name": [r[1] for r in ti], "category": [r[2] for r in ti]},
 )
-dp = L.dns_ptr_rows()
+dp = L.dns_ptr_table_rows()
 write(
     "dns_ptr",
-    {
-        "ip": [r[0] for r in dp],
-        "domains": [r[1] for r in dp],
-        "domains_joined": ["|".join(r[1]) for r in dp],
-        "tld": [L.parse_psl_domain(r[1][0]) for r in dp],
-    },
+    {k: [r[i] for r in dp] for i, k in enumerate(["ip", "domains", "domains_joined", "tld"])},
 )
 wd = L.whois_domain_rows()
 write(
@@ -128,4 +105,26 @@ write(
     },
 )
 write("dc_asn", {"asn_number": list(L.DC_ASN_NUMBERS)})
+
+# The derived tables enrich probes: the SAME DataFrame function that
+# main.py --intelfile and the in-memory fallback of build_lookup_dfs run,
+# here over the base tables just written (geo_merged's base comes from
+# the offline interval merge — at real GeoLite2 size, ~3M intervals, that
+# runs here once, never in a per-session driver).
+from logboost_spark.operators.enrich import derive_lookups  # noqa: E402
+from logboost_spark.session import get_spark  # noqa: E402
+
+spark = get_spark(app_name="build_fixtures")
+base = {
+    k: spark.read.parquet(os.path.join(LOOK, f"{k}.parquet"))
+    for k in L.DERIVATION_INPUTS
+    if k != "geo_merged"
+}
+base["geo_merged"] = spark.createDataFrame(L.geo_merged_rows(), L.GEO_MERGED_DDL)
+derived = derive_lookups(base)
+for name, key in [("geo_merged", "net_start"), ("ip_combined", "ip")]:
+    table = derived[name].orderBy(key).toArrow()
+    pq.write_table(table, os.path.join(LOOK, f"{name}.parquet"))
+    print("lookup", name, table.num_rows, "rows")
+spark.stop()
 print("DONE")
