@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..semantics import EXTRA_KEYS_COL
+from ..semantics import EXTRA_KEYS_COL, LAYOUT_COLS
 
 
 def first_record_keys(df: DataFrame, fields_col: str = "fields") -> list[str]:
@@ -69,11 +69,13 @@ def shallow_project(
         ),
     )
     # a parsed key may collide with a pipeline column ('ts', 'role',
-    # 'text', ... are common log keys); suffix the PARSED side so the
-    # projection never emits duplicate names (the reference has no
-    # collision space — its output holds only parsed headers)
+    # 'text', ... are common log keys) or with a column the sink layout
+    # sets later ('group', 'sink', 'SourceFile'); suffix the PARSED side
+    # so the projection never emits duplicate names and no later
+    # withColumn/partition value overwrites a parsed value (the reference
+    # has no collision space — its output holds only parsed headers)
     carried = [c for c in df.columns if c != fields_col]
-    taken = set(carried) | {EXTRA_KEYS_COL}
+    taken = set(carried) | {EXTRA_KEYS_COL, *LAYOUT_COLS}
     cols = []
     for k in known_keys:
         name = k if k not in taken else f"{k}_parsed"

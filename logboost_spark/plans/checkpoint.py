@@ -2,13 +2,17 @@
 
 The reference has no resume story — a killed run restarts from zero.
 Here the fact table is hash-bucketed on conv_id into ``n_groups`` commit
-groups; each group is processed by one Spark job that (1) overwrites that
-group's own output directory (idempotent — a re-run of a half-written
-group replaces it) and (2) only then writes a manifest JSON recording the
-group's lineage: bucket range, per-sink row counts, input rows, wall
-time. A restarted run skips every group whose manifest exists, so
-committed partitions are never reprocessed; a crashed group's partial
-parquet is overwritten on retry. This is batch Iceberg-commit semantics
+groups. The pending groups are written ``GROUPS_PER_JOB`` at a time, one
+Spark job per chunk and one job at a time. Each job (1) deletes its
+groups' output directories (idempotent — a re-run of a half-written
+group replaces it), (2) writes their rows under ``data/group=g/sink=s``,
+and (3) only then writes one manifest JSON per group recording its
+lineage: group, bucketing, rows written per sink, wall time. The manifest
+is the per-group commit point: a restarted run skips every group whose
+manifest exists, so committed groups are never reprocessed, and a kill
+loses at most the ``GROUPS_PER_JOB`` groups of the job in flight.
+Readers see committed groups only (:func:`read_sinks`,
+:func:`sink_counts`). This is batch Iceberg-commit semantics
 (write-then-swap) expressed on a plain file sink — on a real cluster the
 same structure maps 1:1 onto `writeTo(...).overwritePartitions()` with
 snapshot isolation.
@@ -20,14 +24,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .route import SINKS, salted_repartition
+from .route import SINKS, salt
 
 MANIFEST_DIR = "_manifest"
+#: commit groups written by one Spark job: each job costs its planning,
+#: broadcasts, task deserialization and file commit whatever its rows, so
+#: fewer jobs is less CPU; it is also how many groups a kill can lose
+GROUPS_PER_JOB = 2
 
 
 def _manifest_path(out_dir: str, group: int) -> str:
@@ -79,7 +89,7 @@ def committed_groups(out_dir: str, n_groups: int | None = None) -> set[int]:
 def _adaptive_partitions_per_group(routed: DataFrame, n_groups: int) -> int:
     """Scale-adaptive post-shuffle partition count for one commit group.
 
-    floor = defaultParallelism (each group job fills the cluster once);
+    floor = defaultParallelism (each group's tasks fill the cluster once);
     above that, grow with estimated input bytes per group so partitions
     stay near the session's advisory size instead of ballooning at
     larger scale factors. Derived from runtime stats + conf — no
@@ -102,70 +112,80 @@ def _adaptive_partitions_per_group(routed: DataFrame, n_groups: int) -> int:
     return max(floor, need)
 
 
+def _recount(spark, target: str) -> dict:
+    """Per-sink counts of one group read back from its committed parquet
+    (``sink`` is a partition column of the layout); zeros when the group
+    wrote no data files."""
+    per = {f"rows_{s}": 0 for s in SINKS}
+    try:
+        agg = spark.read.parquet(target).groupBy("sink").count().collect()
+    except Exception:
+        return {"rows": 0, **per}
+    for r in agg:
+        per[f"rows_{r['sink']}"] = int(r["count"])
+    return {"rows": sum(per.values()), **per}
+
+
 def write_routed(
     routed: DataFrame,
     out_dir: str,
+    post_shuffle: Callable[[DataFrame], DataFrame],
     n_groups: int = 8,
     resume: bool = False,
     partitions_per_group: int | None = None,
     salt_buckets: int = 64,
-    reuse_plan: bool = False,
     group_col_name: str | None = None,
-    post_shuffle=None,
-    routed_factory=None,
 ) -> list[dict]:
     """Write a routed DataFrame to per-sink parquet with group commits.
 
-    Each commit group is its own Spark job (that's what makes the commit
-    granular and the run resumable), so naively the upstream plan runs
-    n_groups times. ``reuse_plan`` persists the routed frame once and
-    lets every group job read from it — measured NET-NEGATIVE here
-    (map-column rows blow up the heap and GC costs more than the
-    recompute saves), so it defaults off.
+    The pending groups are taken ``GROUPS_PER_JOB`` at a time and each
+    chunk is written by ONE Spark job, so the upstream plan runs once per
+    chunk, not once per group. The job filters ``routed`` to the chunk's
+    groups, adds an int ``group`` column and places rows with
+    ``repartitionById``: partition ``slot * P + pmod(hash(conv_id,
+    salt), P)``, where ``slot`` is the group's index in the chunk and
+    ``P = partitions_per_group``. So every task holds one group (each
+    group gets at most ``P`` files per sink, as with one job per group)
+    and a hot conversation still spreads over ``P`` tasks. It then runs
+    ``post_shuffle``, counts rows per (group, sink) with one ``observe``,
+    sorts by (group, sink, conv_id, turn_idx) and appends
+    ``partitionBy("group", "sink")`` into ``data/`` after deleting the
+    chunk's ``data/group=g`` directories. Only then is each group's
+    manifest written. Jobs run one at a time, so no expression tree is
+    ever shared between concurrent jobs.
+
+    ``post_shuffle`` is the byte-diet hook (guide §2.3 / §8: decide
+    placement with small rows, move heavy formatting after the
+    exchange): ``routed`` carries only slim pre-format columns, the
+    salted exchange moves THOSE, and ``post_shuffle(df)`` (broadcast
+    joins / parse / sentinel formatting — must be deterministic, per-row,
+    must keep the ``group`` column and must produce the ``sink`` column)
+    runs on the shuffled partitions; the sort then runs directly above
+    the write so the dynamic-partition writer sees sorted input and keeps
+    the (conv_id, turn_idx) order inside every file.
 
     The production path is ``group_col_name``: when the SOURCE layout is
     bucket-partitioned by commit group (Iceberg `bucket(conv_id)` — or a
     parquet partition column locally), pass that column's name and each
-    group job's filter can become partition PRUNING at the scan, so the
-    n_groups jobs touch each input row exactly once overall. Pruning
-    reaches the scan when no barrier sits between scan and filter — with
-    enrich's default extraction localCheckpoint (a LogicalRDD the filter
-    cannot push below) the input is instead touched once via the
-    checkpoint cache; pass ``barrier=False`` to enrich (or use the
-    Iceberg layout, where the filter prunes at snapshot planning) for
-    true scan-level pruning. Either way each input row is read once.
-    The column must hold pmod(xxhash64(conv_id), n_groups) (conv_id
-    never straddles groups); the fallback computes exactly that
-    expression on the fly for unpartitioned sources — same values, just
-    no pruning. The stored column's range is VALIDATED against this
-    run's n_groups before any group job: a source partitioned with more
-    groups than the run (e.g. written with pmod(...,8) but n_groups=4)
-    would otherwise silently drop every row with group >= n_groups from
-    all sinks while manifests still commit.
+    job's filter can become partition PRUNING at the scan, so the jobs
+    touch each input row exactly once overall. Pruning reaches the scan
+    when no barrier sits between scan and filter — with enrich's default
+    extraction localCheckpoint (a LogicalRDD the filter cannot push
+    below) the input is instead touched once via the checkpoint cache;
+    pass ``barrier=False`` to enrich (or use the Iceberg layout, where
+    the filter prunes at snapshot planning) for true scan-level pruning.
+    Either way each input row is read once. The column must hold
+    pmod(xxhash64(conv_id), n_groups) (conv_id never straddles groups);
+    the fallback computes exactly that expression on the fly for
+    unpartitioned sources — same values, just no pruning. The stored
+    column's range is VALIDATED against this run's n_groups before any
+    group job: a source partitioned with more groups than the run (e.g.
+    written with pmod(...,8) but n_groups=4) would otherwise silently
+    drop every row with group >= n_groups from all sinks while manifests
+    still commit.
 
-    ``post_shuffle`` is the byte-diet hook (guide §2.3 / §8: decide
-    placement with small rows, move heavy formatting after the
-    exchange): when given, ``routed`` carries only slim pre-format
-    columns, the salted exchange moves THOSE, and ``post_shuffle(df)``
-    (broadcast joins / parse / sentinel formatting — must be
-    deterministic, per-row, and must produce the ``sink`` column) runs
-    on the shuffled partitions; the (sink, conv_id, turn_idx) sort then
-    runs directly above the write so the dynamic-partition writer sees
-    sorted input either way. Row-for-row identical output, ~40% fewer
-    shuffle bytes for the transcript pipeline.
-
-    ``routed_factory`` (no-arg → DataFrame equivalent to ``routed``):
-    REQUIRED for correct results when group jobs overlap and ``routed``
-    carries non-trivial expressions. Spark expression trees hold mutable
-    evaluation state, and two concurrently executing jobs built from the
-    SAME driver-side tree instances produce cross-row value bleed
-    (reproduced: ~1 corrupted row per 2k-row run with the extraction
-    expressions shared between 2 in-flight group jobs; 0 in 25 runs with
-    per-job trees). Each concurrent group job therefore derives its own
-    fresh tree from the factory; without a factory, overlapping is
-    disabled and groups run sequentially.
-
-    Returns the manifest entries written this run.
+    Returns the manifest entries written this run; ``wall_sec`` is the
+    wall time of the job that wrote the group.
     """
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     done = committed_groups(out_dir, n_groups=n_groups) if resume else set()
@@ -188,120 +208,99 @@ def write_routed(
                 "would be silently dropped from every sink. Re-run with the "
                 "source's original group count or re-bucket the source."
             )
-    if reuse_plan and len(done) < n_groups:
-        routed = routed.persist()
-    if post_shuffle is not None and partitions_per_group is None:
+    if partitions_per_group is None:
         partitions_per_group = _adaptive_partitions_per_group(routed, n_groups)
+    parts = partitions_per_group
+    gcol = (
+        F.col(group_col_name).cast("bigint")
+        if group_col_name
+        else F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
+    )
+    data_dir = os.path.join(out_dir, "data")
+    spark = routed.sparkSession
 
-    def _run_group(g: int) -> dict:
-        # fresh per-job lineage (see routed_factory note above) + a
-        # per-job group-col expression: no tree instance is shared with
-        # another in-flight job
-        # reuse_plan pins the persisted shared frame, so it stays on the
-        # sequential path (see the concurrency condition below)
-        src = (
-            routed_factory()
-            if routed_factory is not None and not reuse_plan
-            else routed
-        )
-        gcol = (
-            F.col(group_col_name).cast("bigint")
-            if group_col_name
-            else F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
-        )
-        sub = src.filter(gcol == g)
-        if group_col_name:
+    def _run_chunk(chunk: list[int]) -> list[dict]:
+        sub = routed.filter(gcol.isin(*chunk)).withColumn("group", gcol.cast("int"))
+        if group_col_name and group_col_name != "group":
             sub = sub.drop(group_col_name)
-        obs = Observation(f"group-{g}")
-        counters = [F.count(F.lit(1)).alias("rows")] + [
-            F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"rows_{s}")
-            for s in SINKS
+        group = F.col("group")
+        slot = F.lit(0)
+        for i, g in enumerate(chunk[1:], 1):
+            slot = F.when(group == g, i).otherwise(slot)
+        # pmod(hash(...), P) is exactly the partition id repartition(P,
+        # conv_id, salt) assigns, so each group's rows land as they did
+        # when every group had its own job
+        in_group = F.pmod(F.hash("conv_id", salt(salt_buckets)), F.lit(parts))
+        sub = sub.repartitionById(len(chunk) * parts, slot * parts + in_group)
+        sub = post_shuffle(sub)
+        obs = Observation(f"groups-{'-'.join(map(str, chunk))}")
+        fields = {"rows": F.lit(True)}
+        fields.update({f"rows_{s}": F.col("sink") == s for s in SINKS})
+        counters = [
+            F.count(F.when((group == g) & cond, 1)).alias(f"g{g}_{k}")
+            for g in chunk
+            for k, cond in fields.items()
         ]
-        if post_shuffle is None:
-            sub = sub.observe(obs, *counters)
-            sub = salted_repartition(
-                sub, partitions_per_group, salt_buckets,
-                sort_cols=("sink", "conv_id", "turn_idx"),
-            )
-        else:
-            sub = salted_repartition(
-                sub, partitions_per_group, salt_buckets, sort_cols=None
-            )
-            sub = post_shuffle(sub)
-            sub = sub.observe(obs, *counters)
-            sub = sub.sortWithinPartitions("sink", "conv_id", "turn_idx")
+        sub = sub.observe(obs, *counters).sortWithinPartitions(
+            "group", "sink", "conv_id", "turn_idx"
+        )
+        # a killed earlier attempt may have left these groups' files, or
+        # committed task output under _temporary that the next append's
+        # job commit would merge; only one job writes data/ at a time
+        for name in [f"group={g}" for g in chunk] + ["_temporary"]:
+            shutil.rmtree(os.path.join(data_dir, name), ignore_errors=True)
         t0 = time.time()
-        target = os.path.join(out_dir, "data", f"group={g}")
-        sub.write.partitionBy("sink").mode("overwrite").parquet(target)
+        sub.write.partitionBy("group", "sink").mode("append").parquet(data_dir)
+        wall = round(time.time() - t0, 3)
         try:
-            metrics = dict(obs.get.items())
+            got = obs.get
+            metrics = {g: {k: got[f"g{g}_{k}"] for k in fields} for g in chunk}
         except Exception:
-            # Observation.get asserts when an all-empty group's plan
+            # Observation.get asserts when an all-empty chunk's plan
             # collapses to a zero-task LocalTableScan under AQE (the
             # observe node never fires) — but a listener race/timeout
-            # raises the same way for a group whose data WAS written, and
+            # raises the same way for a chunk whose data WAS written, and
             # blindly zero-filling would corrupt sink_counts downstream.
-            # Recount from the parquet just committed: exact (sink is a
-            # partition column of the written layout) and only ever paid
-            # on this exceptional path. An empty group has no data files,
-            # so the read itself fails → genuine zeros.
-            try:
-                agg = (
-                    sub.sparkSession.read.parquet(target)
-                    .groupBy("sink")
-                    .count()
-                    .collect()
-                )
-                per = {f"rows_{s}": 0 for s in SINKS}
-                for r in agg:
-                    per[f"rows_{r['sink']}"] = int(r["count"])
-                metrics = {"rows": sum(per.values()), **per}
-            except Exception:
-                metrics = {"rows": 0, **{f"rows_{s}": 0 for s in SINKS}}
-        entry = {
-            "group": g,
-            "n_groups": n_groups,
-            "salt_buckets": salt_buckets,
-            "path": target,
-            "wall_sec": round(time.time() - t0, 3),
-            **metrics,
-        }
-        # manifest write is the commit point — crash before this line
-        # leaves the group uncommitted and it is redone (overwrite) on resume
-        _write_manifest(_manifest_path(out_dir, g), entry)
-        return entry
+            # Recount from the parquet just written: exact, and only ever
+            # paid on this exceptional path.
+            metrics = {
+                g: _recount(spark, os.path.join(data_dir, f"group={g}"))
+                for g in chunk
+            }
+        entries = []
+        for g in chunk:
+            entry = {
+                "group": g,
+                "n_groups": n_groups,
+                "salt_buckets": salt_buckets,
+                "path": os.path.join(data_dir, f"group={g}"),
+                "wall_sec": wall,
+                **metrics[g],
+            }
+            # manifest write is the commit point — a crash before this
+            # line leaves the group uncommitted and it is redone on resume
+            _write_manifest(_manifest_path(out_dir, g), entry)
+            entries.append(entry)
+        return entries
 
-    # Overlap independent group jobs (guide §2.6): commit groups touch
-    # disjoint inputs (partition pruning / disjoint hash buckets) and
-    # disjoint output dirs, so 2 in flight lets the next group's tasks
-    # back-fill executors idled by the current group's straggler tail
-    # (FIFO scheduling = exactly that back-fill). Commit semantics are
-    # unchanged — each group still writes its own manifest only after
-    # its own write completes; a crash leaves at most the in-flight
-    # groups uncommitted and resume redoes them.
     todo = [g for g in range(n_groups) if g not in done]
     manifests: list[dict] = []
-    if len(todo) > 1 and routed_factory is not None and not reuse_plan:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        spark = routed.sparkSession
-        target_fn = inheritable_thread_target(spark)(_run_group)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            manifests = list(pool.map(target_fn, todo))
-    else:
-        manifests = [_run_group(g) for g in todo]
-    if reuse_plan:
-        routed.unpersist()
+    for i in range(0, len(todo), GROUPS_PER_JOB):
+        manifests += _run_chunk(todo[i : i + GROUPS_PER_JOB])
     return manifests
 
 
 def read_sinks(spark, out_dir: str) -> DataFrame:
-    """Read everything committed so far (partition columns group, sink)."""
-    return spark.read.option("basePath", os.path.join(out_dir, "data")).parquet(
-        os.path.join(out_dir, "data", "group=*", "sink=*")
-    )
+    """Read the committed groups (partition columns group, sink). Data of
+    a group without a manifest — a kill between its write and its commit —
+    is not part of the snapshot."""
+    data_dir = os.path.join(out_dir, "data")
+    paths = [
+        p
+        for g in sorted(committed_groups(out_dir))
+        if os.path.isdir(p := os.path.join(data_dir, f"group={g}"))
+    ]
+    return spark.read.option("basePath", data_dir).parquet(*paths)
 
 
 def sink_counts(spark, out_dir: str) -> dict[str, int]:

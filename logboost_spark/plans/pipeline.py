@@ -49,7 +49,6 @@ def run_pipeline(
     partitions_per_group: int | None = None,
     do_parse: bool = True,
     raw_fallthrough: bool = True,
-    stage_barrier: bool = False,
     group_col_name: str | None = None,
     kv_separator: str = "=",
     kv_delimiter: str = ",",
@@ -58,21 +57,20 @@ def run_pipeline(
 ) -> list[dict]:
     """Full run; returns the lineage manifest entries written.
 
-    ``stage_barrier`` localCheckpoints the routed frame so group jobs
-    share one upstream computation — measured NET-NEGATIVE (3-4×) for
-    this pipeline: materializing wide map-typed rows costs more than
-    recomputing the codegen'd stages, same lesson as write_routed's
-    reuse_plan. Default off; the enrich-internal extraction barrier
-    (cheap, slim rows) stays on.
+    The plan is built once: the date filter and the slim enrich
+    extraction feed :func:`write_routed`'s salted exchange, and the
+    enrich joins, parse (and the ``-fullparse`` projection) and routing
+    run after it as ``post_shuffle``. ``write_routed`` runs one Spark job
+    per ``GROUPS_PER_JOB`` commit groups, one job at a time.
     """
     df = transcripts
     if start is not None and end is not None:
         df = date_filter(df, "ts", None, start, end)
-    # BYTE-DIET SHAPE (guide §2.3/§8, SURVEY §1.1): the per-group salted
+    # BYTE-DIET SHAPE (guide §2.3/§8, SURVEY §1.1): the salted
     # exchange moves only the raw columns + the slim extraction output
     # (_ip/_cls/_join keys ≈ 30 B/row); the broadcast join pyramid, the
     # fields map and every lb_* sentinel string are computed AFTER the
-    # shuffle, directly above each group's write — measured ~40% fewer
+    # shuffle, directly above the sink write — measured ~40% fewer
     # shuffle bytes and the exchange doubles as the codegen barrier the
     # old extraction localCheckpoint provided (fusing the extraction
     # regexes with the join stage measured 3-20× slower). Every
@@ -93,14 +91,6 @@ def run_pipeline(
     }
     enrich_flags.pop("barrier", None)  # the salted exchange IS the barrier here
 
-    def prepare() -> DataFrame:
-        # called once per commit-group job: overlapping jobs must NOT
-        # share driver-side expression tree instances (write_routed's
-        # routed_factory contract — shared trees bleed values cross-row
-        # under concurrent execution)
-        return enrich_extract(df, **extract_kw)
-
-    prepared = prepare()
     full_keys: list[str] | None = None
     if do_parse and full_parse:
         # -fullparse (main.go:56): one column per key seen ANYWHERE in
@@ -134,20 +124,12 @@ def run_pipeline(
                 out = shallow_project(out, full_keys)
         return route_stage(out)
 
-    factory = prepare
-    if stage_barrier:
-        # a shared checkpoint is the POINT of stage_barrier — group jobs
-        # must read the one materialization, so they run sequentially
-        # (no per-job fresh trees)
-        prepared = prepared.localCheckpoint(eager=False)
-        factory = None
     return write_routed(
-        prepared,
+        enrich_extract(df, **extract_kw),
         out_dir,
+        finish,
         n_groups=n_groups,
         resume=resume,
         partitions_per_group=partitions_per_group,
         group_col_name=group_col_name,
-        post_shuffle=finish,
-        routed_factory=factory,
     )

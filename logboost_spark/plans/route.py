@@ -44,6 +44,12 @@ def route_stage(df: DataFrame) -> DataFrame:
     return df.withColumn("sink", route_category(threat="lb_ThreatFeeds" in df.columns))
 
 
+def salt(salt_buckets: int) -> Column:
+    """Per-turn salt that spreads one conversation over ``salt_buckets``
+    shuffle keys: pmod(xxhash64(turn_idx), salt_buckets)."""
+    return F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
+
+
 def salted_repartition(
     df: DataFrame,
     num_partitions: int | None = None,
@@ -69,8 +75,7 @@ def salted_repartition(
     writer's sort a no-op and preserves the (conv_id, turn_idx) order
     inside every output file.
     """
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
-    parts = [F.col("conv_id"), salt]
+    parts = [F.col("conv_id"), salt(salt_buckets)]
     out = (
         df.repartition(num_partitions, *parts)
         if num_partitions

@@ -60,3 +60,8 @@ EXTRA_KEYS_COL = "EXTRA_KEYS"
 
 # Column appended by the combine sink (helpers/helpers.go:802).
 SOURCE_FILE_COL = "SourceFile"
+
+# Columns the sink layout sets after parsing: the commit-group and route
+# partition columns (plans/checkpoint.py, plans/route.py) and the combine
+# sink's SourceFile. A parsed key of the same name must not take them.
+LAYOUT_COLS = ("group", "sink", SOURCE_FILE_COL)

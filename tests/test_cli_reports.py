@@ -161,6 +161,41 @@ def test_cli_fullparse(spark, kvdir, tmp_path, capsys):
     assert "query_ms" not in shallow.columns
 
 
+def test_cli_fullparse_keeps_keys_named_like_layout_columns(spark, tmp_path, capsys):
+    """Parsed keys named group/sink/SourceFile come out as <key>_parsed:
+    the commit-group and route partition columns and the combine sink's
+    SourceFile would otherwise overwrite the parsed values."""
+    from logboost_spark.plans.checkpoint import read_sinks
+    from logboost_spark.plans.route import SINKS
+
+    d = tmp_path / "kvlogs"
+    d.mkdir()
+    (d / "app.log").write_text(
+        "source:web;group:admins;sink:kafka;SourceFile:upload.csv\n"
+        "source:db;group:ops;sink:s3;SourceFile:dump.sql\n"
+    )
+    out = str(tmp_path / "sinks")
+    rc = M.main([
+        "--input", str(d), "--input-format", "logs", "--rawtxt",
+        "--output", out, "--groups", "2", "--no-whois", "--no-idb",
+        "--kvseparator", ":", "--kvdelimiter", ";", "--fullparse", "--combine",
+    ])
+    assert rc == 0
+    want = {
+        "web": ("admins", "kafka", "upload.csv"),
+        "db": ("ops", "s3", "dump.sql"),
+    }
+    parsed = ["group_parsed", "sink_parsed", "SourceFile_parsed"]
+    sinks = read_sinks(spark, out)
+    combined = spark.read.parquet(out + "/combined")
+    for df in (sinks, combined):
+        rows = df.collect()
+        assert {r["source"]: tuple(r[c] for c in parsed) for r in rows} == want
+        assert {r["group"] for r in rows} <= {0, 1}
+        assert {r["sink"] for r in rows} <= set(SINKS)
+    assert all(r["SourceFile"].endswith(".parquet") for r in combined.collect())
+
+
 def test_cli_buildti_and_updateti(spark, tmp_path, capsys):
     """Reference -buildti/-updateti (main.go:503-515 → BuildThreatDB):
     feed files ingest with IngestFile line semantics (comment/blank skip,

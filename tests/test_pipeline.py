@@ -229,12 +229,14 @@ def test_group_pruning_reaches_scan_without_barrier(spark, lookups, tmp_path):
 
 
 def test_concurrent_groups_no_cross_row_bleed(spark, lookups, tmp_path):
-    """r07 regression guard: overlapping commit-group jobs must not share
-    driver-side expression trees — shared trees produced cross-row value
-    bleed (lb_IP from another row) at ~1 row/2k per run. The extracted
-    lb_IP must always be a substring of the row's own text (or NoIP).
-    Probabilistic detector (the race fired in ~1/3 of runs pre-fix), so
-    several runs are checked; any hit is a hard failure."""
+    """Regression guard for cross-row value bleed: when commit-group jobs
+    ran concurrently on shared driver-side expression trees, ~1 row/2k
+    per run carried lb_IP from another row. Group jobs now run one at a
+    time, so no tree is shared between concurrent jobs by construction;
+    this check stays as the end-to-end witness. The extracted lb_IP must
+    always be a substring of the row's own text (or NoIP). The old race
+    fired in ~1/3 of runs, so several runs are checked; any hit is a hard
+    failure."""
     from pyspark.sql import functions as F
 
     sdf = spark.createDataFrame(TR.gen_pandas(2000))

@@ -56,10 +56,10 @@ def main():
         print("wrote", name, flush=True)
 
     if not only or "pipeline_routed" in only:
-        # ONE commit group's pre-write plan, built exactly the way
-        # run_pipeline/write_routed build it (r07 byte-diet shape:
-        # scan(pruned) -> extract -> salted exchange of slim rows ->
-        # joins + parse + route -> sort)
+        # ONE commit group's pre-write plan in the r07 byte-diet shape
+        # (scan(pruned) -> extract -> salted exchange of slim rows ->
+        # joins + parse + route -> sort); write_routed writes two groups
+        # per job, placed with repartitionById instead of repartition
         from logboost_spark.operators.enrich import enrich_extract, enrich_joins
         from logboost_spark.parsers.formats import parse_stage
         from logboost_spark.plans.route import route_stage, salted_repartition
