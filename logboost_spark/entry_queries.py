@@ -91,14 +91,13 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keep the default extraction barrier: several gates FILTER on
-    # enrich output columns (t_geo_enrich/t_ti_agg on lb_class), and
-    # without the barrier that filter is pushed down through the
-    # projection chain, re-inlining the classification expression tree
-    # until task binaries hit hundreds of MB (measured 320 MiB and a
-    # wedged driver). The barrier pins the filter above a materialized
-    # _cls attribute. (barrier=False was A/B-faster only for
-    # no-pushdown consumers like t_route_counts.)
+    # enrich cuts the lineage after extraction, which these gates need:
+    # several FILTER on enrich output columns (t_geo_enrich/t_ti_agg on
+    # lb_class), and without the cut that filter is pushed down through
+    # the projection chain, re-inlining the classification expression
+    # tree until task binaries hit hundreds of MB (measured 320 MiB and
+    # a wedged driver). The cut pins the filter above a materialized
+    # _cls attribute.
     df = _transcripts(spark, sf_dir)
     return enrich(df, build_lookup_dfs(spark), use_whois=False, use_idb=False)
 

@@ -25,11 +25,6 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def affine_hash(h: Column, a: int, b: int, p: int = MERSENNE_P) -> Column:
-    """Universal-hash family member: (a·h + b) mod p."""
-    return F.pmod(F.lit(a) * F.pmod(h, F.lit(p)) + F.lit(b), F.lit(p))
-
-
 def minhash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for k minhash functions."""
     params = []

@@ -170,14 +170,6 @@ def is_private_ipv6_str(ip: Column) -> Column:
     )
 
 
-def is_private_ip(ip: Column) -> Column:
-    """Privacy predicate for a well-formed textual IPv4 or IPv6 value."""
-    v4 = ipv4_to_long(ip)
-    return F.when(ip.contains(":"), is_private_ipv6_str(ip)).otherwise(
-        is_private_ipv4_long(v4)
-    )
-
-
 def extract_all_ipv4(text: Column) -> Column:
     """All IPv4 literals in a string, in order (array<string>)."""
     return F.regexp_extract_all(text, F.lit("(" + IPV4_RE + ")"), 1)
@@ -298,26 +290,4 @@ def ip_extract_stage(
     return df.drop(
         "_ips4", "_pub4", "_ip6", "_valid", "_priv", "_direct",
         "_m1raw", "_m1", "_m1_v4l", "_m1_pub",
-    )
-
-
-def first_public_ip(text: Column) -> Column:
-    """struct(ip string, found boolean, private boolean).
-
-    Exact ``RegexFirstPublicIPFromString`` precedence
-    (helpers/helpers.go:850-893): first public IPv4 → first IPv4 of any
-    kind → first IPv6 (the reference does no v6 privacy check at
-    extraction time, helpers/helpers.go:871 TODO — but the *caller*
-    re-checks IsPrivateIP on the final value, helpers/helpers.go:348,
-    which we fold into the ``private`` flag here).
-    """
-    ips4 = extract_all_ipv4(text)
-    pub4 = F.filter(ips4, lambda x: ~is_private_ipv4_long(ipv4_to_long(x)))
-    ip = F.coalesce(F.get(pub4, 0), F.get(ips4, 0), extract_first_ipv6(text))
-    return F.struct(
-        ip.alias("ip"),
-        ip.isNotNull().alias("found"),
-        F.when(ip.isNull(), F.lit(False))
-        .otherwise(is_private_ip(ip))
-        .alias("private"),
     )

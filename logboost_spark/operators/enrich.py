@@ -19,6 +19,11 @@ plain scan of a committed table. Private / no-IP rows carry null join
 keys, so they fall through every join for free and get sentinel-filled
 at the end (the reference's early-exit, expressed declaratively).
 
+Two phases: :func:`enrich_extract` (IP extraction, the only part that
+reads ``text``) and :func:`enrich_joins` (the probes and ``lb_*``
+columns). :func:`enrich` runs both with a lineage cut between them; the
+batch pipeline runs them on either side of its salted exchange instead.
+
 Sentinel matrix (see semantics.py for the ragged-row normalization note):
   no IP found / unparseable  → lb_IP="NoIP", every enrich col "NoIP"
   private IP                 → lb_IP=ip,    every enrich col "PVT"
@@ -198,23 +203,24 @@ def enrich(
     use_idb: bool = True,
     ip_col_name: str | None = None,
     json_col_name: str | None = None,
-    barrier: bool = True,
 ) -> DataFrame:
     """Append the lb_* enrichment suffix. Flags mirror -useti/-usedns/
     -usewhois/-useidb (+ -ipcol/-jsoncol source precedence); column
     order is fixed (vars/vars.go:51-56).
 
-    ``barrier`` cuts the plan lineage between the extraction stage and
-    the join pyramid with a lazy localCheckpoint: the Catalyst analyzer
+    The plan lineage is always cut between the extraction stage and the
+    join pyramid with a lazy localCheckpoint: the Catalyst analyzer
     otherwise re-walks the big extraction expression trees once per
-    join, superlinearly — measured 20s → 120s → minutes of pure
-    driver time as joins accumulate. The barrier also materializes the
-    extraction once, so multi-action consumers (the per-group commit
-    jobs) don't recompute it. On a cluster with unreliable local disks
-    prefer `spark.checkpoint.dir` + .checkpoint(), or stage the
-    extraction to a table. (run_pipeline no longer uses the barrier: its
-    per-group salted exchange sits between extraction and the joins and
-    materializes the slim extraction output as shuffle files instead.)
+    join, superlinearly — measured 20s → 120s → minutes of pure driver
+    time as joins accumulate. The cut also materializes the extraction
+    once, so multi-action consumers don't recompute it, and pins
+    filters on enrich output above a materialized ``_cls`` attribute.
+    On a cluster with unreliable local disks prefer
+    `spark.checkpoint.dir` + .checkpoint(), or stage the extraction to a
+    table. The batch pipeline does not call this function: it runs
+    :func:`enrich_extract` and :func:`enrich_joins` on either side of
+    its salted exchange, which materializes the slim extraction output
+    as shuffle files instead.
 
     CONTRACT: every stage here is deterministic over its input rows
     (broadcast lookups are fixed tables; no sampling, no wall-clock
@@ -226,10 +232,8 @@ def enrich(
     df = enrich_extract(
         df, text_col, ip_col_name=ip_col_name, json_col_name=json_col_name
     )
-    if barrier:
-        df = df.localCheckpoint(eager=False)
     return enrich_joins(
-        df,
+        df.localCheckpoint(eager=False),
         lookups,
         use_ti=use_ti,
         use_dns=use_dns,

@@ -110,16 +110,6 @@ def deterministic_planes(n_planes: int, dim: int, seed: int = 42) -> list[list[f
     return planes
 
 
-def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit LSH signature: bit i = (vec · plane_i) > 0."""
-    sig = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        sig = sig + F.when(plane_dot(vec, p) > 0, F.lit(2 ** i).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return sig
-
-
 def banded_signature_buckets(
     df: DataFrame,
     vec_col: str,

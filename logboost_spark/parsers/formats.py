@@ -31,6 +31,7 @@ each reference parser:
 from __future__ import annotations
 
 import json
+import math
 import re
 
 import pandas as pd
@@ -269,16 +270,29 @@ def _go_str(v) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, float):
-        if v == int(v) and abs(v) < 1e15:
-            mant, exp = f"{v:E}".split("E")
-            mant = mant.rstrip("0").rstrip(".")
-            return f"{mant}E{int(exp):+03d}"
         mant, exp = f"{v:E}".split("E")
         mant = mant.rstrip("0").rstrip(".")
         return f"{mant}E{int(exp):+03d}"
     if isinstance(v, list):
         return "[" + " ".join(_go_str(x) if not isinstance(x, str) else x for x in v) + "]"
     return str(v)
+
+
+def _reject_constant(token: str):
+    raise ValueError(f"non-finite JSON number {token}")
+
+
+def _finite_float(token: str) -> float:
+    v = float(token)
+    if math.isinf(v):
+        raise ValueError(f"JSON number out of float64 range: {token}")
+    return v
+
+
+def _loads_finite(s: str):
+    """``json.loads`` that rejects NaN, ±Infinity and numbers overflowing
+    float64, as Go's encoding/json does: such a line is not JSON."""
+    return json.loads(s, parse_constant=_reject_constant, parse_float=_finite_float)
 
 
 def _flatten_json(obj: dict, prefix: str = "") -> dict[str, str]:
@@ -301,7 +315,7 @@ def _flatten_one(s) -> dict | None:
     if not isinstance(s, str) or not s.lstrip()[:1] == "{":
         return None
     try:
-        obj = json.loads(s)
+        obj = _loads_finite(s)
     except (ValueError, RecursionError):
         return None
     if not isinstance(obj, dict):

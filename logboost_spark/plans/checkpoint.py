@@ -31,7 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .route import SINKS, salt
+from .route import SALT_BUCKETS, SINKS, salt
 
 MANIFEST_DIR = "_manifest"
 #: commit groups written by one Spark job: each job costs its planning,
@@ -133,7 +133,6 @@ def write_routed(
     n_groups: int = 8,
     resume: bool = False,
     partitions_per_group: int | None = None,
-    salt_buckets: int = 64,
     group_col_name: str | None = None,
 ) -> list[dict]:
     """Write a routed DataFrame to per-sink parquet with group commits.
@@ -167,14 +166,11 @@ def write_routed(
     The production path is ``group_col_name``: when the SOURCE layout is
     bucket-partitioned by commit group (Iceberg `bucket(conv_id)` — or a
     parquet partition column locally), pass that column's name and each
-    job's filter can become partition PRUNING at the scan, so the jobs
-    touch each input row exactly once overall. Pruning reaches the scan
-    when no barrier sits between scan and filter — with enrich's default
-    extraction localCheckpoint (a LogicalRDD the filter cannot push
-    below) the input is instead touched once via the checkpoint cache;
-    pass ``barrier=False`` to enrich (or use the Iceberg layout, where
-    the filter prunes at snapshot planning) for true scan-level pruning.
-    Either way each input row is read once. The column must hold
+    job's filter becomes partition PRUNING at the scan, so the jobs
+    touch each input row exactly once overall. That holds because
+    ``routed`` is the scan plus row-wise extraction columns
+    (``enrich_extract``), with no lineage cut the filter cannot push
+    below. The column must hold
     pmod(xxhash64(conv_id), n_groups) (conv_id never straddles groups);
     the fallback computes exactly that expression on the fly for
     unpartitioned sources — same values, just no pruning. The stored
@@ -230,7 +226,7 @@ def write_routed(
         # pmod(hash(...), P) is exactly the partition id repartition(P,
         # conv_id, salt) assigns, so each group's rows land as they did
         # when every group had its own job
-        in_group = F.pmod(F.hash("conv_id", salt(salt_buckets)), F.lit(parts))
+        in_group = F.pmod(F.hash("conv_id", salt(SALT_BUCKETS)), F.lit(parts))
         sub = sub.repartitionById(len(chunk) * parts, slot * parts + in_group)
         sub = post_shuffle(sub)
         obs = Observation(f"groups-{'-'.join(map(str, chunk))}")
@@ -272,7 +268,7 @@ def write_routed(
             entry = {
                 "group": g,
                 "n_groups": n_groups,
-                "salt_buckets": salt_buckets,
+                "salt_buckets": SALT_BUCKETS,
                 "path": os.path.join(data_dir, f"group={g}"),
                 "wall_sec": wall,
                 **metrics[g],

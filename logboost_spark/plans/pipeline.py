@@ -42,8 +42,6 @@ def run_pipeline(
     transcripts: DataFrame,
     lookups: dict[str, DataFrame],
     out_dir: str,
-    start: str | None = None,
-    end: str | None = None,
     resume: bool = False,
     n_groups: int = 8,
     partitions_per_group: int | None = None,
@@ -57,15 +55,13 @@ def run_pipeline(
 ) -> list[dict]:
     """Full run; returns the lineage manifest entries written.
 
-    The plan is built once: the date filter and the slim enrich
-    extraction feed :func:`write_routed`'s salted exchange, and the
-    enrich joins, parse (and the ``-fullparse`` projection) and routing
-    run after it as ``post_shuffle``. ``write_routed`` runs one Spark job
-    per ``GROUPS_PER_JOB`` commit groups, one job at a time.
+    The plan is built once: the slim enrich extraction feeds
+    :func:`write_routed`'s salted exchange, and the enrich joins, parse
+    (and the ``-fullparse`` projection) and routing run after it as
+    ``post_shuffle``. ``write_routed`` runs one Spark job per
+    ``GROUPS_PER_JOB`` commit groups, one job at a time. Date filtering
+    is the caller's (:func:`date_filter` on ``transcripts``).
     """
-    df = transcripts
-    if start is not None and end is not None:
-        df = date_filter(df, "ts", None, start, end)
     # BYTE-DIET SHAPE (guide §2.3/§8, SURVEY §1.1): the salted
     # exchange moves only the raw columns + the slim extraction output
     # (_ip/_cls/_join keys ≈ 30 B/row); the broadcast join pyramid, the
@@ -86,10 +82,9 @@ def run_pipeline(
         )
     extract_kw = {
         k: enrich_flags.pop(k)
-        for k in ("text_col", "ip_col_name", "json_col_name")
+        for k in ("ip_col_name", "json_col_name")
         if k in enrich_flags
     }
-    enrich_flags.pop("barrier", None)  # the salted exchange IS the barrier here
 
     full_keys: list[str] | None = None
     if do_parse and full_parse:
@@ -101,7 +96,9 @@ def run_pipeline(
         # first full-file scan, parsers/extra_keys.deep_keys).
         from ..parsers.extra_keys import deep_keys
 
-        keyed = parse_stage(df, kv_separator=kv_separator, kv_delimiter=kv_delimiter)
+        keyed = parse_stage(
+            transcripts, kv_separator=kv_separator, kv_delimiter=kv_delimiter
+        )
         if not raw_fallthrough:
             keyed = keyed.filter(F.col("format") != "raw")
         full_keys = deep_keys(keyed)
@@ -125,7 +122,7 @@ def run_pipeline(
         return route_stage(out)
 
     return write_routed(
-        enrich_extract(df, **extract_kw),
+        enrich_extract(transcripts, **extract_kw),
         out_dir,
         finish,
         n_groups=n_groups,

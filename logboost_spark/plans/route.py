@@ -18,6 +18,10 @@ from pyspark.sql import functions as F
 
 SINKS = ["threat", "internal", "noip", "tool_activity", "general"]
 
+#: salt keys one conversation spreads over in the route exchange: the
+#: commit writer's placement and salted_repartition's default
+SALT_BUCKETS = 64
+
 
 def route_category(threat: bool = True) -> Column:
     """f(threat-class, ip-class, role/tool) → sink name.
@@ -53,7 +57,7 @@ def salt(salt_buckets: int) -> Column:
 def salted_repartition(
     df: DataFrame,
     num_partitions: int | None = None,
-    salt_buckets: int = 64,
+    salt_buckets: int = SALT_BUCKETS,
     sort_cols: tuple[str, ...] | None = ("conv_id", "turn_idx"),
 ) -> DataFrame:
     """Shuffle by (conv_id, salt(turn_idx)) then restore in-partition order.

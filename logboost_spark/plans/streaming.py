@@ -1,30 +1,28 @@
 """Structured Streaming face of the pipeline — a capability the batch
 reference lacks, free on Spark because every enrichment stage is
 stateless (map expressions + broadcast hash joins against static lookup
-DataFrames) and therefore valid in a streaming plan unchanged.
+DataFrames).
 
 Shapes:
 
 * :func:`stream_pipeline` — readStream over a transcript table/directory
-  → the SAME parse/enrich/route stages as ``plans.pipeline`` →
-  partitioned parquet sinks with a write-ahead checkpoint. With
-  ``trigger(availableNow=True)`` it drains everything present and stops:
-  deterministic, so its output is byte-comparable to the batch pipeline
-  (the gate asserts exactly that via the batch DuckDB oracle). In
-  production the same call with a processing-time trigger tails an
-  arriving directory/Iceberg table incrementally — the checkpoint makes
-  restarts exactly-once per input file.
+  → the SAME parse/enrich/route stages as ``plans.pipeline``, run per
+  micro-batch inside ``foreachBatch`` → partitioned parquet sinks with a
+  write-ahead checkpoint. ``trigger(availableNow=True)`` drains everything
+  present and stops: deterministic, so its output is byte-comparable to
+  the batch pipeline (the gate asserts exactly that via the batch DuckDB
+  oracle); a rerun over the same checkpoint picks up only new files.
 * :func:`stream_windowed_counts` — event-time tumbling-window sink
   counts with a watermark: the late-data-tolerant monitoring aggregate
   (reference has no analog; its summaries are all post-hoc batch).
 
-Scale notes: the streaming plan inherits the batch plan's properties —
+Scale notes: each micro-batch inherits the batch plan's properties —
 zero fact-side shuffles before the routed write, broadcast-only lookups
-(rebroadcast per micro-batch is tens of MBs), and the windowed agg
+(rebroadcast per micro-batch is tens of MBs) — and the windowed agg
 shuffles only (window, sink) keys with state bounded by the watermark
-horizon. ``enrich(barrier=False)`` is REQUIRED: the batch path's
-localCheckpoint lineage cut is illegal in a streaming plan (and
-unnecessary — each micro-batch plan is analyzed once).
+horizon. Enrichment runs on the micro-batch, not in the streaming plan,
+because enrich's localCheckpoint lineage cut is illegal in a streaming
+plan.
 """
 
 from __future__ import annotations
@@ -45,12 +43,7 @@ TRANSCRIPT_DDL = (
 )
 
 
-def _source_stream(
-    spark: SparkSession,
-    input_path: str,
-    schema: str = TRANSCRIPT_DDL,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def _source_stream(spark: SparkSession, input_path: str) -> DataFrame:
     """The raw transcript readStream (plan contains ONLY the source)."""
     if os.path.isfile(input_path):
         # FileStreamSource watches a DIRECTORY; for a single-file input
@@ -83,37 +76,7 @@ def _source_stream(
                 f"{ap!r} — remove the stale entry (shared tempdir collision)"
             )
         input_path = d
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_path)
-
-
-def stream_enriched(
-    spark: SparkSession,
-    input_path: str,
-    lookups: dict[str, DataFrame],
-    schema: str = TRANSCRIPT_DDL,
-    do_parse: bool = True,
-    max_files_per_trigger: int | None = None,
-    kv_separator: str = "=",
-    kv_delimiter: str = ",",
-    **enrich_flags,
-) -> DataFrame:
-    """readStream → parse/enrich/route IN the streaming plan; returns the
-    streaming DataFrame (caller picks sink + trigger — required when the
-    downstream is a streaming-native stateful op like the watermarked
-    window agg). Cost note: without the batch path's analysis barrier
-    (illegal in a streaming plan) Catalyst re-walks the extraction trees
-    per join at plan time — prefer :func:`stream_pipeline`'s
-    foreachBatch form whenever the sink is a plain write."""
-    src = _source_stream(spark, input_path, schema, max_files_per_trigger)
-    enrich_flags.setdefault("use_whois", False)
-    enrich_flags.setdefault("use_idb", False)
-    df = enrich(src, lookups, barrier=False, **enrich_flags)
-    if do_parse:
-        df = parse_stage(df, kv_separator=kv_separator, kv_delimiter=kv_delimiter)
-    return route_stage(df)
+    return spark.readStream.schema(TRANSCRIPT_DDL).parquet(input_path)
 
 
 def stream_pipeline(
@@ -121,18 +84,14 @@ def stream_pipeline(
     input_path: str,
     lookups: dict[str, DataFrame],
     out_dir: str,
-    available_now: bool = True,
-    processing_interval: str = "30 seconds",
-    schema: str = TRANSCRIPT_DDL,
     do_parse: bool = True,
-    max_files_per_trigger: int | None = None,
     pre_enrich=None,
     kv_separator: str = "=",
     kv_delimiter: str = ",",
     **enrich_flags,
 ):
-    """Drain (availableNow) or tail (processing-time trigger) the input
-    into per-sink parquet with file-level checkpointing.
+    """Drain the input (``trigger(availableNow=True)``) into per-sink
+    parquet with file-level checkpointing; returns when the drain ends.
 
     The enrichment runs inside ``foreachBatch``, NOT in the streaming
     plan: each micro-batch arrives as a BATCH DataFrame where enrich's
@@ -158,10 +117,7 @@ def stream_pipeline(
     each micro-batch before enrichment — the hook the CLI uses to apply
     the --startdate/--enddate filter on the stream path.
     """
-    # stream_enriched's single-file shim, minus the heavy plan
-    routed_src = _source_stream(
-        spark, input_path, schema, max_files_per_trigger
-    )
+    src = _source_stream(spark, input_path)
     enrich_flags.setdefault("use_whois", False)
     enrich_flags.setdefault("use_idb", False)
     data_dir = os.path.join(out_dir, "data")
@@ -184,15 +140,10 @@ def stream_pipeline(
             os.path.join(data_dir, f"batch_id={batch_id}")
         )
 
-    writer = routed_src.writeStream.foreachBatch(_process).option(
+    writer = src.writeStream.foreachBatch(_process).option(
         "checkpointLocation", os.path.join(out_dir, "_checkpoint")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        # caller manages the returned query's lifecycle
-        return writer.trigger(processingTime=processing_interval).start()
+    writer.trigger(availableNow=True).start().awaitTermination()
 
 
 def stream_sessionize(

@@ -64,15 +64,6 @@ def read_iis_w3c(spark, path: str) -> DataFrame:
     )
 
 
-def expand_json_column(df: DataFrame, json_col: str, keys: list[str]) -> DataFrame:
-    """P1 embedded-JSON expansion: pull named keys out of a JSON blob
-    column into top-level columns (parse_csv.go:55-67,155-174)."""
-    out = df
-    for k in keys:
-        out = out.withColumn(k, F.get_json_object(F.col(json_col), f"$.{k}"))
-    return out
-
-
 # --- S1: directory discovery (reference findLogsToProcess) -------------------
 
 LOG_EXTS = (".csv", ".log", ".txt")

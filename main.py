@@ -160,7 +160,6 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from logboost_spark.session import get_spark
     from logboost_spark.fixtures.lookups import build_lookup_dfs
-    from logboost_spark.functions.goformat import go_layout_to_jvm  # noqa: F401
     from logboost_spark.plans.pipeline import run_pipeline, date_filter
     from logboost_spark.plans.checkpoint import read_sinks, sink_counts
 

@@ -252,3 +252,34 @@ def test_cli_no_ti(spark, tmp_path, capsys):
         s = O.route_category({**e, "role": r.role, "tool": r.tool})
         want[s] = want.get(s, 0) + 1
     assert {k: v for k, v in counts.items() if v} == want
+
+
+def test_cli_json_non_finite_number(spark, tmp_path, capsys):
+    """One turn whose JSON holds a number overflowing float64 must not
+    abort a parsing run: the line is not JSON, so it keeps the
+    {"line": text} fields and is enriched and routed as usual."""
+    from pyspark.sql import functions as F
+
+    from logboost_spark.plans.checkpoint import read_sinks
+
+    bad = '{"src": "8.8.8.8", "n": 1e400}'
+    rows = [
+        ("c1", 0, "user", "none", "hello from 10.0.0.1"),
+        ("c1", 1, "assistant", "none", bad),
+        ("c2", 0, "user", "none", '{"src": "8.8.4.4", "n": 2}'),
+    ]
+    src = str(tmp_path / "turns.parquet")
+    (
+        spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, role string, tool string, text string"
+        )
+        .withColumn("ts", F.lit("2023-06-01 00:00:00").cast("timestamp"))
+        .write.parquet(src)
+    )
+    out = str(tmp_path / "sinks")
+    assert M.main(["--input", src, "--output", out, "--groups", "2"]) == 0
+    assert sum(_last_json(capsys)["sink_counts"].values()) == 3
+    got = {r.text: r for r in read_sinks(spark, out).collect()}
+    assert got[bad].fields == {"line": bad}
+    assert got[bad].lb_IP == "8.8.8.8"
+    assert got['{"src": "8.8.4.4", "n": 2}'].fields == {"src": "8.8.4.4", "n": "2"}

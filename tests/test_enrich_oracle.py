@@ -2,6 +2,7 @@
 cell-for-cell on generated transcripts (SURVEY.md §5 plan item 3)."""
 
 import pandas as pd
+import pytest
 
 from logboost_spark import oracle as O
 from logboost_spark.fixtures import transcripts as TR
@@ -53,3 +54,39 @@ def test_route_matches_oracle(spark, lookups):
         for r in base.itertuples()
     ]
     assert list(eng["sink"]) == want
+
+
+#: adversarial lines through the same public surface: (id, text)
+PROBES = [
+    ("empty", ""),
+    ("null", None),
+    ("whitespace", "   \t  "),
+    ("long_line", "ip 8.8.8.8 " * 500),  # 5.5k chars, 500 repeated IPs
+    ("garbage_malformed_v6", "999.999.999.999 then fe80::zzz then 10.0.0.5"),
+    ("special_privates", "0.0.0.0 and 255.255.255.255 only"),
+    ("unknown_v6", "deadbeef:cafe:babe:face:feed:f00d:dead:beef"),
+    ("unicode", "«🦀» unicode 8.8.4.4 emoji"),
+]
+
+
+@pytest.fixture(scope="module")
+def probe_rows(spark, lookups):
+    rows = [
+        (f"p{i}", i, "user", text, "none") for i, (_, text) in enumerate(PROBES)
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string"
+    )
+    return {r.turn_idx: r for r in enrich(df, lookups).collect()}
+
+
+@pytest.mark.parametrize("i", range(len(PROBES)), ids=[p[0] for p in PROBES])
+def test_enrich_probe_matches_oracle(probe_rows, i):
+    text = PROBES[i][1]
+    got = probe_rows[i]
+    if text is None:
+        want = ("noip", "NoIP")
+    else:
+        o = O.enrich_text(text)
+        want = (o["lb_class"], o["lb_IP"])
+    assert (got.lb_class, got.lb_IP) == want

@@ -1,10 +1,10 @@
-"""IP predicate + extraction vs the reference's own test vectors
-(helpers/network_test.go:21-35) and the precedence spec
+"""The production IP extractor (``ip_extract_stage``) vs the reference's
+own test vectors (helpers/network_test.go:21-35) and the precedence spec
 (helpers/helpers.go:850-893)."""
 
 from pyspark.sql import functions as F
 
-from logboost_spark.functions.ip import first_public_ip, is_private_ip, ipv4_to_long
+from logboost_spark.functions.ip import ip_extract_stage, ipv4_to_long
 
 PRIVATE = [
     "127.0.0.1", "192.168.3.5", "172.16.2.3", "255.255.255.255",
@@ -21,11 +21,17 @@ PUBLIC = [
 ]
 
 
+def _extract(spark, texts):
+    """text → (_ip, _cls) through the pipeline's extraction stage."""
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    return {r.text: (r._ip, r._cls) for r in ip_extract_stage(df).collect()}
+
+
 def test_is_private_reference_vectors(spark):
-    rows = [(s, True) for s in PRIVATE] + [(s, False) for s in PUBLIC]
-    df = spark.createDataFrame(rows, "ip string, want boolean")
-    bad = df.filter(is_private_ip(F.col("ip")) != F.col("want")).collect()
-    assert bad == []
+    """Each vector alone on a line is extracted whole and classified."""
+    got = _extract(spark, PRIVATE + PUBLIC)
+    want = {s: (s, "pvt") for s in PRIVATE} | {s: (s, "pub") for s in PUBLIC}
+    assert got == want
 
 
 def test_ipv4_to_long(spark):
@@ -40,18 +46,17 @@ def test_ipv4_to_long(spark):
 
 
 def test_first_public_precedence(spark):
-    cases = [
-        ("pre 192.168.1.5 then 8.8.8.8", "8.8.8.8"),  # first public wins
-        ("only 10.0.0.1 then 172.16.2.3", "10.0.0.1"),  # else first v4
-        ("none here", None),
-        ("v6 2002:ffff:ffff:ffff:ffff:ffff:ffff:ffcf only", "2002:ffff:ffff:ffff:ffff:ffff:ffff:ffcf"),
-        ("compressed fe80::1 stays whole", "fe80::1"),
-        ("v4 beats v6 10.1.1.1 vs 2002::1", "10.1.1.1"),
-    ]
-    df = spark.createDataFrame(cases, "text string, want string")
-    got = df.select("want", first_public_ip(F.col("text"))["ip"].alias("ip")).collect()
-    for r in got:
-        assert r.ip == r.want, (r.want, r.ip)
+    cases = {
+        "pre 192.168.1.5 then 8.8.8.8": ("8.8.8.8", "pub"),  # first public wins
+        "only 10.0.0.1 then 172.16.2.3": ("10.0.0.1", "pvt"),  # else first v4
+        "none here": (None, "noip"),
+        "v6 2002:ffff:ffff:ffff:ffff:ffff:ffff:ffcf only": (
+            "2002:ffff:ffff:ffff:ffff:ffff:ffff:ffcf", "pub"
+        ),
+        "compressed fe80::1 stays whole": ("fe80::1", "pvt"),
+        "v4 beats v6 10.1.1.1 vs 2002::1": ("10.1.1.1", "pvt"),
+    }
+    assert _extract(spark, list(cases)) == cases
 
 
 def test_v4_mapped_ipv6_privacy(spark):

@@ -117,6 +117,25 @@ def test_json_flatten_input_masked(spark):
     assert got["raw"]["line"]  # raw rows keep the line fallback
 
 
+def test_json_non_finite_number_is_not_json(spark):
+    """NaN, ±Infinity and numbers overflowing float64 are not JSON (Go's
+    encoding/json rejects them): such a line keeps the {"line": text}
+    fallback of any unparseable JSON line instead of failing the task."""
+    bad = [
+        '{"src": "8.8.8.8", "n": 1e400}',
+        '{"n": -1e400}',
+        '{"n": NaN}',
+        '{"n": Infinity}',
+        '{"n": -Infinity}',
+    ]
+    ok = '{"src": "8.8.8.8", "n": 1.5e3}'
+    df = parse_stage(spark.createDataFrame([(t,) for t in bad + [ok]], "text string"))
+    got = {r.text: (r.format, r.fields) for r in df.collect()}
+    for t in bad:
+        assert got[t] == ("json", {"line": t}), t
+    assert got[ok] == ("json", {"src": "8.8.8.8", "n": "1.5E+03"})
+
+
 def test_deep_keys_union_and_full_project(spark):
     """-fullparse key union across records with disjoint key sets
     (helpers/helpers.go:55-57)."""

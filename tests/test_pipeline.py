@@ -4,6 +4,7 @@ resume-from-checkpoint semantics."""
 import glob
 import json
 import os
+import re
 import shutil
 
 from logboost_spark import oracle as O
@@ -195,17 +196,14 @@ def test_group_col_modulus_mismatch_refused(spark, lookups, tmp_path):
     assert read_sinks(spark, out).count() == 500
 
 
-def test_group_pruning_reaches_scan_without_barrier(spark, lookups, tmp_path):
-    """With enrich's extraction barrier disabled, the per-group commit
-    filter pushes all the way below enrich+parse+route to the parquet
-    scan as a PartitionFilter — real scan-level pruning, not just a
-    post-scan filter (with the default barrier the input is instead
-    touched once via the localCheckpoint cache; see write_routed doc)."""
+def test_group_pruning_reaches_scan_without_barrier(spark, tmp_path):
+    """write_routed filters the enrich_extract output of a group-partitioned
+    source to each job's groups; no lineage cut sits between that filter
+    and the scan, so it is pushed down to the parquet scan as a
+    PartitionFilter: real scan-level pruning, not a post-scan filter."""
     from pyspark.sql import functions as F
 
-    from logboost_spark.operators.enrich import enrich
-    from logboost_spark.parsers.formats import parse_stage
-    from logboost_spark.plans.route import route_stage
+    from logboost_spark.operators.enrich import enrich_extract
 
     pdf = TR.gen_pandas(600)
     sdf = spark.createDataFrame(pdf)
@@ -215,17 +213,12 @@ def test_group_pruning_reaches_scan_without_barrier(spark, lookups, tmp_path):
         .write.partitionBy("cgroup")
         .parquet(src)
     )
-    part = spark.read.parquet(src)
-    routed = route_stage(
-        parse_stage(enrich(part, lookups, barrier=False, use_whois=False, use_idb=False))
-    )
-    plan = (
-        routed.filter(F.col("cgroup").cast("bigint") == 1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [(cgroup" in plan, plan[:4000]
+    extracted = enrich_extract(spark.read.parquet(src))
+    chunk = extracted.filter(F.col("cgroup").cast("bigint").isin(1, 2))
+    plan = chunk._jdf.queryExecution().executedPlan().toString()
+    scan = next(line for line in plan.splitlines() if "FileScan parquet" in line)
+    filters = scan.split("PartitionFilters: [")[1].split("]")[0]
+    assert re.search(r"cgroup#\d+ IN \(1,2\)", filters), plan[:4000]
 
 
 def test_concurrent_groups_no_cross_row_bleed(spark, lookups, tmp_path):

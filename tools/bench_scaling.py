@@ -140,9 +140,8 @@ def main():
         p_big = pair(8, ROWS_BIG)
         print(json.dumps(p_big))
     reps = REPS
-    # machine-readable evidence; bench.py embeds this into its JSON line
-    # (labeled with its own measurement time) so the driver-visible bench
-    # carries the two-parallelism-level throughput + efficiency
+    # machine-readable evidence: the two-parallelism-level throughput +
+    # efficiency behind BENCH/BASELINE.md
     os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     with open(os.path.join(ROOT, "BENCH", "scaling.json"), "w") as f:
         json.dump(
@@ -190,7 +189,7 @@ real multi-executor cluster each executor brings its own memory
 bandwidth, so 8→32 *executors* does not inherit this cap — the
 unsaturated pair is the honest analog of adding executors.
 
-### Headline throughput (bench.py, 32 cores, 2M-row input)
+### Headline throughput (32 cores, 2M-row input)
 
 See BENCH_r*.json: end-to-end parse (11-format router + null-masked
 JSON flatten UDF) → enrich (1 merged-interval range join + 1 ip-keyed broadcast against

@@ -51,7 +51,7 @@ def main():
     from logboost_spark.session import get_spark
     import __spark_entry__ as E
 
-    spark = get_spark(cores=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(SF_DIR, f"{t}.parquet")
