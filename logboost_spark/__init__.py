@@ -14,7 +14,7 @@ Design principles (see SURVEY.md):
     (CIDR geo data becomes a prefix-bucketed broadcast range join).
   * No per-row Python in the hot path: native pyspark.sql.functions,
     Arrow-batched pandas UDFs only where column exprs cannot express
-    the semantics (public-suffix TLD parse).
+    the semantics (the JSON flatten).
   * Skew (heavy-tailed conversations / hot route categories) handled with
     salted repartitioning + AQE.
   * Resumable: per-partition lineage manifest; committed work is skipped.

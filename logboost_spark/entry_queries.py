@@ -2366,11 +2366,6 @@ QUERIES = {
     "events_sessionize": events_sessionize,
     "events_retention": events_retention,
     "events_funnel": events_funnel,
-    "ti_build_ingest": ti_build_ingest,
-    "ti_category_counts_q": ti_category_counts_q,
-    "ti_summary_q": ti_summary_q,
-    "ti_feed_listing_q": ti_feed_listing_q,
-    "doc_decontaminate": doc_decontaminate,
     "doc_mixture_sample": doc_mixture_sample,
     "emb_dedup_apply": emb_dedup_apply,
     "ann_topk_bruteforce": ann_topk_bruteforce,

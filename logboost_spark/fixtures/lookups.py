@@ -21,7 +21,9 @@ across ti, dns_ptr, whois_domain via the TLD, whois_ip and shodan_idb).
 
 All content is generated from a fixed seed; IP keys deliberately overlap
 the transcript generator's IP pool so a fixed fraction of turns hit each
-table.
+table. ``tools/build_fixtures.py`` writes every table as a committed
+parquet fixture under ``data/lookups/``; Spark reads lookups from those
+files only (``build_lookup_dfs``, ``base_lookup_dfs``).
 """
 
 from __future__ import annotations
@@ -246,9 +248,8 @@ from ..functions.psl import parse_psl_domain  # noqa: E402,F401
 # ---------------------------------------------------------------------------
 
 
-#: committed parquet fixtures (tools/build_fixtures.py) — same rows as
-#: the in-memory generators, byte-stable, and what the DuckDB oracle
-#: reads
+#: committed parquet fixtures (tools/build_fixtures.py): byte-stable, the
+#: one source of lookup DataFrames, and what the DuckDB oracle reads
 LOOKUP_PARQUET_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "data",
@@ -268,77 +269,43 @@ GEO_MERGED_DDL = (
     "asn_number bigint, country string, city string"
 )
 
-#: one read-only lookups mapping per (session, dir): nobody can write
-#: into it, so every build_lookup_dfs() caller of a session can share it
-_SESSION_LOOKUPS: dict[tuple, Mapping] = {}
+#: one read-only lookups mapping per session: nobody can write into it,
+#: so every build_lookup_dfs() caller of a session can share it
+_SESSION_LOOKUPS: dict[int, Mapping] = {}
 
 
-def build_lookup_dfs(spark, parquet_dir: str | None = None) -> Mapping:
-    """The tables enrich and the TI reports read, as a read-only mapping of
-    small Spark DataFrames (broadcast-join sides): ``geo_asn``,
-    ``geo_city``, ``ti`` and the derived ``geo_merged`` (with ``is_dc``)
-    and ``ip_combined`` (``operators.enrich.derive_lookups``).
+def _read_lookups(spark, names) -> dict:
+    """The named committed fixtures as Spark DataFrames; a missing file
+    raises Spark's path-not-found error."""
+    return {
+        k: spark.read.parquet(os.path.join(LOOKUP_PARQUET_DIR, f"{k}.parquet"))
+        for k in names
+    }
 
-    Prefers the committed parquet fixtures (tools/build_fixtures.py,
-    byte-stable): a parquet scan is JVM-native, while a DataFrame built
-    with ``createDataFrame(list_of_rows)`` scans through a pickled Python
-    RDD on every broadcast build. The derived tables are committed too,
-    so a CLI call starts no lookup-side Spark job. The in-memory path
-    remains as fallback for environments without the fixture checkout;
-    it derives the tables once per session.
+
+def build_lookup_dfs(spark) -> Mapping:
+    """The tables program code reads, as a read-only mapping of small
+    Spark DataFrames (broadcast-join sides) read once per session from
+    the committed parquet fixtures: ``ti`` (the TI reports) and the two
+    tables enrich probes, ``geo_merged`` (with ``is_dc``) and
+    ``ip_combined`` (``operators.enrich.derive_lookups``). The derived
+    tables are committed, so a CLI call derives nothing.
 
     Writes raise ``TypeError``. A caller that replaces an entry (main.py's
     --intelfile TI merge) takes a ``dict(...)`` copy first.
     """
-    if parquet_dir is None:
-        parquet_dir = LOOKUP_PARQUET_DIR
-    cache_key = (id(spark), parquet_dir)
-    if cache_key in _SESSION_LOOKUPS:
-        return _SESSION_LOOKUPS[cache_key]
-    if os.path.isdir(parquet_dir):
-        def rd(name):
-            return spark.read.parquet(os.path.join(parquet_dir, f"{name}.parquet"))
-
-        out = {
-            # engine schema excludes builder-only extras (geo_asn.is_dc)
-            "geo_asn": rd("geo_asn").select(
-                "net_start", "net_end", "asn_org", "asn_number"
-            ),
-            "geo_city": rd("geo_city"),
-            "geo_merged": rd("geo_merged"),
-            "ti": rd("ti"),
-            "ip_combined": rd("ip_combined"),
-        }
-    else:
-        from ..operators.enrich import derive_lookups
-
-        base = _base_lookup_dfs_inmemory(spark)
-        derived = derive_lookups(base)
-        out = {
-            "geo_asn": base["geo_asn"],
-            "geo_city": base["geo_city"],
-            "ti": base["ti"],
-            # materialized once: the derivation aggregates and joins, and
-            # would otherwise re-run in every broadcast build
-            **{k: v.localCheckpoint() for k, v in derived.items()},
-        }
-    frozen = MappingProxyType(out)
-    _SESSION_LOOKUPS[cache_key] = frozen
-    return frozen
+    key = id(spark)
+    if key not in _SESSION_LOOKUPS:
+        _SESSION_LOOKUPS[key] = MappingProxyType(
+            _read_lookups(spark, ("ti", "geo_merged", "ip_combined"))
+        )
+    return _SESSION_LOOKUPS[key]
 
 
-def base_lookup_dfs(spark, parquet_dir: str | None = None) -> dict:
-    """The ``DERIVATION_INPUTS`` tables as Spark DataFrames: the committed
-    parquet fixtures, else the in-memory generator rows."""
-    if parquet_dir is None:
-        parquet_dir = LOOKUP_PARQUET_DIR
-    if not os.path.isdir(parquet_dir):
-        base = _base_lookup_dfs_inmemory(spark)
-        return {k: base[k] for k in DERIVATION_INPUTS}
-    return {
-        k: spark.read.parquet(os.path.join(parquet_dir, f"{k}.parquet"))
-        for k in DERIVATION_INPUTS
-    }
+def base_lookup_dfs(spark) -> dict:
+    """The ``DERIVATION_INPUTS`` tables as Spark DataFrames, read from the
+    committed parquet fixtures."""
+    return _read_lookups(spark, DERIVATION_INPUTS)
 
 
 def dns_ptr_table_rows() -> list[tuple]:
@@ -349,66 +316,3 @@ def dns_ptr_table_rows() -> list[tuple]:
         (ip, domains, "|".join(domains), parse_psl_domain(domains[0]))
         for ip, domains in dns_ptr_rows()
     ]
-
-
-def _base_lookup_dfs_inmemory(spark):
-    """Fallback constructor from the in-memory row generators."""
-    from pyspark.sql import types as T
-
-    geo_asn = spark.createDataFrame(
-        geo_asn_rows(), "net_start bigint, net_end bigint, asn_org string, asn_number bigint"
-    )
-    geo_city = spark.createDataFrame(
-        geo_city_rows(), "net_start bigint, net_end bigint, country string, city string"
-    )
-    ti = spark.createDataFrame(ti_rows(), "ip string, feed_name string, category string")
-    dc_asn = spark.createDataFrame([(n,) for n in DC_ASN_NUMBERS], "asn_number bigint")
-    dns_ptr = spark.createDataFrame(
-        dns_ptr_table_rows(),
-        T.StructType(
-            [
-                T.StructField("ip", T.StringType()),
-                T.StructField("domains", T.ArrayType(T.StringType())),
-                T.StructField("domains_joined", T.StringType()),
-                T.StructField("tld", T.StringType()),
-            ]
-        ),
-    )
-    whois_domain = spark.createDataFrame(
-        whois_domain_rows(), "domain string, created string, updated string, country string, org string"
-    )
-    whois_ip = spark.createDataFrame(
-        whois_ip_rows(),
-        "ip string, cidr string, netname string, nettype string, org string, "
-        "created string, updated string, country string, parent string",
-    )
-    shodan_idb = spark.createDataFrame(
-        shodan_idb_rows(),
-        T.StructType(
-            [
-                T.StructField("ip", T.StringType()),
-                T.StructField("cpes", T.ArrayType(T.StringType())),
-                T.StructField("hostnames", T.ArrayType(T.StringType())),
-                T.StructField("ports", T.ArrayType(T.IntegerType())),
-                T.StructField("tags", T.ArrayType(T.StringType())),
-                T.StructField("vulns", T.ArrayType(T.StringType())),
-            ]
-        ),
-    )
-    geo_merged = spark.createDataFrame(geo_merged_rows(), GEO_MERGED_DDL)
-    out = {
-        "geo_asn": geo_asn,
-        "geo_city": geo_city,
-        "geo_merged": geo_merged,
-        "ti": ti,
-        "dc_asn": dc_asn,
-        "dns_ptr": dns_ptr,
-        "whois_domain": whois_domain,
-        "whois_ip": whois_ip,
-        "shodan_idb": shodan_idb,
-    }
-    # single-slice dimension frames: createDataFrame spreads even a
-    # 50-row lookup over defaultParallelism partitions, so every
-    # broadcast BUILD was a many-task job per Spark action. One
-    # partition makes each build one trivial task; values unchanged.
-    return {k: v.coalesce(1) for k, v in out.items()}

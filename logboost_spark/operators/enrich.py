@@ -121,9 +121,8 @@ def derive_lookups(base: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
       probe of its own.
 
     A pure DataFrame function: ``tools/build_fixtures.py`` runs it once to
-    write the committed tables, ``main.py --intelfile`` re-runs it over
-    the merged TI table, and the in-memory fallback of
-    ``build_lookup_dfs`` runs it over the generator rows.
+    write the committed tables, and ``main.py --intelfile`` re-runs it
+    over the merged TI table.
     """
     dc = base["dc_asn"].select("asn_number").distinct().withColumn("_dc", F.lit(True))
     geo = (

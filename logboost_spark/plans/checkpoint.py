@@ -132,7 +132,6 @@ def write_routed(
     post_shuffle: Callable[[DataFrame], DataFrame],
     n_groups: int = 8,
     resume: bool = False,
-    partitions_per_group: int | None = None,
     group_col_name: str | None = None,
 ) -> list[dict]:
     """Write a routed DataFrame to per-sink parquet with group commits.
@@ -143,14 +142,14 @@ def write_routed(
     groups, adds an int ``group`` column and places rows with
     ``repartitionById``: partition ``slot * P + pmod(hash(conv_id,
     salt), P)``, where ``slot`` is the group's index in the chunk and
-    ``P = partitions_per_group``. So every task holds one group (each
-    group gets at most ``P`` files per sink, as with one job per group)
-    and a hot conversation still spreads over ``P`` tasks. It then runs
-    ``post_shuffle``, counts rows per (group, sink) with one ``observe``,
-    sorts by (group, sink, conv_id, turn_idx) and appends
-    ``partitionBy("group", "sink")`` into ``data/`` after deleting the
-    chunk's ``data/group=g`` directories. Only then is each group's
-    manifest written. Jobs run one at a time, so no expression tree is
+    ``P`` comes from ``_adaptive_partitions_per_group``. So every task
+    holds one group (each group gets at most ``P`` files per sink, as
+    with one job per group) and a hot conversation still spreads over
+    ``P`` tasks. It then runs ``post_shuffle``, counts rows per (group,
+    sink) with one ``observe``, sorts by (group, sink, conv_id, turn_idx)
+    and appends ``partitionBy("group", "sink")`` into ``data/`` after
+    deleting the chunk's ``data/group=g`` directories. Only then is each
+    group's manifest written. Jobs run one at a time, so no expression tree is
     ever shared between concurrent jobs.
 
     ``post_shuffle`` is the byte-diet hook (guide §2.3 / §8: decide
@@ -204,9 +203,7 @@ def write_routed(
                 "would be silently dropped from every sink. Re-run with the "
                 "source's original group count or re-bucket the source."
             )
-    if partitions_per_group is None:
-        partitions_per_group = _adaptive_partitions_per_group(routed, n_groups)
-    parts = partitions_per_group
+    parts = _adaptive_partitions_per_group(routed, n_groups)
     gcol = (
         F.col(group_col_name).cast("bigint")
         if group_col_name

@@ -44,7 +44,6 @@ def run_pipeline(
     out_dir: str,
     resume: bool = False,
     n_groups: int = 8,
-    partitions_per_group: int | None = None,
     do_parse: bool = True,
     raw_fallthrough: bool = True,
     group_col_name: str | None = None,
@@ -127,6 +126,5 @@ def run_pipeline(
         finish,
         n_groups=n_groups,
         resume=resume,
-        partitions_per_group=partitions_per_group,
         group_col_name=group_col_name,
     )

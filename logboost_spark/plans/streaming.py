@@ -118,8 +118,6 @@ def stream_pipeline(
     the --startdate/--enddate filter on the stream path.
     """
     src = _source_stream(spark, input_path)
-    enrich_flags.setdefault("use_whois", False)
-    enrich_flags.setdefault("use_idb", False)
     data_dir = os.path.join(out_dir, "data")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:

@@ -152,7 +152,8 @@ def build_parser() -> argparse.ArgumentParser:
         "the batch group-committed writer; parquet input only",
     )
     p.add_argument("--combine", action="store_true", help="write combined union of all sinks")
-    p.add_argument("--cores", type=int, default=None, help="local[N] cores (tests only)")
+    p.add_argument("--cores", type=int, default=None,
+                   help="local[N] cores (default: SPARK_GRAFT_CPUS, else the CPU affinity count)")
     return p
 
 

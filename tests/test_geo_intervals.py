@@ -107,17 +107,25 @@ def test_merge_disjoint_interval_tables_vs_point_oracle():
 def test_merged_geo_join_matches_two_joins(spark):
     """The enrich-side contract: ONE range join against the merged
     geo table produces the same columns as the two sequential joins."""
+    import os
+
     from pyspark.sql import functions as F
 
-    from logboost_spark.fixtures.lookups import build_lookup_dfs
+    from logboost_spark.fixtures.lookups import LOOKUP_PARQUET_DIR
     from logboost_spark.operators.geo_join import (
         merge_disjoint_interval_tables,
         range_lookup_join,
     )
 
-    lk = build_lookup_dfs(spark)
-    a_rows = flatten_intervals([tuple(r) for r in lk["geo_asn"].collect()])
-    b_rows = flatten_intervals([tuple(r) for r in lk["geo_city"].collect()])
+    def rd(name, *cols):
+        return spark.read.parquet(os.path.join(LOOKUP_PARQUET_DIR, f"{name}.parquet")).select(
+            "net_start", "net_end", *cols
+        )
+
+    geo_asn = rd("geo_asn", "asn_org", "asn_number")
+    geo_city = rd("geo_city", "country", "city")
+    a_rows = flatten_intervals([tuple(r) for r in geo_asn.collect()])
+    b_rows = flatten_intervals([tuple(r) for r in geo_city.collect()])
     merged = spark.createDataFrame(
         merge_disjoint_interval_tables(a_rows, b_rows),
         "net_start bigint, net_end bigint, asn_org string, "
@@ -134,9 +142,9 @@ def test_merged_geo_join_matches_two_joins(spark):
         fact, F.col("ipl"), merged, ["asn_org", "asn_number", "country", "city"], prefix="g_"
     )
     two = range_lookup_join(
-        fact, F.col("ipl"), lk["geo_asn"], ["asn_org", "asn_number"], prefix="g_"
+        fact, F.col("ipl"), geo_asn, ["asn_org", "asn_number"], prefix="g_"
     )
-    two = range_lookup_join(two, F.col("ipl"), lk["geo_city"], ["country", "city"], prefix="g_")
+    two = range_lookup_join(two, F.col("ipl"), geo_city, ["country", "city"], prefix="g_")
     cols = ["id", "ipl", "g_asn_org", "g_asn_number", "g_country", "g_city"]
     assert one.select(cols).exceptAll(two.select(cols)).count() == 0
     assert two.select(cols).exceptAll(one.select(cols)).count() == 0

@@ -28,7 +28,7 @@ def test_pipeline_counts_and_resume(spark, lookups, tmp_path):
     sdf = spark.createDataFrame(pdf)
 
     manifests = run_pipeline(
-        spark, sdf, lookups, out, n_groups=4, partitions_per_group=4,
+        spark, sdf, lookups, out, n_groups=4,
         use_whois=False, use_idb=False,
     )
     assert len(manifests) == 4
@@ -61,7 +61,7 @@ def test_pipeline_counts_and_resume(spark, lookups, tmp_path):
         for g in [0, 2]
     }
     redo = run_pipeline(
-        spark, sdf, lookups, out, n_groups=4, partitions_per_group=4, resume=True,
+        spark, sdf, lookups, out, n_groups=4, resume=True,
         use_whois=False, use_idb=False,
     )
     assert sorted(m["group"] for m in redo) == [1, 3]  # committed groups skipped
@@ -75,7 +75,7 @@ def test_manifest_metrics(spark, lookups, tmp_path):
     out = str(tmp_path / "m")
     sdf = spark.createDataFrame(TR.gen_pandas(500))
     manifests = run_pipeline(
-        spark, sdf, lookups, out, n_groups=2, partitions_per_group=2,
+        spark, sdf, lookups, out, n_groups=2,
         use_whois=False, use_idb=False,
     )
     total = sum(m["rows"] for m in manifests)

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from logboost_spark.fixtures.lookups import build_lookup_dfs
 from logboost_spark.fixtures.transcripts import fixture_path
 from logboost_spark.operators.enrich import enrich
+from logboost_spark.plans.checkpoint import read_sinks
+from logboost_spark.plans.pipeline import run_pipeline
 from logboost_spark.plans.route import route_stage
 from logboost_spark.plans.streaming import stream_pipeline, stream_windowed_counts
 
@@ -41,6 +43,32 @@ def test_stream_drain_equals_batch(spark, tmp_path):
     stream_pipeline(spark, src, lookups, out, do_parse=False)
     again = spark.read.parquet(os.path.join(out, "data")).count()
     assert again == sum(want.values())
+
+
+def test_stream_defaults_match_batch(spark, tmp_path):
+    """With parse on and every enrich flag at its default, the stream
+    writes the batch pipeline's data columns and per-(sink, format)
+    counts."""
+    src = fixture_path("sf0.001")
+    lookups = build_lookup_dfs(spark)
+    stream_out, batch_out = str(tmp_path / "stream"), str(tmp_path / "batch")
+    stream_pipeline(spark, src, lookups, stream_out)
+    run_pipeline(spark, spark.read.parquet(src), lookups, batch_out)
+    stream = spark.read.parquet(os.path.join(stream_out, "data"))
+    batch = read_sinks(spark, batch_out)
+    # the stream reads the source through TRANSCRIPT_DDL, so its input
+    # columns come in that order; the set must match
+    assert sorted(c for c in stream.columns if c != "batch_id") == sorted(
+        c for c in batch.columns if c != "group"
+    )
+
+    def counts(df):
+        return {
+            (r.sink, r.format): r.cnt
+            for r in df.groupBy("sink", "format").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+
+    assert counts(stream) == counts(batch)
 
 
 def test_stream_windowed_counts(spark, tmp_path):

@@ -90,7 +90,7 @@ write(
         )
     },
 )
-# Array form — matches the engine's lookup schema (build_lookup_dfs);
+# Array form — the schema derive_lookups reads (base_lookup_dfs);
 # the DuckDB oracle pipe-joins with array_to_string in SQL.
 idb = L.shodan_idb_rows()
 write(
@@ -107,8 +107,7 @@ write(
 write("dc_asn", {"asn_number": list(L.DC_ASN_NUMBERS)})
 
 # The derived tables enrich probes: the SAME DataFrame function that
-# main.py --intelfile and the in-memory fallback of build_lookup_dfs run,
-# here over the base tables just written (geo_merged's base comes from
+# main.py --intelfile runs, here over the base tables just written (geo_merged's base comes from
 # the offline interval merge — at real GeoLite2 size, ~3M intervals, that
 # runs here once, never in a per-session driver).
 from logboost_spark.operators.enrich import derive_lookups  # noqa: E402
