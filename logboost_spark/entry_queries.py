@@ -164,10 +164,10 @@ def t_route_counts(spark, sf_dir):
 
 def t_stream_pipeline(spark, sf_dir):
     """Structured Streaming drain of the SAME pipeline
-    (plans/streaming.py): readStream over the transcript fixture →
-    stateless enrich (broadcast joins are streaming-legal unchanged) →
-    routed parquet sinks with a write-ahead checkpoint → read back →
-    per-sink counts. trigger(availableNow) processes every present file
+    (plans/streaming.py): readStream over the transcript fixture → per
+    micro-batch, the batch pipeline's extraction, row stage and group
+    committer → routed parquet sinks with a write-ahead checkpoint →
+    read back → per-sink counts. trigger(availableNow) processes every present file
     exactly once, so the result matches the BATCH oracle (same SQL as
     t_route_counts) — a capability the batch-only reference lacks."""
     from .plans.streaming import stream_pipeline

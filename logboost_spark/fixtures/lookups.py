@@ -73,7 +73,6 @@ def _cidr_range(cidr: str) -> tuple[int, int]:
 # Subset of the reference's hardcoded datacenter ASN list (vars/vars.go:91)
 # — 16509/15169/14618/8075 are members there; 64501/64502 are not.
 DC_ASN_NUMBERS = [16509, 15169, 14618, 8075, 20473, 63949]
-NON_DC_ASN_NUMBERS = [64501, 64502, 64503, 7018]
 
 
 @lru_cache(maxsize=1)

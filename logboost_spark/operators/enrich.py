@@ -216,17 +216,11 @@ def enrich(
     filters on enrich output above a materialized ``_cls`` attribute.
     On a cluster with unreliable local disks prefer
     `spark.checkpoint.dir` + .checkpoint(), or stage the extraction to a
-    table. The batch pipeline does not call this function: it runs
-    :func:`enrich_extract` and :func:`enrich_joins` on either side of
-    its salted exchange, which materializes the slim extraction output
-    as shuffle files instead.
-
-    CONTRACT: every stage here is deterministic over its input rows
-    (broadcast lookups are fixed tables; no sampling, no wall-clock
-    reads, no monotonically_increasing_id). The streaming sink's
-    exactly-once replay (plans/streaming.stream_pipeline) depends on
-    this — a nondeterministic enrichment would silently weaken the
-    crash-rerun guarantee from identical-content to same-cardinality.
+    table. Neither the batch pipeline nor the stream calls this
+    function: both run :func:`enrich_extract` and :func:`enrich_joins` on
+    either side of the salted exchange, which materializes the slim
+    extraction output as shuffle files instead (their determinism
+    contract is on ``plans.pipeline.row_stage``).
     """
     df = enrich_extract(
         df, text_col, ip_col_name=ip_col_name, json_col_name=json_col_name

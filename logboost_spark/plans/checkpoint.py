@@ -1,21 +1,24 @@
 """Per-partition lineage + resumable commits (the north_rule checkpoint).
 
 The reference has no resume story — a killed run restarts from zero.
-Here the fact table is hash-bucketed on conv_id into ``n_groups`` commit
-groups. The pending groups are written ``GROUPS_PER_JOB`` at a time, one
-Spark job per chunk and one job at a time. Each job (1) deletes its
-groups' output directories (idempotent — a re-run of a half-written
-group replaces it), (2) writes their rows under ``data/group=g/sink=s``,
-and (3) only then writes one manifest JSON per group recording its
-lineage: group, bucketing, rows written per sink, wall time. The manifest
-is the per-group commit point: a restarted run skips every group whose
-manifest exists, so committed groups are never reprocessed, and a kill
-loses at most the ``GROUPS_PER_JOB`` groups of the job in flight.
-Readers see committed groups only (:func:`read_sinks`,
-:func:`sink_counts`). This is batch Iceberg-commit semantics
-(write-then-swap) expressed on a plain file sink — on a real cluster the
-same structure maps 1:1 onto `writeTo(...).overwritePartitions()` with
-snapshot isolation.
+Here every write goes through one committer, :func:`commit_chunk`,
+which writes a chunk of commit groups with one Spark job. The batch
+pipeline (:func:`write_routed`) hash-buckets the fact table on conv_id
+into ``n_groups`` groups and commits the pending ones
+``GROUPS_PER_JOB`` at a time, one job at a time; the stream
+(``plans.streaming``) commits micro-batch N as group N. Each job (1)
+removes its groups' manifests, (2) deletes their output directories
+(idempotent — a re-run of a half-written group replaces it), (3) writes
+their rows under ``data/group=g/sink=s``, and (4) only then writes one
+manifest JSON per group recording its lineage: group, bucketing, rows
+written per sink, wall time. The manifest is the per-group commit
+point: a restarted batch run skips every group whose manifest exists,
+so committed groups are never reprocessed, and a kill loses at most the
+``GROUPS_PER_JOB`` groups of the job in flight. Readers see committed
+groups only (:func:`read_sinks`, :func:`sink_counts`). This is batch
+Iceberg-commit semantics (write-then-swap) expressed on a plain file
+sink — on a real cluster the same structure maps 1:1 onto
+`writeTo(...).overwritePartitions()` with snapshot isolation.
 
 Metrics ride on ``df.observe`` (zero extra passes over the data).
 """
@@ -126,6 +129,107 @@ def _recount(spark, target: str) -> dict:
     return {"rows": sum(per.values()), **per}
 
 
+def commit_chunk(
+    sub: DataFrame,
+    out_dir: str,
+    chunk: list[int],
+    parts: int,
+    post_shuffle: Callable[[DataFrame], DataFrame],
+    n_groups: int | None = None,
+) -> list[dict]:
+    """Commit the groups ``chunk`` of ``sub`` (only their rows, with an
+    int ``group`` column) with ONE Spark job. Rows are placed with
+    ``repartitionById``: partition ``slot * parts + pmod(hash(conv_id,
+    salt), parts)``, ``slot`` being the group's index in ``chunk``, so
+    every task holds one group and a hot conversation still spreads over
+    ``parts`` tasks. Then ``post_shuffle`` runs, one ``observe`` counts
+    rows per (group, sink), and the rows are sorted by (group, sink,
+    conv_id, turn_idx) and appended ``partitionBy("group", "sink")`` into
+    ``data/``. Each group's manifest is removed before its data is
+    touched and written after the data landed. ``n_groups`` (the hash
+    bucketing) is recorded in the manifests when given.
+
+    ``post_shuffle`` is the byte-diet hook (guide §2.3 / §8: decide
+    placement with small rows, move heavy formatting after the
+    exchange): ``sub`` carries only slim pre-format columns, the salted
+    exchange moves THOSE, and ``post_shuffle(df)`` (broadcast joins /
+    parse / sentinel formatting — must be deterministic, per-row, must
+    keep the ``group`` column and must produce the ``sink`` column) runs
+    on the shuffled partitions; the sort then runs directly above the
+    write so the dynamic-partition writer sees sorted input and keeps
+    the (conv_id, turn_idx) order inside every file.
+
+    Returns the manifest entries written.
+    """
+    data_dir = os.path.join(out_dir, "data")
+    group = F.col("group")
+    slot = F.lit(0)
+    for i, g in enumerate(chunk[1:], 1):
+        slot = F.when(group == g, i).otherwise(slot)
+    # pmod(hash(...), P) is exactly the partition id repartition(P,
+    # conv_id, salt) assigns, so each group's rows land as they did
+    # when every group had its own job
+    in_group = F.pmod(F.hash("conv_id", salt(SALT_BUCKETS)), F.lit(parts))
+    sub = sub.repartitionById(len(chunk) * parts, slot * parts + in_group)
+    sub = post_shuffle(sub)
+    obs = Observation(f"groups-{'-'.join(map(str, chunk))}")
+    fields = {"rows": F.lit(True)}
+    fields.update({f"rows_{s}": F.col("sink") == s for s in SINKS})
+    counters = [
+        F.count(F.when((group == g) & cond, 1)).alias(f"g{g}_{k}")
+        for g in chunk
+        for k, cond in fields.items()
+    ]
+    sub = sub.observe(obs, *counters).sortWithinPartitions(
+        "group", "sink", "conv_id", "turn_idx"
+    )
+    # uncommit first: from here until the new manifest lands, readers
+    # skip these groups instead of reading half-deleted or half-written
+    # data under a committed manifest
+    os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
+    for g in chunk:
+        if os.path.exists(path := _manifest_path(out_dir, g)):
+            os.remove(path)
+    # a killed earlier attempt may have left these groups' files, or
+    # committed task output under _temporary that the next append's
+    # job commit would merge; only one job writes data/ at a time
+    for name in [f"group={g}" for g in chunk] + ["_temporary"]:
+        shutil.rmtree(os.path.join(data_dir, name), ignore_errors=True)
+    t0 = time.time()
+    sub.write.partitionBy("group", "sink").mode("append").parquet(data_dir)
+    wall = round(time.time() - t0, 3)
+    try:
+        got = obs.get
+        metrics = {g: {k: got[f"g{g}_{k}"] for k in fields} for g in chunk}
+    except Exception:
+        # Observation.get asserts when an all-empty chunk's plan
+        # collapses to a zero-task LocalTableScan under AQE (the
+        # observe node never fires) — but a listener race/timeout
+        # raises the same way for a chunk whose data WAS written, and
+        # blindly zero-filling would corrupt sink_counts downstream.
+        # Recount from the parquet just written: exact, and only ever
+        # paid on this exceptional path.
+        metrics = {
+            g: _recount(sub.sparkSession, os.path.join(data_dir, f"group={g}"))
+            for g in chunk
+        }
+    entries = []
+    for g in chunk:
+        entry = {
+            "group": g,
+            **({} if n_groups is None else {"n_groups": n_groups}),
+            "salt_buckets": SALT_BUCKETS,
+            "path": os.path.join(data_dir, f"group={g}"),
+            "wall_sec": wall,
+            **metrics[g],
+        }
+        # manifest write is the commit point — a crash before this
+        # line leaves the group uncommitted and it is redone on resume
+        _write_manifest(_manifest_path(out_dir, g), entry)
+        entries.append(entry)
+    return entries
+
+
 def write_routed(
     routed: DataFrame,
     out_dir: str,
@@ -137,30 +241,10 @@ def write_routed(
     """Write a routed DataFrame to per-sink parquet with group commits.
 
     The pending groups are taken ``GROUPS_PER_JOB`` at a time and each
-    chunk is written by ONE Spark job, so the upstream plan runs once per
-    chunk, not once per group. The job filters ``routed`` to the chunk's
-    groups, adds an int ``group`` column and places rows with
-    ``repartitionById``: partition ``slot * P + pmod(hash(conv_id,
-    salt), P)``, where ``slot`` is the group's index in the chunk and
-    ``P`` comes from ``_adaptive_partitions_per_group``. So every task
-    holds one group (each group gets at most ``P`` files per sink, as
-    with one job per group) and a hot conversation still spreads over
-    ``P`` tasks. It then runs ``post_shuffle``, counts rows per (group,
-    sink) with one ``observe``, sorts by (group, sink, conv_id, turn_idx)
-    and appends ``partitionBy("group", "sink")`` into ``data/`` after
-    deleting the chunk's ``data/group=g`` directories. Only then is each
-    group's manifest written. Jobs run one at a time, so no expression tree is
-    ever shared between concurrent jobs.
-
-    ``post_shuffle`` is the byte-diet hook (guide §2.3 / §8: decide
-    placement with small rows, move heavy formatting after the
-    exchange): ``routed`` carries only slim pre-format columns, the
-    salted exchange moves THOSE, and ``post_shuffle(df)`` (broadcast
-    joins / parse / sentinel formatting — must be deterministic, per-row,
-    must keep the ``group`` column and must produce the ``sink`` column)
-    runs on the shuffled partitions; the sort then runs directly above
-    the write so the dynamic-partition writer sees sorted input and keeps
-    the (conv_id, turn_idx) order inside every file.
+    chunk, ``routed`` filtered to its groups, is written by ONE Spark job
+    (:func:`commit_chunk`, with ``_adaptive_partitions_per_group``
+    partitions per group), so the upstream plan runs once per chunk.
+    Jobs run one at a time: no expression tree is shared between jobs.
 
     The production path is ``group_col_name``: when the SOURCE layout is
     bucket-partitioned by commit group (Iceberg `bucket(conv_id)` — or a
@@ -182,7 +266,6 @@ def write_routed(
     Returns the manifest entries written this run; ``wall_sec`` is the
     wall time of the job that wrote the group.
     """
-    os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     done = committed_groups(out_dir, n_groups=n_groups) if resume else set()
     if group_col_name and len(done) < n_groups:
         gc = F.col(group_col_name).cast("bigint")
@@ -209,77 +292,14 @@ def write_routed(
         if group_col_name
         else F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
     )
-    data_dir = os.path.join(out_dir, "data")
-    spark = routed.sparkSession
-
-    def _run_chunk(chunk: list[int]) -> list[dict]:
-        sub = routed.filter(gcol.isin(*chunk)).withColumn("group", gcol.cast("int"))
-        if group_col_name and group_col_name != "group":
-            sub = sub.drop(group_col_name)
-        group = F.col("group")
-        slot = F.lit(0)
-        for i, g in enumerate(chunk[1:], 1):
-            slot = F.when(group == g, i).otherwise(slot)
-        # pmod(hash(...), P) is exactly the partition id repartition(P,
-        # conv_id, salt) assigns, so each group's rows land as they did
-        # when every group had its own job
-        in_group = F.pmod(F.hash("conv_id", salt(SALT_BUCKETS)), F.lit(parts))
-        sub = sub.repartitionById(len(chunk) * parts, slot * parts + in_group)
-        sub = post_shuffle(sub)
-        obs = Observation(f"groups-{'-'.join(map(str, chunk))}")
-        fields = {"rows": F.lit(True)}
-        fields.update({f"rows_{s}": F.col("sink") == s for s in SINKS})
-        counters = [
-            F.count(F.when((group == g) & cond, 1)).alias(f"g{g}_{k}")
-            for g in chunk
-            for k, cond in fields.items()
-        ]
-        sub = sub.observe(obs, *counters).sortWithinPartitions(
-            "group", "sink", "conv_id", "turn_idx"
-        )
-        # a killed earlier attempt may have left these groups' files, or
-        # committed task output under _temporary that the next append's
-        # job commit would merge; only one job writes data/ at a time
-        for name in [f"group={g}" for g in chunk] + ["_temporary"]:
-            shutil.rmtree(os.path.join(data_dir, name), ignore_errors=True)
-        t0 = time.time()
-        sub.write.partitionBy("group", "sink").mode("append").parquet(data_dir)
-        wall = round(time.time() - t0, 3)
-        try:
-            got = obs.get
-            metrics = {g: {k: got[f"g{g}_{k}"] for k in fields} for g in chunk}
-        except Exception:
-            # Observation.get asserts when an all-empty chunk's plan
-            # collapses to a zero-task LocalTableScan under AQE (the
-            # observe node never fires) — but a listener race/timeout
-            # raises the same way for a chunk whose data WAS written, and
-            # blindly zero-filling would corrupt sink_counts downstream.
-            # Recount from the parquet just written: exact, and only ever
-            # paid on this exceptional path.
-            metrics = {
-                g: _recount(spark, os.path.join(data_dir, f"group={g}"))
-                for g in chunk
-            }
-        entries = []
-        for g in chunk:
-            entry = {
-                "group": g,
-                "n_groups": n_groups,
-                "salt_buckets": SALT_BUCKETS,
-                "path": os.path.join(data_dir, f"group={g}"),
-                "wall_sec": wall,
-                **metrics[g],
-            }
-            # manifest write is the commit point — a crash before this
-            # line leaves the group uncommitted and it is redone on resume
-            _write_manifest(_manifest_path(out_dir, g), entry)
-            entries.append(entry)
-        return entries
-
     todo = [g for g in range(n_groups) if g not in done]
     manifests: list[dict] = []
     for i in range(0, len(todo), GROUPS_PER_JOB):
-        manifests += _run_chunk(todo[i : i + GROUPS_PER_JOB])
+        chunk = todo[i : i + GROUPS_PER_JOB]
+        sub = routed.filter(gcol.isin(*chunk)).withColumn("group", gcol.cast("int"))
+        if group_col_name and group_col_name != "group":
+            sub = sub.drop(group_col_name)
+        manifests += commit_chunk(sub, out_dir, chunk, parts, post_shuffle, n_groups)
     return manifests
 
 

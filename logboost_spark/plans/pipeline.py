@@ -9,6 +9,8 @@ parallelism (SURVEY.md §3.1).
 
 from __future__ import annotations
 
+from typing import Callable, Mapping
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +37,55 @@ def date_filter(
     )
     keep = ts.isNull() | ts.between(F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp"))
     return df.filter(keep)
+
+
+def extract_flags(enrich_flags: dict) -> dict:
+    """Pop enrich_extract's options (-ipcol/-jsoncol) out of ``enrich_flags``."""
+    keys = ("ip_col_name", "json_col_name")
+    return {k: enrich_flags.pop(k) for k in keys if k in enrich_flags}
+
+
+def row_stage(
+    lookups: Mapping[str, DataFrame],
+    do_parse: bool = True,
+    raw_fallthrough: bool = True,
+    kv_separator: str = "=",
+    kv_delimiter: str = ",",
+    full_keys: list[str] | None = None,
+    **join_flags,
+) -> Callable[[DataFrame], DataFrame]:
+    """The ``post_shuffle`` row stage of the batch pipeline and the
+    stream, over rows carrying the ``enrich_extract`` columns:
+    ``enrich_joins`` → parse → raw filter → ``-fullparse`` projection
+    (over ``full_keys``) → route.
+
+    CONTRACT: every step is deterministic over its input rows (broadcast
+    lookups are fixed tables; no sampling, no wall-clock reads, no
+    monotonically_increasing_id). The stream's exactly-once replay
+    depends on this: a crash-rerun of micro-batch N must rewrite group
+    N with identical rows, not just as many.
+    """
+    from ..operators.enrich import enrich_joins
+
+    def stage(part: DataFrame) -> DataFrame:
+        out = enrich_joins(part, lookups, **join_flags)
+        if do_parse:
+            out = parse_stage(
+                out, kv_separator=kv_separator, kv_delimiter=kv_delimiter
+            )
+            if not raw_fallthrough:
+                # reference main.go:442: content with no recognized
+                # parser is processed as raw ONLY under -getall/-rawtxt;
+                # otherwise it is skipped (per-file there, per-line in
+                # this engine's model)
+                out = out.filter(F.col("format") != "raw")
+            if full_keys is not None:
+                from ..parsers.extra_keys import shallow_project
+
+                out = shallow_project(out, full_keys)
+        return route_stage(out)
+
+    return stage
 
 
 def run_pipeline(
@@ -72,18 +123,14 @@ def run_pipeline(
     # post-shuffle op is per-row deterministic, so output rows are
     # identical; ORDER STILL MATTERS: parse after enrich so the
     # map<string,string> never rides a join's row copy.
-    from ..operators.enrich import enrich_extract, enrich_joins
+    from ..operators.enrich import enrich_extract
 
     if full_parse and not do_parse:
         raise ValueError(
             "full_parse=True requires do_parse=True: the -fullparse "
             "projection is over the parsed fields map (ADVICE r06)"
         )
-    extract_kw = {
-        k: enrich_flags.pop(k)
-        for k in ("ip_col_name", "json_col_name")
-        if k in enrich_flags
-    }
+    extract_kw = extract_flags(enrich_flags)
 
     full_keys: list[str] | None = None
     if do_parse and full_parse:
@@ -102,28 +149,13 @@ def run_pipeline(
             keyed = keyed.filter(F.col("format") != "raw")
         full_keys = deep_keys(keyed)
 
-    def finish(part: DataFrame) -> DataFrame:
-        out = enrich_joins(part, lookups, **enrich_flags)
-        if do_parse:
-            out = parse_stage(
-                out, kv_separator=kv_separator, kv_delimiter=kv_delimiter
-            )
-            if not raw_fallthrough:
-                # reference main.go:442: content with no recognized
-                # parser is processed as raw ONLY under -getall/-rawtxt;
-                # otherwise it is skipped (per-file there, per-line in
-                # this engine's model)
-                out = out.filter(F.col("format") != "raw")
-            if full_keys is not None:
-                from ..parsers.extra_keys import shallow_project
-
-                out = shallow_project(out, full_keys)
-        return route_stage(out)
-
     return write_routed(
         enrich_extract(transcripts, **extract_kw),
         out_dir,
-        finish,
+        row_stage(
+            lookups, do_parse, raw_fallthrough, kv_separator, kv_delimiter,
+            full_keys, **enrich_flags,
+        ),
         n_groups=n_groups,
         resume=resume,
         group_col_name=group_col_name,

@@ -5,78 +5,56 @@ DataFrames).
 
 Shapes:
 
-* :func:`stream_pipeline` — readStream over a transcript table/directory
-  → the SAME parse/enrich/route stages as ``plans.pipeline``, run per
-  micro-batch inside ``foreachBatch`` → partitioned parquet sinks with a
-  write-ahead checkpoint. ``trigger(availableNow=True)`` drains everything
-  present and stops: deterministic, so its output is byte-comparable to
-  the batch pipeline (the gate asserts exactly that via the batch DuckDB
-  oracle); a rerun over the same checkpoint picks up only new files.
+* :func:`stream_pipeline` — readStream over a transcript file or
+  directory → per micro-batch, inside ``foreachBatch``, the batch
+  pipeline's extraction, row stage and group committer: micro-batch N
+  is commit group N (``data/group=N/sink=s``, ``_manifest/group-NNNN.json``).
+  ``trigger(availableNow=True)`` drains everything present and stops:
+  deterministic, so its output equals the batch pipeline's (the gate
+  asserts exactly that via the batch DuckDB oracle); a rerun over the
+  same checkpoint picks up only new files.
 * :func:`stream_windowed_counts` — event-time tumbling-window sink
   counts with a watermark: the late-data-tolerant monitoring aggregate
   (reference has no analog; its summaries are all post-hoc batch).
 
-Scale notes: each micro-batch inherits the batch plan's properties —
-zero fact-side shuffles before the routed write, broadcast-only lookups
-(rebroadcast per micro-batch is tens of MBs) — and the windowed agg
-shuffles only (window, sink) keys with state bounded by the watermark
-horizon. Enrichment runs on the micro-batch, not in the streaming plan,
-because enrich's localCheckpoint lineage cut is illegal in a streaming
-plan.
+Scale notes: each micro-batch is written with the batch plan's shape —
+one salted exchange of the slim extraction output, broadcast-only
+lookups after it (rebroadcast per micro-batch is tens of MBs) — and the
+windowed agg shuffles only (window, sink) keys with state bounded by
+the watermark horizon.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.enrich import enrich
-from ..parsers.formats import parse_stage
-from .route import route_stage
-
-#: transcript source schema (readStream cannot infer)
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, ts timestamp, role string, "
-    "tool string, text string"
-)
+from ..operators.enrich import enrich_extract
+from .checkpoint import _adaptive_partitions_per_group, commit_chunk
+from .pipeline import extract_flags, row_stage
 
 
 def _source_stream(spark: SparkSession, input_path: str) -> DataFrame:
-    """The raw transcript readStream (plan contains ONLY the source)."""
+    """The raw transcript readStream (plan contains ONLY the source),
+    with the input's own schema, so its columns come in the batch
+    read's order."""
+    opts = {}
     if os.path.isfile(input_path):
-        # FileStreamSource watches a DIRECTORY; for a single-file input
-        # (the committed fixtures) expose it through a symlink dir. The
-        # dir is DETERMINISTIC per input path so a restarted query's
-        # checkpoint (which records seen file URIs) still recognizes the
-        # file. Production always points at a directory / table location.
-        import hashlib
-        import tempfile
-
-        ap = os.path.abspath(input_path)
-        d = os.path.join(
-            tempfile.gettempdir(),
-            "lb_stream_src_" + hashlib.md5(ap.encode()).hexdigest()[:16],
-        )
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, os.path.basename(input_path))
-        # concurrent sessions race on the same deterministic path: both can
-        # pass an exists-check, so create first and treat FileExistsError as
-        # "the other session won" — then VALIDATE the winner actually is a
-        # symlink to our file (a stale regular file here would silently feed
-        # the stream wrong data)
-        try:
-            os.symlink(ap, link)
-        except FileExistsError:
-            pass
-        if not (os.path.islink(link) and os.readlink(link) == ap):
-            raise RuntimeError(
-                f"stream source shim {link!r} exists but is not a symlink to "
-                f"{ap!r} — remove the stale entry (shared tempdir collision)"
-            )
-        input_path = d
-    return spark.readStream.schema(TRANSCRIPT_DDL).parquet(input_path)
+        # FileStreamSource watches a DIRECTORY: watch the file's own
+        # directory, filtered to its name (escaped, as the filter is a
+        # Hadoop glob). Without partition discovery, a partitioned
+        # sibling directory (say this run's own output) cannot clash
+        # with the file's layout.
+        input_path, name = os.path.split(os.path.abspath(input_path))
+        opts = {
+            "pathGlobFilter": re.sub(r"([\\*?\[\]{},])", r"\\\1", name),
+            "recursiveFileLookup": "true",
+        }
+    schema = spark.read.options(**opts).parquet(input_path).schema
+    return spark.readStream.schema(schema).options(**opts).parquet(input_path)
 
 
 def stream_pipeline(
@@ -89,59 +67,56 @@ def stream_pipeline(
     kv_separator: str = "=",
     kv_delimiter: str = ",",
     **enrich_flags,
-):
+) -> list[dict]:
     """Drain the input (``trigger(availableNow=True)``) into per-sink
-    parquet with file-level checkpointing; returns when the drain ends.
+    parquet with file-level checkpointing; returns the manifest entries
+    written, as ``run_pipeline`` does, when the drain ends.
 
-    The enrichment runs inside ``foreachBatch``, NOT in the streaming
-    plan: each micro-batch arrives as a BATCH DataFrame where enrich's
-    localCheckpoint analysis barrier is legal, so Catalyst analyzes the
-    big extraction expression trees once per batch instead of re-walking
-    them per join inside the streaming plan (measured: the in-plan
-    variant spent ~170 s of pure driver analysis per drain at sf0.001;
-    foreachBatch is ~15 s). The streaming plan itself is just the source
-    passthrough.
+    The streaming plan is just the source passthrough. Each micro-batch
+    arrives in ``foreachBatch`` as a BATCH DataFrame and is written as
+    the batch pipeline writes a chunk: ``enrich_extract``, then
+    ``checkpoint.commit_chunk`` with ``pipeline.row_stage`` after its
+    salted exchange, micro-batch N as commit group N. Its manifests
+    carry no ``n_groups``: the groups are micro-batches, not buckets.
 
     Exactly-once, END TO END: the checkpoint's source WAL guarantees a
-    committed micro-batch is never re-fed, and the sink writes each
-    batch to its OWN partition directory ``data/batch_id=N`` with
-    ``mode("overwrite")`` — a crash between the sink write and the
-    checkpoint commit re-runs batch N, which (enrichment being
-    deterministic over the WAL'd file set) overwrites the same
-    directory with identical content instead of appending duplicates.
-    This is the same idempotence contract as Delta/Iceberg
-    overwrite-by-batch-id, expressed in plain partitioned parquet;
-    readers see ``batch_id`` as an ordinary partition column.
+    committed micro-batch is never re-fed, and micro-batch N owns
+    ``data/group=N`` and ``_manifest/group-NNNN.json``. A crash between
+    manifest N and the checkpoint commit re-runs batch N over the same
+    WAL'd file set: the committer removes manifest N, replaces
+    ``data/group=N`` with identical content (the row stage is
+    deterministic) and commits it again, instead of appending
+    duplicates. A crash before manifest N leaves group N uncommitted,
+    so ``read_sinks``/``sink_counts`` leave its data out until the
+    re-run commits it: Delta/Iceberg overwrite-by-batch-id, expressed
+    in plain partitioned parquet.
 
     ``pre_enrich``: optional callable(DataFrame) → DataFrame applied to
     each micro-batch before enrichment — the hook the CLI uses to apply
     the --startdate/--enddate filter on the stream path.
     """
     src = _source_stream(spark, input_path)
-    data_dir = os.path.join(out_dir, "data")
+    extract_kw = extract_flags(enrich_flags)
+    stage = row_stage(
+        lookups, do_parse, kv_separator=kv_separator, kv_delimiter=kv_delimiter,
+        **enrich_flags,
+    )
+    manifests: list[dict] = []
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if pre_enrich is not None:
             batch_df = pre_enrich(batch_df)
-        # NOTE: every stage in here (enrich broadcast joins, parse
-        # when-cascade, route) must stay DETERMINISTIC over the replayed
-        # file set — the overwrite-by-batch_id sink's exactly-once
-        # contract (docstring above) depends on a crash-rerun of batch N
-        # producing byte-identical content. Adding a nondeterministic
-        # stage (sampling, now()-style timestamps,
-        # monotonically_increasing_id) here silently weakens the replay
-        # to same-cardinality-different-rows.
-        df = enrich(batch_df, lookups, **enrich_flags)
-        if do_parse:
-            df = parse_stage(df, kv_separator=kv_separator, kv_delimiter=kv_delimiter)
-        route_stage(df).write.mode("overwrite").partitionBy("sink").parquet(
-            os.path.join(data_dir, f"batch_id={batch_id}")
+        sub = enrich_extract(batch_df, **extract_kw).withColumn(
+            "group", F.lit(batch_id)
         )
+        parts = _adaptive_partitions_per_group(sub, 1)
+        manifests.extend(commit_chunk(sub, out_dir, [batch_id], parts, stage))
 
     writer = src.writeStream.foreachBatch(_process).option(
         "checkpointLocation", os.path.join(out_dir, "_checkpoint")
     )
     writer.trigger(availableNow=True).start().awaitTermination()
+    return manifests
 
 
 def stream_sessionize(

@@ -42,18 +42,6 @@ ALL_ENRICH_FIELDS = (
     GEO_FIELDS + THREAT_FIELDS + DNS_FIELDS + WHOIS_DOMAIN_FIELDS + WHOIS_IP_FIELDS + IDB_FIELDS
 )
 
-# Sentinels (helpers/helpers.go:301-303, 399, 403, 499-509)
-NO_IP = "NoIP"  # no IP found anywhere in the row
-PVT = "PVT"  # IP found but private — enrichment skipped
-NA = "NA"  # no extraction strategy applied / stage not applicable
-TI_MISS = ("none", "0", "none")  # categories, feed_count, feeds on TI miss
-DNS_NONE = "none"  # no PTR records / no TLD
-GEO_MISS = ""  # mmdb miss → empty strings (helpers/helpers.go:373-389)
-
-# Multi-value cells are pipe-joined after dedupe+sort
-# (helpers/helpers.go:1111-1122, threatIntel.go:413-414).
-MULTI_VALUE_SEP = "|"
-
 # Catch-all overflow column for unseen keys in shallow parse mode
 # (vars/vars.go:12).
 EXTRA_KEYS_COL = "EXTRA_KEYS"

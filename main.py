@@ -147,9 +147,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--stream",
         action="store_true",
-        help="run the pipeline as a Structured Streaming availableNow drain "
-        "(foreachBatch enrichment, checkpointed per-sink parquet) instead of "
-        "the batch group-committed writer; parquet input only",
+        help="run the pipeline as a checkpointed Structured Streaming "
+        "availableNow drain: micro-batch N is committed as commit group N "
+        "(--groups/--group-col/--resume do not apply); parquet input only",
     )
     p.add_argument("--combine", action="store_true", help="write combined union of all sinks")
     p.add_argument("--cores", type=int, default=None,
@@ -294,84 +294,18 @@ def main(argv: list[str] | None = None) -> int:
 
         derived = derive_lookups({**base_lookup_dfs(spark), "ti": lookups["ti"]})
         lookups["ip_combined"] = derived["ip_combined"].localCheckpoint()
-    if args.input_format == "logs":
-        from logboost_spark.sources.readers import read_log_directory
 
-        transcripts = read_log_directory(spark, args.input, getall=args.getall)
-    else:
-        transcripts = spark.read.parquet(args.input)
-    if args.startdate and args.enddate:
-        transcripts = date_filter(
-            transcripts, args.datecol, args.dateformat, args.startdate, args.enddate
-        )
-    if args.stream:
-        from logboost_spark.plans.streaming import stream_pipeline
-
-        # the stream path re-reads args.input inside the streaming source,
-        # so the batch date_filter above never applies — feed the SAME
-        # filter into each micro-batch via the pre_enrich hook
-        pre = None
+    def in_window(df):
         if args.startdate and args.enddate:
-            def pre(df):  # noqa: E306
-                return date_filter(
-                    df, args.datecol, args.dateformat, args.startdate, args.enddate
-                )
+            return date_filter(
+                df, args.datecol, args.dateformat, args.startdate, args.enddate
+            )
+        return df
 
-        stream_pipeline(
-            spark,
-            args.input,
-            lookups,
-            args.output,
-            do_parse=not args.no_parse,
-            pre_enrich=pre,
-            kv_separator=args.kvseparator,
-            kv_delimiter=args.kvdelimiter,
-            use_ti=not args.no_ti,
-            use_dns=not args.no_dns,
-            use_whois=not args.no_whois,
-            use_idb=not args.no_idb,
-            ip_col_name=args.ipcol,
-            json_col_name=args.jsoncol,
-        )
-        # streaming writes no group manifests — count from the data itself
-        from pyspark.sql import functions as F
-        from pyspark.errors import AnalysisException
-
-        try:
-            streamed = spark.read.parquet(os.path.join(args.output, "data"))
-        except AnalysisException:
-            # every micro-batch emptied (e.g. a date window matching no
-            # rows): the sink holds no part files, so schema inference
-            # fails — report zero counts like the batch path does
-            print(json.dumps({"streamed": True, "sink_counts": {}}))
-            return 0
-        counts = {
-            r.sink: r.cnt
-            for r in streamed.groupBy("sink")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        if args.combine:
-            streamed.withColumn(
-                "SourceFile", F.input_file_name()
-            ).write.mode("overwrite").parquet(os.path.join(args.output, "combined"))
-        print(json.dumps({"streamed": True, "sink_counts": counts}))
-        return 0
-    manifests = run_pipeline(
-        spark,
-        transcripts,
-        lookups,
-        args.output,
-        resume=args.resume,
-        n_groups=args.groups,
-        group_col_name=args.group_col,
+    flags = dict(
         do_parse=not args.no_parse,
         kv_separator=args.kvseparator,
         kv_delimiter=args.kvdelimiter,
-        full_parse=args.fullparse,
-        raw_fallthrough=(
-            args.input_format != "logs" or args.getall or args.rawtxt
-        ),
         use_ti=not args.no_ti,
         use_dns=not args.no_dns,
         use_whois=not args.no_whois,
@@ -379,14 +313,47 @@ def main(argv: list[str] | None = None) -> int:
         ip_col_name=args.ipcol,
         json_col_name=args.jsoncol,
     )
+    if args.stream:
+        from logboost_spark.plans.streaming import stream_pipeline
+
+        # the stream reads args.input itself: the date window applies to
+        # each micro-batch
+        manifests = stream_pipeline(
+            spark, args.input, lookups, args.output, pre_enrich=in_window, **flags
+        )
+    else:
+        if args.input_format == "logs":
+            from logboost_spark.sources.readers import read_log_directory
+
+            transcripts = read_log_directory(spark, args.input, getall=args.getall)
+        else:
+            transcripts = spark.read.parquet(args.input)
+        manifests = run_pipeline(
+            spark,
+            in_window(transcripts),
+            lookups,
+            args.output,
+            resume=args.resume,
+            n_groups=args.groups,
+            group_col_name=args.group_col,
+            full_parse=args.fullparse,
+            raw_fallthrough=(
+                args.input_format != "logs" or args.getall or args.rawtxt
+            ),
+            **flags,
+        )
     counts = sink_counts(spark, args.output)
-    if args.combine:
+    # with no row committed there is no file to union (nor a schema)
+    if args.combine and any(counts.values()):
         from pyspark.sql import functions as F
 
         read_sinks(spark, args.output).withColumn(
             "SourceFile", F.input_file_name()
         ).write.mode("overwrite").parquet(os.path.join(args.output, "combined"))
-    print(json.dumps({"groups_written": len(manifests), "sink_counts": counts}))
+    streamed = {"streamed": True} if args.stream else {}
+    print(json.dumps(
+        {**streamed, "groups_written": len(manifests), "sink_counts": counts}
+    ))
     return 0
 
 

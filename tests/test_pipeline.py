@@ -266,3 +266,33 @@ def test_leftover_manifest_tmp_is_ignored(tmp_path):
     counts = sink_counts(None, out)
     assert counts["general"] == 2 and counts["noip"] == 1
     assert sum(counts.values()) == 3
+
+
+def test_rewrite_uncommits_groups_before_deleting_their_data(spark, lookups, tmp_path, monkeypatch):
+    """A run without --resume into an existing output rewrites each
+    group: killed after deleting the first chunk's data but before
+    writing it, that chunk's groups are uncommitted, so the manifests
+    and the committed-only reader still agree."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "sinks")
+    sdf = spark.createDataFrame(TR.gen_pandas(2000))
+    kw = dict(n_groups=4, use_whois=False, use_idb=False)
+    run_pipeline(spark, sdf, lookups, out, **kw)
+    writer = type(sdf.write)
+
+    def killed(self, path, *args, **kwargs):
+        raise RuntimeError("killed before the data write")
+
+    monkeypatch.setattr(writer, "parquet", killed)
+    with pytest.raises(RuntimeError, match="killed before the data write"):
+        run_pipeline(spark, sdf, lookups, out, **kw)
+    monkeypatch.undo()
+    assert not os.path.isdir(os.path.join(out, "data", "group=0"))
+    assert committed_groups(out) == {2, 3}
+    read = {
+        r.sink: r.cnt
+        for r in read_sinks(spark, out).groupBy("sink").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    }
+    assert {k: v for k, v in sink_counts(spark, out).items() if v} == read
