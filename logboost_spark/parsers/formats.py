@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import math
 import re
+from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -270,9 +271,13 @@ def _go_str(v) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, float):
-        mant, exp = f"{v:E}".split("E")
-        mant = mant.rstrip("0").rstrip(".")
-        return f"{mant}E{int(exp):+03d}"
+        # the shortest digits that round-trip, as repr and Go's -1
+        # precision pick them; the exponent has at least two digits
+        d = Decimal(repr(v))
+        digits = "".join(map(str, d.as_tuple().digits)).rstrip("0") or "0"
+        mant = digits[0] + ("." + digits[1:] if digits[1:] else "")
+        exp = d.adjusted() if v else 0
+        return f"{'-' if d.is_signed() else ''}{mant}E{exp:+03d}"
     if isinstance(v, list):
         return "[" + " ".join(_go_str(x) if not isinstance(x, str) else x for x in v) + "]"
     return str(v)

@@ -89,17 +89,22 @@ def committed_groups(out_dir: str, n_groups: int | None = None) -> set[int]:
     return out
 
 
-def _adaptive_partitions_per_group(routed: DataFrame, n_groups: int) -> int:
-    """Scale-adaptive post-shuffle partition count for one commit group.
+def _adaptive_partitions_per_group(
+    routed: DataFrame, n_groups: int, groups_in_job: int
+) -> int:
+    """Scale-adaptive post-shuffle partition count for each group of a
+    commit job that writes ``groups_in_job`` groups.
 
-    floor = defaultParallelism (each group's tasks fill the cluster once);
+    floor = ceil(defaultParallelism / groups_in_job) (each job's tasks
+    fill the cluster once; defaultParallelism per group would give a
+    2-group job two waves of tasks and twice the files per sink);
     above that, grow with estimated input bytes per group so partitions
     stay near the session's advisory size instead of ballooning at
     larger scale factors. Derived from runtime stats + conf — no
     constant tuned to local[32] (guide §2: make partitioning
     scale-adaptive, not a constant)."""
     spark = routed.sparkSession
-    floor = spark.sparkContext.defaultParallelism
+    floor = -(-spark.sparkContext.defaultParallelism // groups_in_job)
     try:
         total = int(
             str(routed._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -142,12 +147,15 @@ def commit_chunk(
     ``repartitionById``: partition ``slot * parts + pmod(hash(conv_id,
     salt), parts)``, ``slot`` being the group's index in ``chunk``, so
     every task holds one group and a hot conversation still spreads over
-    ``parts`` tasks. Then ``post_shuffle`` runs, one ``observe`` counts
-    rows per (group, sink), and the rows are sorted by (group, sink,
-    conv_id, turn_idx) and appended ``partitionBy("group", "sink")`` into
-    ``data/``. Each group's manifest is removed before its data is
-    touched and written after the data landed. ``n_groups`` (the hash
-    bucketing) is recorded in the manifests when given.
+    ``parts`` tasks. ``parts`` is sized to the job
+    (``_adaptive_partitions_per_group(..., len(chunk))``): each job's
+    ``len(chunk) * parts`` tasks fill the cluster once. Then
+    ``post_shuffle`` runs, one ``observe`` counts rows per (group, sink),
+    and the rows are sorted by (group, sink, conv_id, turn_idx) and
+    appended ``partitionBy("group", "sink")`` into ``data/``. Each
+    group's manifest is removed before its data is touched and written
+    after the data landed. ``n_groups`` (the hash bucketing) is recorded
+    in the manifests when given.
 
     ``post_shuffle`` is the byte-diet hook (guide §2.3 / §8: decide
     placement with small rows, move heavy formatting after the
@@ -167,8 +175,8 @@ def commit_chunk(
     for i, g in enumerate(chunk[1:], 1):
         slot = F.when(group == g, i).otherwise(slot)
     # pmod(hash(...), P) is exactly the partition id repartition(P,
-    # conv_id, salt) assigns, so each group's rows land as they did
-    # when every group had its own job
+    # conv_id, salt) assigns, so each group's rows are placed as that
+    # repartition would place them in a job of their own
     in_group = F.pmod(F.hash("conv_id", salt(SALT_BUCKETS)), F.lit(parts))
     sub = sub.repartitionById(len(chunk) * parts, slot * parts + in_group)
     sub = post_shuffle(sub)
@@ -242,8 +250,11 @@ def write_routed(
 
     The pending groups are taken ``GROUPS_PER_JOB`` at a time and each
     chunk, ``routed`` filtered to its groups, is written by ONE Spark job
-    (:func:`commit_chunk`, with ``_adaptive_partitions_per_group``
-    partitions per group), so the upstream plan runs once per chunk.
+    (:func:`commit_chunk`), so the upstream plan runs once per chunk.
+    Each group gets ``_adaptive_partitions_per_group(routed, n_groups,
+    len(chunk))`` partitions, so each job's tasks fill the cluster once:
+    a 2-group chunk gets half the partitions per group of a 1-group tail
+    chunk.
     Jobs run one at a time: no expression tree is shared between jobs.
 
     The production path is ``group_col_name``: when the SOURCE layout is
@@ -286,7 +297,6 @@ def write_routed(
                 "would be silently dropped from every sink. Re-run with the "
                 "source's original group count or re-bucket the source."
             )
-    parts = _adaptive_partitions_per_group(routed, n_groups)
     gcol = (
         F.col(group_col_name).cast("bigint")
         if group_col_name
@@ -299,6 +309,7 @@ def write_routed(
         sub = routed.filter(gcol.isin(*chunk)).withColumn("group", gcol.cast("int"))
         if group_col_name and group_col_name != "group":
             sub = sub.drop(group_col_name)
+        parts = _adaptive_partitions_per_group(routed, n_groups, len(chunk))
         manifests += commit_chunk(sub, out_dir, chunk, parts, post_shuffle, n_groups)
     return manifests
 

@@ -27,12 +27,12 @@ the watermark horizon.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.enrich import enrich_extract
+from ..sources.readers import glob_escape
 from .checkpoint import _adaptive_partitions_per_group, commit_chunk
 from .pipeline import extract_flags, row_stage
 
@@ -50,9 +50,11 @@ def _source_stream(spark: SparkSession, input_path: str) -> DataFrame:
         # with the file's layout.
         input_path, name = os.path.split(os.path.abspath(input_path))
         opts = {
-            "pathGlobFilter": re.sub(r"([\\*?\[\]{},])", r"\\\1", name),
+            "pathGlobFilter": glob_escape(name),
             "recursiveFileLookup": "true",
         }
+    # both readers glob their path: escaped, d[1]/ names itself
+    input_path = glob_escape(input_path)
     schema = spark.read.options(**opts).parquet(input_path).schema
     return spark.readStream.schema(schema).options(**opts).parquet(input_path)
 
@@ -109,7 +111,7 @@ def stream_pipeline(
         sub = enrich_extract(batch_df, **extract_kw).withColumn(
             "group", F.lit(batch_id)
         )
-        parts = _adaptive_partitions_per_group(sub, 1)
+        parts = _adaptive_partitions_per_group(sub, 1, 1)
         manifests.extend(commit_chunk(sub, out_dir, [batch_id], parts, stage))
 
     writer = src.writeStream.foreachBatch(_process).option(

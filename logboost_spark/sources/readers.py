@@ -10,8 +10,18 @@ the reference's reader quirks.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def glob_escape(path: str) -> str:
+    """``path`` with the Hadoop glob metacharacters ``\\ * ? [ ] { } ,``
+    escaped, so a reader or a ``pathGlobFilter`` that globs its path
+    matches exactly this name (``t[1].parquet`` is otherwise a pattern
+    that matches ``t1.parquet`` only)."""
+    return re.sub(r"([\\*?\[\]{},])", r"\\\1", path)
 
 
 def read_csv(spark, path: str, **options) -> DataFrame:

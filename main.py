@@ -322,12 +322,13 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.input, lookups, args.output, pre_enrich=in_window, **flags
         )
     else:
-        if args.input_format == "logs":
-            from logboost_spark.sources.readers import read_log_directory
+        from logboost_spark.sources.readers import glob_escape, read_log_directory
 
+        if args.input_format == "logs":
             transcripts = read_log_directory(spark, args.input, getall=args.getall)
         else:
-            transcripts = spark.read.parquet(args.input)
+            # a plain path, not a Hadoop glob: t[1].parquet names itself
+            transcripts = spark.read.parquet(glob_escape(args.input))
         manifests = run_pipeline(
             spark,
             in_window(transcripts),

@@ -283,3 +283,24 @@ def test_cli_json_non_finite_number(spark, tmp_path, capsys):
     assert got[bad].fields == {"line": bad}
     assert got[bad].lb_IP == "8.8.8.8"
     assert got['{"src": "8.8.4.4", "n": 2}'].fields == {"src": "8.8.4.4", "n": "2"}
+
+
+def test_cli_input_name_with_glob_characters(spark, tmp_path, capsys):
+    """The batch --input is a plain path, not a Hadoop glob: a parquet
+    file named t[1].parquet is read, with the counts of the same file
+    under a plain name."""
+    import shutil
+
+    from logboost_spark.fixtures.transcripts import fixture_path
+
+    src = fixture_path("sf0.001")
+    odd = str(tmp_path / "t[1].parquet")
+    shutil.copy(src, odd)
+    flags = ["--no-whois", "--no-idb", "--no-parse", "--groups", "2"]
+    counts = []
+    for path, name in ((odd, "odd"), (src, "plain")):
+        rc = M.main(["--input", path, "--output", str(tmp_path / name), *flags])
+        assert rc == 0
+        counts.append(_last_json(capsys)["sink_counts"])
+    assert counts[0] == counts[1]
+    assert sum(counts[0].values()) == 2000

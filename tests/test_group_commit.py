@@ -1,7 +1,8 @@
 """Group commits under failure: a run killed after a chunk's data landed,
 or between the two manifests of a chunk, resumes to exactly the output of
 an uninterrupted run; readers see committed groups only; every write
-task holds one commit group."""
+task holds one commit group, and a chunk job's tasks fill the cluster
+once."""
 
 import glob
 import json
@@ -18,11 +19,29 @@ from logboost_spark.plans.pipeline import run_pipeline
 N_GROUPS = 4
 
 
-def _run(spark, sdf, lookups, out, resume=False):
+def _run(spark, sdf, lookups, out, resume=False, n_groups=N_GROUPS):
     return run_pipeline(
-        spark, sdf, lookups, out, n_groups=N_GROUPS, resume=resume,
+        spark, sdf, lookups, out, n_groups=n_groups, resume=resume,
         use_whois=False, use_idb=False,
     )
+
+
+def _files_per_dir(out):
+    """{(group, sink dir): parquet files in data/group=g/sink=s}."""
+    dirs = glob.glob(os.path.join(out, "data", "group=*", "sink=*"))
+    return {
+        (int(d.split(os.sep)[-2][6:]), d.split(os.sep)[-1]): len(
+            glob.glob(os.path.join(d, "*.parquet"))
+        )
+        for d in dirs
+    }
+
+
+def _parts(spark, groups_in_job):
+    """The P write_routed derives for each group of a job of
+    ``groups_in_job`` groups: ceil(defaultParallelism / groups_in_job),
+    as 2000 rows are far below the advisory partition size."""
+    return -(-spark.sparkContext.defaultParallelism // groups_in_job)
 
 
 def _snapshot(spark, out):
@@ -47,18 +66,64 @@ def reference(spark, lookups, source, tmp_path_factory):
     return out, _snapshot(spark, out)
 
 
+@pytest.fixture(scope="module")
+def three_groups(spark, lookups, source, tmp_path_factory):
+    """A run with n_groups=3, chunks (0, 1) and the tail (2,): its output
+    dir and, per chunk, the task count of the stage that writes it (the
+    result stage of the chunk's last job, the repartitionById's reduce
+    side)."""
+    sc = spark.sparkContext
+    commit = checkpoint.commit_chunk
+    tasks = {}
+
+    def counted(sub, out_dir, chunk, *args, **kwargs):
+        gid = "chunk-" + "-".join(map(str, chunk))
+        sc.setJobGroup(gid, gid)
+        try:
+            return commit(sub, out_dir, chunk, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            st = sc.statusTracker()
+            last = st.getJobInfo(max(st.getJobIdsForGroup(gid)))
+            tasks[tuple(chunk)] = st.getStageInfo(max(last.stageIds)).numTasks
+
+    out = str(tmp_path_factory.mktemp("three") / "sinks")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(checkpoint, "commit_chunk", counted)
+        _run(spark, source, lookups, out, n_groups=3)
+    return out, tasks
+
+
 def test_every_task_holds_one_group(spark, reference):
     """Two groups share a job but never a task: with P partitions per
     group, each group=g/sink=s dir has at most P files (a task holding
     both groups of a chunk would leave up to 2P)."""
     out, _ = reference
-    # the P write_routed derives: its floor, defaultParallelism, since
-    # 2000 rows are far below the advisory partition size
-    parts = spark.sparkContext.defaultParallelism
-    dirs = glob.glob(os.path.join(out, "data", "group=*", "sink=*"))
-    assert len({d.split(os.sep)[-2] for d in dirs}) == N_GROUPS
-    for d in dirs:
-        assert 1 <= len(glob.glob(os.path.join(d, "*.parquet"))) <= parts, d
+    # chunks (0, 1) and (2, 3) both hold two groups
+    parts = _parts(spark, 2)
+    files = _files_per_dir(out)
+    assert {g for g, _ in files} == set(range(N_GROUPS))
+    for d, n in files.items():
+        assert 1 <= n <= parts, d
+
+
+def test_tail_chunk_holds_one_group(spark, three_groups):
+    """With an odd group count the tail chunk (group 2) writes alone and
+    gets the one-group P, defaultParallelism; groups 0-1 keep the
+    two-group P."""
+    out, _ = three_groups
+    files = _files_per_dir(out)
+    assert {g for g, _ in files} == {0, 1, 2}
+    for (g, sink), n in files.items():
+        assert 1 <= n <= _parts(spark, 1 if g == 2 else 2), (g, sink)
+
+
+def test_chunk_job_tasks_fill_the_cluster_once(spark, three_groups):
+    """A chunk job writes with len(chunk) * P tasks, P = ceil(
+    defaultParallelism / len(chunk)): one wave of tasks for a 2-group
+    chunk, as for a 1-group chunk."""
+    _, tasks = three_groups
+    assert tasks == {(0, 1): 2 * _parts(spark, 2), (2,): _parts(spark, 1)}
 
 
 def test_read_sinks_skips_uncommitted_group(spark, reference, tmp_path):

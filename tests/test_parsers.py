@@ -136,6 +136,25 @@ def test_json_non_finite_number_is_not_json(spark):
     assert got[ok] == ("json", {"src": "8.8.8.8", "n": "1.5E+03"})
 
 
+def test_json_float_shortest_round_trip(spark):
+    """JSON floats print as Go's FormatFloat(v, 'E', -1, 64): the
+    shortest digits that round-trip, an exponent of at least two digits;
+    arrays print their elements the same way, space-separated."""
+    want = {
+        "0.1": "1E-01",
+        "123456789.0": "1.23456789E+08",
+        "1.7976931348623157e308": "1.7976931348623157E+308",
+        "1.5e3": "1.5E+03",
+        "3.14159265": "3.14159265E+00",
+        "5e-324": "5E-324",
+        "[2.5, 0.1234567891]": "[2.5E+00 1.234567891E-01]",
+    }
+    lines = [f'{{"n": {v}}}' for v in want]
+    df = parse_stage(spark.createDataFrame([(t,) for t in lines], "text string"))
+    got = {r.text: r.fields["n"] for r in df.collect()}
+    assert got == {f'{{"n": {v}}}': s for v, s in want.items()}
+
+
 def test_deep_keys_union_and_full_project(spark):
     """-fullparse key union across records with disjoint key sets
     (helpers/helpers.go:55-57)."""

@@ -347,9 +347,10 @@ def test_stream_batch_without_manifest_is_not_read(spark, tmp_path, monkeypatch)
 
 def test_stream_single_file_name_with_glob_characters(spark, tmp_path):
     """A single-file input is read through a file-name filter, which is
-    a Hadoop glob: a name holding glob metacharacters is matched
+    a Hadoop glob, from its directory, which the readers glob too: a
+    directory and a file name holding glob metacharacters are matched
     literally, and a rerun over the same checkpoint reads nothing."""
-    src_dir = tmp_path / "src"
+    src_dir = tmp_path / "s[rc]"
     src_dir.mkdir()
     src = str(src_dir / "t[1].parquet")
     shutil.copy(fixture_path("sf0.001"), src)
