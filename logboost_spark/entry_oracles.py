@@ -413,13 +413,14 @@ def sql_shingles(x: str, n: int) -> str:
     return f"(CASE WHEN len({toks}) >= {n} THEN {grams} ELSE []::VARCHAR[] END)"
 
 
-def minhash_band_union_sql(k: int, bands: int, id_col: str = "doc_id", src: str = "sig") -> str:
-    """UNION ALL selecting (id, band, bkey) per band from a signature CTE."""
+def minhash_band_union_sql(k: int, bands: int) -> str:
+    """UNION ALL selecting (doc_id, band, bkey) per band from the ``sig``
+    signature CTE."""
     r = k // bands
     selects = []
     for b in range(bands):
         key = " || '_' || ".join(f"CAST(mh{b * r + j} AS VARCHAR)" for j in range(r))
-        selects.append(f"SELECT {id_col}, {b} AS band, {key} AS bkey FROM {src}")
+        selects.append(f"SELECT doc_id, {b} AS band, {key} AS bkey FROM sig")
     return " UNION ALL ".join(selects)
 
 
@@ -436,13 +437,12 @@ def hyperplane_band_union_sql(
     n_planes: int,
     bands: int,
     dim: int,
-    seed: int = 42,
 ) -> str:
     """(id, band, bkey) per band via sign-bit keys over deterministic
     hyperplanes (mirrors operators.similarity.banded_signature_buckets)."""
     from .operators.similarity import deterministic_planes
 
-    planes = deterministic_planes(n_planes, dim, seed)
+    planes = deterministic_planes(n_planes, dim)
     r = n_planes // bands
     selects = []
     for b in range(bands):

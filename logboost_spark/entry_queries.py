@@ -42,6 +42,9 @@ from .operators.similarity import cosine_topk_bruteforce, cosine_topk_lsh
 from .parsers.formats import detect_format, parse_stage
 from .plans.route import route_category
 
+# token budgets of the packing and chunking gates, shared with their oracles
+PACK_BUDGET = 2048
+CHUNK_BUDGET, CHUNK_OVERLAP = 16, 4
 
 _GATE_TMP_ROOT: list[str] = []
 
@@ -1181,7 +1184,7 @@ def doc_pack_sequences(spark, sf_dir):
     from .operators.sampling import pack_sequences
 
     d = doc_bpe_token_count(spark, sf_dir).select("doc_id", "n_tokens")
-    return pack_sequences(d, budget=2048)
+    return pack_sequences(d, budget=PACK_BUDGET)
 
 
 def doc_chunk_windows(spark, sf_dir):
@@ -1193,7 +1196,7 @@ def doc_chunk_windows(spark, sf_dir):
     from .operators.sampling import chunk_documents
 
     d = doc_bpe_token_count(spark, sf_dir).select("doc_id", "n_tokens")
-    return chunk_documents(d, budget=16, overlap=4)
+    return chunk_documents(d, budget=CHUNK_BUDGET, overlap=CHUNK_OVERLAP)
 
 
 def doc_lm_score(spark, sf_dir):
@@ -1470,7 +1473,7 @@ def _bpe_token_count_sql() -> str:
     )
 
 
-def _pack_sequences_sql(budget: int = 2048) -> str:
+def _pack_sequences_sql() -> str:
     """Oracle mirror of operators.sampling.pack_sequences over the BPE
     token counts: same md5 key order, same running-sum bin cut. The
     integer `//`/`%` here exactly matches Spark's
@@ -1485,15 +1488,15 @@ c AS (SELECT doc_id, n_tokens,
   COALESCE(SUM(n_tokens) OVER (ORDER BY kk, doc_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb FROM k)
 SELECT doc_id, n_tokens,
-  CAST(cb // {budget} AS BIGINT) AS bin_id,
-  CAST(cb % {budget} AS BIGINT) AS offset_in_bin
+  CAST(cb // {PACK_BUDGET} AS BIGINT) AS bin_id,
+  CAST(cb % {PACK_BUDGET} AS BIGINT) AS offset_in_bin
 FROM c"""
 
 
-def _chunk_windows_sql(budget: int = 16, overlap: int = 4) -> str:
+def _chunk_windows_sql() -> str:
     """Oracle mirror of operators.sampling.chunk_documents over the BPE
     token counts (same integer div/ceil arithmetic)."""
-    stride = budget - overlap
+    budget, stride = CHUNK_BUDGET, CHUNK_BUDGET - CHUNK_OVERLAP
     ctes, last = _bpe_ctes()
     return f"""WITH {ctes},
 tok AS (SELECT doc_id, CAST(length(t) AS BIGINT) AS n_tokens FROM {last}

@@ -25,10 +25,10 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def minhash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for k minhash functions."""
+def minhash_params(k: int) -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs for k minhash functions (seed 42)."""
     params = []
-    a, b = seed * 2 + 1, seed + 7
+    a, b = 42 * 2 + 1, 42 + 7
     for _ in range(k):
         a = (a * 1_103_515_245 + 12_345) % MERSENNE_P
         b = (b * 69_069 + 1) % MERSENNE_P

@@ -194,13 +194,10 @@ AZURE_CLIENT_IP_RE = r'(ClientIP|ClientIPAddress)":"(.*?)",'
 
 def ip_extract_stage(
     df,
-    text_col: str = "text",
-    ip_col: str = "_ip",
-    cls_col: str = "_cls",
     ip_col_name: str | None = None,
     json_col_name: str | None = None,
 ):
-    """Append ``ip_col`` (extracted IP or null) + ``cls_col``
+    """Append ``_ip`` (IP extracted from ``text``, or null) + ``_cls``
     (noip|pvt|pub) via STAGED withColumns.
 
     F4 source precedence (helpers/helpers.go:304-345): with
@@ -224,10 +221,10 @@ def ip_extract_stage(
     elif json_col_name is not None:
         probe = F.regexp_extract(F.col(json_col_name), AZURE_CLIENT_IP_RE, 2)
         df = df.withColumn("_direct", F.when(F.length(probe) > 0, probe))
-        t = F.col(text_col)
+        t = F.col("text")
     else:
         df = df.withColumn("_direct", F.lit(None).cast("string"))
-        t = F.col(text_col)
+        t = F.col("text")
     # Common case first, fully codegen'd: if the FIRST IPv4 match is
     # public it IS the answer ("first public else first"). Only rows
     # whose first match is private pay the extract-all + interpreted
@@ -252,7 +249,7 @@ def ip_extract_stage(
         F.when(F.col("_direct").isNull() & F.col("_m1").isNull(), extract_first_ipv6(t)),
     )
     df = df.withColumn(
-        ip_col,
+        "_ip",
         F.coalesce(
             F.col("_direct"),
             F.when(F.col("_m1_pub"), F.col("_m1")),
@@ -261,7 +258,7 @@ def ip_extract_stage(
             F.col("_ip6"),
         ),
     )
-    ip = F.col(ip_col)
+    ip = F.col("_ip")
     # reuse _m1_v4l when the answer IS _m1 (common); recompute otherwise
     df = df.withColumn(
         "_v4l",
@@ -282,7 +279,7 @@ def ip_extract_stage(
         ),
     )
     df = df.withColumn(
-        cls_col,
+        "_cls",
         F.when(~F.col("_valid"), F.lit("noip"))
         .when(F.col("_priv"), F.lit("pvt"))
         .otherwise(F.lit("pub")),

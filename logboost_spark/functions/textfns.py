@@ -174,21 +174,19 @@ def _make_str_encoder(merges):
     return lambda s: _bpe_encode_str(s, ranks)
 
 
-def make_bpe_encode_udf(merges=None):
-    """Arrow-batched scalar pandas UDF applying the learned-BPE encoder
-    (replace chain at fixture/2k vocab sizes, priority-queue heap for
-    production vocabularies — identical output, see _make_str_encoder).
-    ``merges`` defaults to the fixture vocabulary; pass a larger table
-    (e.g. the 2k-merge JSON under data/lookups/) for the
-    production-vocab path. The merge table rides the task closure —
-    ~100 KB at 2k merges; a 50k-merge deployment would move it to a
-    SparkContext broadcast, same encoder."""
+def make_bpe_encode_udf():
+    """Arrow-batched scalar pandas UDF applying the fixture-vocabulary
+    learned-BPE encoder (replace chain at fixture/2k vocab sizes,
+    priority-queue heap for production vocabularies — identical output,
+    see _make_str_encoder). The merge table rides the task closure;
+    :func:`make_bpe_token_count_udf` takes a larger table (e.g. the
+    2k-merge JSON under data/lookups/)."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    if merges is None:
-        from ..fixtures.bpe_vocab import MERGES as merges
-    enc = _make_str_encoder(merges)
+    from ..fixtures.bpe_vocab import MERGES
+
+    enc = _make_str_encoder(MERGES)
 
     @pandas_udf(T.StringType())
     def _enc(texts: pd.Series) -> pd.Series:

@@ -37,14 +37,17 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_P, md5_long, minhash_params
 
+MAX_LABEL_ROUNDS = 20
+
 
 def tokens(col, distinct: bool = True):
     t = F.split(F.lower(F.trim(col)), r"\s+")
     return F.array_distinct(t) if distinct else t
 
 
-def shingles_of_tokens(toks, n: int, distinct: bool = True):
-    """Word n-gram shingles from a token-array column (array<string>).
+def shingles_of_tokens(toks, n: int):
+    """Distinct word n-gram shingles from a token-array column
+    (array<string>).
 
     ``toks`` MUST be a staged attribute (a real column), not an inline
     expression: the lambda references it n+1 times per gram, and Catalyst
@@ -57,7 +60,7 @@ def shingles_of_tokens(toks, n: int, distinct: bool = True):
     an empty array instead.
     """
     if n <= 1:
-        return F.array_distinct(toks) if distinct else toks
+        return F.array_distinct(toks)
     # zip_with over shifted slices, NOT transform(sequence, get-chain):
     # the get-chain evaluates interpreted per index and measured ~9×
     # slower per row; zipping n-1 shifted slices does one concat per gram
@@ -70,46 +73,45 @@ def shingles_of_tokens(toks, n: int, distinct: bool = True):
     guarded = F.when(F.size(toks) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
-    return F.array_distinct(guarded) if distinct else guarded
+    return F.array_distinct(guarded)
 
 
-def with_shingles(
-    df: DataFrame, text_col: str, n: int, out: str = "_sh", distinct: bool = True
-) -> DataFrame:
-    """Append a shingle-array column via a staged token attribute."""
-    df = df.withColumn("_toks", tokens(F.col(text_col), distinct=False))
-    return df.withColumn(out, shingles_of_tokens(F.col("_toks"), n, distinct)).drop("_toks")
+def with_shingles(df: DataFrame, n: int, out: str) -> DataFrame:
+    """Append a shingle-array column of ``text`` via a staged token
+    attribute."""
+    df = df.withColumn("_toks", tokens(F.col("text"), distinct=False))
+    return df.withColumn(out, shingles_of_tokens(F.col("_toks"), n)).drop("_toks")
 
 
-def shingles(col, n: int, distinct: bool = True):
+def shingles(col, n: int):
     """Shingles directly from a text column — ONLY for tiny inputs/tests;
     hot paths must stage tokens first (see shingles_of_tokens)."""
-    return shingles_of_tokens(tokens(col, distinct=False), n, distinct)
+    return shingles_of_tokens(tokens(col, distinct=False), n)
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep the lowest id per identical text (hash-groupBy, one shuffle).
 
     Groups on the full 128-bit md5 hex digest — collision-safe at any
     corpus size that fits a cluster (truncated hashes are not).
     """
     return (
-        docs.withColumn("_h", F.md5(F.col(text_col)))
+        docs.withColumn("_h", F.md5(F.col("text")))
         .groupBy("_h")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("dup_count"))
         .drop("_h")
     )
 
 
-def _element_hashes(docs: DataFrame, text_col: str, id_col: str, ngram: int = 1) -> DataFrame:
+def _element_hashes(docs: DataFrame, ngram: int = 1) -> DataFrame:
     # explode_OUTER + not-null on the OUTPUT ≡ explode (shingle arrays
     # never contain nulls), but avoids the Generate's inferred
     # size(_sh)>0 pushdown filter, which Catalyst inlines into the scan
     # with the whole staged shingle expression — doubling its compute
     # (same trap as the attribute staging above, one layer further down).
-    staged = with_shingles(docs, text_col, ngram, out="_sh")
+    staged = with_shingles(docs, ngram, out="_sh")
     return (
-        staged.select(F.col(id_col), F.explode_outer(F.col("_sh")).alias("_tok"))
+        staged.select(F.col("doc_id"), F.explode_outer(F.col("_sh")).alias("_tok"))
         .filter(F.col("_tok").isNotNull())
         .withColumn("_hv", md5_long(F.col("_tok")))
     )
@@ -118,12 +120,10 @@ def _element_hashes(docs: DataFrame, text_col: str, id_col: str, ngram: int = 1)
 def minhash_signatures(
     docs: DataFrame,
     k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 1,
 ) -> DataFrame:
     """k-permutation MinHash over the distinct token/shingle set of each doc."""
-    th = _element_hashes(docs, text_col, id_col, ngram)
+    th = _element_hashes(docs, ngram)
     # stage pmod(_hv, P) ONCE: Catalyst does not CSE across aggregate
     # expressions (same trap as the BPE encode staging, r07), so inlining
     # it ran the inner mod k times per token row — identical arithmetic,
@@ -133,11 +133,11 @@ def minhash_signatures(
         F.min(F.pmod(F.lit(a) * F.col("_hvm") + F.lit(b), F.lit(MERSENNE_P))).alias(f"mh{i}")
         for i, (a, b) in enumerate(minhash_params(k))
     ]
-    return th.groupBy(id_col).agg(*aggs)
+    return th.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_band_buckets(
-    sig: DataFrame, k: int, bands: int, id_col: str = "doc_id"
+    sig: DataFrame, k: int, bands: int
 ) -> DataFrame:
     """Signature matrix → (id, band, bkey) rows, one explode pass
     (no per-band unions; the fact side is touched once)."""
@@ -151,8 +151,8 @@ def minhash_band_buckets(
             for b in range(bands)
         ]
     )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("_bb")).select(
-        id_col, F.col("_bb.band").alias("band"), F.col("_bb.bkey").alias("bkey")
+    return sig.select(F.col("doc_id"), F.explode(band_structs).alias("_bb")).select(
+        "doc_id", F.col("_bb.band").alias("band"), F.col("_bb.bkey").alias("bkey")
     )
 
 
@@ -160,8 +160,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     k: int = 64,
     bands: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 2,
     threshold: float | None = 0.8,
 ) -> DataFrame:
@@ -183,18 +181,18 @@ def minhash_lsh_pairs(
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b guaranteed by the
     min-representative construction.
     """
-    sig = minhash_signatures(docs, k, text_col, id_col, ngram)
-    exploded = minhash_band_buckets(sig, k, bands, id_col)
+    sig = minhash_signatures(docs, k, ngram)
+    exploded = minhash_band_buckets(sig, k, bands)
     # Two-level min instead of min-over-window: groupBy combines MAP-SIDE
     # (only per-task partial mins shuffle), and the join-back is a real
     # join, so AQE skew-join can SPLIT a degenerate hot bucket (e.g. 1M
     # exact dups sharing every band key) across tasks — a window over
     # (band, bkey) pins the whole hot bucket into one task by definition.
-    reps = exploded.groupBy("band", "bkey").agg(F.min(id_col).alias("_rep"))
+    reps = exploded.groupBy("band", "bkey").agg(F.min("doc_id").alias("_rep"))
     cand = (
         exploded.join(reps, ["band", "bkey"])
-        .filter(F.col(id_col) != F.col("_rep"))
-        .select(F.col("_rep").alias("doc_a"), F.col(id_col).alias("doc_b"))
+        .filter(F.col("doc_id") != F.col("_rep"))
+        .select(F.col("_rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .distinct()
     )
     if threshold is None:
@@ -211,18 +209,18 @@ def minhash_lsh_pairs(
     # shingles for the ENTIRE corpus).
     cand = cand.localCheckpoint(eager=False)
     ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .union(cand.select(F.col("doc_b").alias(id_col)))
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    docs_cand = docs.join(F.broadcast(ids), id_col, "left_semi")
+    docs_cand = docs.join(F.broadcast(ids), "doc_id", "left_semi")
     # shuffle-hash hint: the docs side is never broadcastable at scale,
     # and auto-broadcast here would serialize the whole shingle
     # recomputation into ONE broadcast-build task (measured 2×+ of the
     # query); the shuffle join keeps it parallel and scale-shaped.
-    sh = with_shingles(docs_cand, text_col, ngram, out="_sh").select(id_col, "_sh").hint("shuffle_hash")
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("_sh").alias("_sha"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("_sh").alias("_shb"))
+    sh = with_shingles(docs_cand, ngram, out="_sh").select("doc_id", "_sh").hint("shuffle_hash")
+    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sha"))
+    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_shb"))
     jac = F.size(F.array_intersect("_sha", "_shb")) / F.size(F.array_union("_sha", "_shb"))
     return (
         cand.join(a, "doc_a")
@@ -233,29 +231,27 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     """SimHash fingerprint: per-bit majority vote of token hashes."""
-    th = _element_hashes(docs, text_col, id_col)
+    th = _element_hashes(docs)
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("_hv"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"_v{j}")
         for j in range(bits)
     ]
-    agg = th.groupBy(id_col).agg(*votes)
+    agg = th.groupBy("doc_id").agg(*votes)
     sh = None
     for j in range(bits):
         term = F.when(F.col(f"_v{j}") > 0, F.lit(2 ** j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         sh = term if sh is None else sh + term
-    return agg.select(F.col(id_col), sh.alias("simhash"))
+    return agg.select(F.col("doc_id"), sh.alias("simhash"))
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.6,
     n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     df_cap: int | None = None,
 ) -> DataFrame:
     """Exact token-n-gram Jaccard similarity join via inverted index.
@@ -271,8 +267,8 @@ def ngram_jaccard_pairs(
     # explode_outer + not-null output filter: see _element_hashes — keeps
     # the inferred Generate filter from re-inlining the shingle build
     sh = (
-        with_shingles(docs, text_col, n, out="_grams")
-        .select(F.col(id_col), F.explode_outer(F.col("_grams")).alias("g"))
+        with_shingles(docs, n, out="_grams")
+        .select(F.col("doc_id"), F.explode_outer(F.col("_grams")).alias("g"))
         .filter(F.col("g").isNotNull())
     )
     if df_cap is not None:
@@ -288,14 +284,14 @@ def ngram_jaccard_pairs(
             .select("g")
         )
         sh = sh.join(keep, "g", "left_semi")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_g"))
-    sh = sh.join(sizes, id_col)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_g"))
+    sh = sh.join(sizes, "doc_id")
     a, b = sh.alias("a"), sh.alias("b")
     return (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
             F.col("a.n_g").alias("na"),
             F.col("b.n_g").alias("nb"),
         )
@@ -310,9 +306,6 @@ def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing ANY word
     n-gram with an evaluation/benchmark set — the standard pretraining
@@ -328,9 +321,7 @@ def decontaminate(
     to a web corpus (eval suites ≈ 10^5-10^7 shingles, MBs) and is
     BROADCAST; the corpus side explodes shingles map-side and the
     broadcast semi-ish inner join + partial-agg per-doc count leaves the
-    per-doc groupBy as the only corpus shuffle. Pass
-    ``broadcast_benchmark=False`` for an oversized benchmark — AQE picks
-    a shuffle join and skew-splits hot shingles.
+    per-doc groupBy as the only corpus shuffle.
     """
     # explode_OUTER, not explode: the inner Generate infers a
     # size(_sh)>0 filter that Catalyst pushes to the scan with the whole
@@ -338,20 +329,18 @@ def decontaminate(
     # shingles twice. The inner join on _g drops the outer-explode's
     # null rows anyway, so semantics are identical and shingles are
     # built once per row (verified in the physical plan).
-    bs = (
-        with_shingles(benchmark, text_col, n, out="_sh")
+    bs = F.broadcast(
+        with_shingles(benchmark, n, out="_sh")
         .select(F.explode_outer("_sh").alias("_g"))
         .filter(F.col("_g").isNotNull())
         .distinct()
     )
-    if broadcast_benchmark:
-        bs = F.broadcast(bs)
-    cs = with_shingles(corpus, text_col, n, out="_sh").select(
-        F.col(id_col), F.explode_outer("_sh").alias("_g")
+    cs = with_shingles(corpus, n, out="_sh").select(
+        F.col("doc_id"), F.explode_outer("_sh").alias("_g")
     )
     return (
         cs.join(bs, "_g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("hit_shingles"),
             F.min("_g").alias("example_shingle"),
@@ -359,12 +348,7 @@ def decontaminate(
     )
 
 
-def embedding_near_dups(
-    emb: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_near_dups(emb: DataFrame, threshold: float = 0.45) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — brute-force all-pairs.
 
     O(n²): a VERIFIER for sampled scales; the production path is
@@ -372,8 +356,8 @@ def embedding_near_dups(
     """
     from .similarity import cosine
 
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
     return (
         pairs.withColumn("cos", cosine(F.col("va"), F.col("vb")))
@@ -387,8 +371,6 @@ def embedding_near_dups_lsh(
     threshold: float = 0.45,
     n_planes: int = 24,
     bands: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
     bucket_cap: int = 1000,
 ) -> DataFrame:
@@ -404,10 +386,8 @@ def embedding_near_dups_lsh(
     """
     from .similarity import banded_signature_buckets, cosine, infer_dim
 
-    dim = dim or infer_dim(emb, vec_col)
-    buckets = banded_signature_buckets(
-        emb.select(F.col(id_col), F.col(vec_col)), vec_col, id_col, n_planes, bands, dim
-    )
+    dim = dim or infer_dim(emb)
+    buckets = banded_signature_buckets(emb, n_planes, bands, dim)
     # Bucket-size cap via partial-agg groupBy + semi-join (see
     # ngram_jaccard_pairs df_cap note): counts combine map-side and a hot
     # (band, bkey) bucket never serializes into a single window task.
@@ -418,16 +398,16 @@ def embedding_near_dups_lsh(
         .select("band", "bkey")
     )
     buckets = buckets.join(keep, ["band", "bkey"], "left_semi")
-    ba = buckets.select(F.col(id_col).alias("id_a"), "band", "bkey")
-    bb = buckets.select(F.col(id_col).alias("id_b"), "band", "bkey")
+    ba = buckets.select(F.col("vec_id").alias("id_a"), "band", "bkey")
+    bb = buckets.select(F.col("vec_id").alias("id_b"), "band", "bkey")
     cand = (
         ba.join(bb, ["band", "bkey"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -441,7 +421,6 @@ def near_dup_clusters(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster, keep).
 
@@ -454,7 +433,7 @@ def near_dup_clusters(
     Each round is one shuffle-by-vertex; localCheckpoint cuts lineage
     so the plan doesn't grow per iteration. At extreme diameters the
     large-star/small-star variant caps rounds at O(log n); not needed
-    for near-dup graphs. Raises if max_iter rounds don't converge.
+    for near-dup graphs. Raises if MAX_LABEL_ROUNDS rounds don't converge.
     """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -465,7 +444,7 @@ def near_dup_clusters(
     labels = (
         edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_LABEL_ROUNDS):
         nbr = (
             edges.join(labels, edges["src"] == labels["id"])
             .groupBy("dst")
@@ -490,7 +469,7 @@ def near_dup_clusters(
         if not changed:
             break
     else:
-        raise RuntimeError(f"near_dup_clusters did not converge in {max_iter} rounds")
+        raise RuntimeError(f"near_dup_clusters did not converge in {MAX_LABEL_ROUNDS} rounds")
     return labels.select(
         F.col("id").alias("doc_id"),
         F.col("label").alias("cluster"),

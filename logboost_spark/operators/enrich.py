@@ -172,7 +172,6 @@ def derive_lookups(base: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
 
 def enrich_extract(
     df: DataFrame,
-    text_col: str = "text",
     ip_col_name: str | None = None,
     json_col_name: str | None = None,
 ) -> DataFrame:
@@ -184,9 +183,7 @@ def enrich_extract(
     (enrich_joins) references these slim attributes — which is what lets
     the pipeline shuffle extraction output instead of formatted rows.
     """
-    df = ip_extract_stage(
-        df, text_col, ip_col_name=ip_col_name, json_col_name=json_col_name
-    )
+    df = ip_extract_stage(df, ip_col_name=ip_col_name, json_col_name=json_col_name)
     pub = F.col("_cls") == "pub"
     df = df.withColumn("_join_ip", F.when(pub, F.col("_ip")))
     return df.withColumn("_join_v4", F.when(pub, F.col("_v4l"))).drop("_v4l")
@@ -195,17 +192,11 @@ def enrich_extract(
 def enrich(
     df: DataFrame,
     lookups: Mapping[str, DataFrame],
-    text_col: str = "text",
-    use_ti: bool = True,
-    use_dns: bool = True,
     use_whois: bool = True,
     use_idb: bool = True,
-    ip_col_name: str | None = None,
-    json_col_name: str | None = None,
 ) -> DataFrame:
-    """Append the lb_* enrichment suffix. Flags mirror -useti/-usedns/
-    -usewhois/-useidb (+ -ipcol/-jsoncol source precedence); column
-    order is fixed (vars/vars.go:51-56).
+    """Append the lb_* enrichment suffix, TI and DNS included. Flags
+    mirror -usewhois/-useidb; column order is fixed (vars/vars.go:51-56).
 
     The plan lineage is always cut between the extraction stage and the
     join pyramid with a lazy localCheckpoint: the Catalyst analyzer
@@ -222,14 +213,9 @@ def enrich(
     extraction output as shuffle files instead (their determinism
     contract is on ``plans.pipeline.row_stage``).
     """
-    df = enrich_extract(
-        df, text_col, ip_col_name=ip_col_name, json_col_name=json_col_name
-    )
     return enrich_joins(
-        df.localCheckpoint(eager=False),
+        enrich_extract(df).localCheckpoint(eager=False),
         lookups,
-        use_ti=use_ti,
-        use_dns=use_dns,
         use_whois=use_whois,
         use_idb=use_idb,
     )
@@ -291,10 +277,10 @@ def enrich_joins(
             F.broadcast(combined), df["_join_ip"] == combined["_ipk"], "left"
         ).drop("_ipk")
 
-    def _sentinel(col, noip="NoIP", pvt="PVT"):
+    def _sentinel(col):
         return (
-            F.when(F.col("_cls") == "noip", F.lit(noip))
-            .when(F.col("_cls") == "pvt", F.lit(pvt))
+            F.when(F.col("_cls") == "noip", F.lit("NoIP"))
+            .when(F.col("_cls") == "pvt", F.lit("PVT"))
             .otherwise(col)
         )
 

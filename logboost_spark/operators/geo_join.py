@@ -5,7 +5,7 @@ mmdb trie lookup (helpers/helpers.go:369-391). The Spark-native shape is
 a **broadcast range join**: the lookup table stores [net_start, net_end]
 integer intervals; a naive `BETWEEN` join would be a nested-loop
 (BroadcastNestedLoopJoin — O(rows × cidrs)), so we bucket both sides on
-the top ``bucket_bits`` of the address. Each interval is exploded into
+the top ``BUCKET_BITS`` of the address. Each interval is exploded into
 the buckets it spans, making the join an **equi hash join on the bucket**
 with a residual BETWEEN — O(rows × avg-intervals-per-bucket), and still
 broadcast (no fact-side shuffle).
@@ -24,12 +24,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_BUCKET_BITS = 16
+BUCKET_BITS = 16
 
 
-def bucketize_intervals(lookup: DataFrame, bucket_bits: int = DEFAULT_BUCKET_BITS) -> DataFrame:
+def bucketize_intervals(lookup: DataFrame) -> DataFrame:
     """Explode [net_start, net_end] intervals into covering buckets."""
-    shift = 32 - bucket_bits
+    shift = 32 - BUCKET_BITS
     return lookup.withColumn(
         "_bucket",
         F.explode(
@@ -41,7 +41,7 @@ def bucketize_intervals(lookup: DataFrame, bucket_bits: int = DEFAULT_BUCKET_BIT
     )
 
 
-def flatten_intervals(rows: list[tuple], n_attrs: int | None = None) -> list[tuple]:
+def flatten_intervals(rows: list[tuple]) -> list[tuple]:
     """Longest-prefix-wins flattening of possibly-overlapping intervals.
 
     ``rows``: (net_start, net_end, *attrs). The NARROWEST (most specific)
@@ -150,7 +150,6 @@ def range_lookup_join(
     ip_long: Column,
     lookup: DataFrame,
     attrs: list[str],
-    bucket_bits: int = DEFAULT_BUCKET_BITS,
     prefix: str = "",
 ) -> DataFrame:
     """Left-join interval attributes onto ``fact`` keyed by an int IP column.
@@ -159,8 +158,8 @@ def range_lookup_join(
     is BroadcastHashJoin on the bucket with the BETWEEN as join residual —
     verify with ``.explain()``.
     """
-    shift = 32 - bucket_bits
-    b = bucketize_intervals(lookup, bucket_bits)
+    shift = 32 - BUCKET_BITS
+    b = bucketize_intervals(lookup)
     sel = [F.col("_bucket"), F.col("net_start"), F.col("net_end")] + [
         F.col(a).alias(f"{prefix}{a}") for a in attrs
     ]

@@ -183,12 +183,10 @@ def default_decoder() -> MediaDecoder:
     return AutoDecoder(image_decoder=image)
 
 
-def extract_features(media: DataFrame, decoder: MediaDecoder | None = None) -> DataFrame:
-    """binary payload → fixed-dim feature vector, Arrow-batched.
-
-    ``decoder`` is any :class:`MediaDecoder`; defaults to
-    :func:`default_decoder` (the stub in this container)."""
-    dec = decoder or default_decoder()
+def extract_features(media: DataFrame) -> DataFrame:
+    """binary payload → fixed-dim feature vector, Arrow-batched, decoded
+    by :func:`default_decoder`."""
+    dec = default_decoder()
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

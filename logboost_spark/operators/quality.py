@@ -17,31 +17,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def token_repetition(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-doc repetition stats: (id, n_tokens, distinct_ratio,
+def token_repetition(docs: DataFrame) -> DataFrame:
+    """Per-doc repetition stats of ``text``: (doc_id, n_tokens, distinct_ratio,
     top_token_ratio). Low distinct_ratio or high top_token_ratio flags
     boilerplate/spam for corpus filtering. Docs whose text has no
     tokens get (0, 0.0, 0.0). Two partial aggregations, no window."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     e = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.when(F.length(F.trim(F.col(text_col))) > 0, toks).otherwise(
+            F.when(F.length(F.trim(F.col("text"))) > 0, toks).otherwise(
                 F.array().cast("array<string>")
             )
         ).alias("_tok"),
     )
-    per_tok = e.groupBy(id_col, "_tok").agg(F.count(F.lit(1)).alias("_c"))
-    agg = per_tok.groupBy(id_col).agg(
+    per_tok = e.groupBy("doc_id", "_tok").agg(F.count(F.lit(1)).alias("_c"))
+    agg = per_tok.groupBy("doc_id").agg(
         F.sum("_c").alias("n_tokens"),
         F.count(F.lit(1)).alias("_nd"),
         F.max("_c").alias("_mx"),
     )
-    out = docs.select(id_col).join(agg, id_col, "left")
+    out = docs.select("doc_id").join(agg, "doc_id", "left")
     return out.select(
-        id_col,
+        "doc_id",
         F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
         F.round(
             F.coalesce(F.col("_nd") / F.col("n_tokens"), F.lit(0.0)), 6
@@ -52,10 +50,8 @@ def token_repetition(
     )
 
 
-def vocab_topk(
-    docs: DataFrame, k: int = 20, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Corpus-wide top-k tokens by frequency (vocab/BPE prep), ties
+def vocab_topk(docs: DataFrame, k: int = 20) -> DataFrame:
+    """Corpus-wide top-k ``text`` tokens by frequency (vocab/BPE prep), ties
     broken by token asc for determinism.
 
     orderBy(...).limit(k) plans as TakeOrderedAndProject: each partition
@@ -63,10 +59,10 @@ def vocab_topk(
     global sort of the (possibly billions-distinct) vocabulary ever
     happens. Counts combine map-side in the groupBy first.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     e = docs.select(
         F.explode(
-            F.when(F.length(F.trim(F.col(text_col))) > 0, toks).otherwise(
+            F.when(F.length(F.trim(F.col("text"))) > 0, toks).otherwise(
                 F.array().cast("array<string>")
             )
         ).alias("token")

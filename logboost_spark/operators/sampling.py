@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
 
+SPLITS = (("train", 98), ("val", 1), ("test", 1))
+
 
 def _key_hash(id_col: Column, salt: str, mod: int) -> Column:
     """Deterministic bucket in [0, mod) from a salted key hash."""
@@ -34,27 +36,22 @@ def hash_sample(
     return df.filter(_key_hash(F.col(id_col), salt, 10_000) < int(rate_pct * 100))
 
 
-def split_assign(
-    df: DataFrame,
-    id_col: str,
-    splits: tuple[tuple[str, int], ...] = (("train", 98), ("val", 1), ("test", 1)),
-    salt: str = "split",
-    out: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test assignment: the salted key hash mod
-    the total weight picks the split. Every row lands in exactly one
+def split_assign(df: DataFrame, id_col: str) -> DataFrame:
+    """Deterministic train/val/test assignment into a ``split`` column:
+    the salted key hash mod the total weight of ``SPLITS`` picks the
+    split. Every row lands in exactly one
     split (ranges partition [0, total)); membership is a pure function
     of the key, so late-arriving shards of the same corpus split
     consistently."""
-    total = sum(w for _, w in splits)
-    h = _key_hash(F.col(id_col), salt, total)
+    total = sum(w for _, w in SPLITS)
+    h = _key_hash(F.col(id_col), "split", total)
     expr = None
     acc = 0
-    for name, w in splits:
+    for name, w in SPLITS:
         cond = (h >= acc) & (h < acc + w)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
         acc += w
-    return df.withColumn(out, expr)
+    return df.withColumn("split", expr)
 
 
 def group_capped_sample(
@@ -62,7 +59,6 @@ def group_capped_sample(
     group_col: str,
     id_col: str,
     cap: int,
-    salt: str = "gcap",
 ) -> DataFrame:
     """Cap each group's contribution at ~``cap`` rows (per-domain /
     per-language caps in web corpora), deterministically.
@@ -78,7 +74,7 @@ def group_capped_sample(
     """
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gn"))
     joined = df.join(counts, group_col)
-    h = _key_hash(F.col(id_col), salt, 1_000_000)
+    h = _key_hash(F.col(id_col), "gcap", 1_000_000)
     # floor of IEEE double division — bit-identical in the DuckDB oracle
     # (a plain bigint cast would round there and truncate here)
     keep = (F.col("_gn") <= cap) | (
@@ -90,17 +86,14 @@ def group_capped_sample(
 def pack_sequences(
     docs: DataFrame,
     budget: int,
-    token_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    salt: str = "pack",
     n_parts: int | None = None,
 ) -> DataFrame:
     """Contiguous token-budget packing for pretraining batches: shuffle
-    documents into a deterministic hash order (the "global shuffle" of a
-    training pipeline), take the running token total over that order,
-    and cut a bin every ``budget`` tokens. Output per doc: bin_id +
-    offset_in_bin. A doc may straddle a boundary — bins overflow by at
-    most one document (streaming packing; exact first-fit-decreasing is
+    (doc_id, n_tokens) documents into a deterministic hash order (the
+    "global shuffle" of a training pipeline), take the running token
+    total over that order, and cut a bin every ``budget`` tokens. Output
+    per doc: bin_id + offset_in_bin. A doc may straddle a boundary —
+    bins overflow by at most one document (streaming packing; exact first-fit-decreasing is
     inherently sequential, and boundary docs are chunked downstream).
 
     Scale shape: NO global window. The order is a range-partitioned sort
@@ -120,18 +113,18 @@ def pack_sequences(
     from pyspark.sql import Window
 
     key = F.pmod(
-        md5_long(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
+        md5_long(F.concat(F.lit("pack"), F.col("doc_id").cast("string"))),
         F.lit(1_000_000_000),
     )
     d = docs.select(
-        F.col(id_col), F.col(token_col).cast("bigint").alias("_tok")
+        F.col("doc_id"), F.col("n_tokens").cast("bigint").alias("_tok")
     ).withColumn("_key", key)
     parts = n_parts or d.sparkSession.sparkContext.defaultParallelism
-    d = d.repartitionByRange(parts, "_key", id_col).sortWithinPartitions(
-        "_key", id_col
+    d = d.repartitionByRange(parts, "_key", "doc_id").sortWithinPartitions(
+        "_key", "doc_id"
     )
     d = d.withColumn("_pid", F.spark_partition_id())
-    w_in = Window.partitionBy("_pid").orderBy("_key", id_col)
+    w_in = Window.partitionBy("_pid").orderBy("_key", "doc_id")
     d = d.withColumn("_cum_in", F.sum("_tok").over(w_in))  # inclusive
     w_p = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = (
@@ -145,21 +138,14 @@ def pack_sequences(
     cum_before = F.col("_poff") + F.col("_cum_in") - F.col("_tok")
     off = F.pmod(cum_before, F.lit(budget))
     return d.select(
-        id_col,
-        F.col("_tok").alias(token_col),
+        "doc_id",
+        F.col("_tok").alias("n_tokens"),
         ((cum_before - off) / F.lit(budget)).cast("bigint").alias("bin_id"),
         off.cast("bigint").alias("offset_in_bin"),
     )
 
 
-def mixture_sample(
-    df: DataFrame,
-    weights: dict[str, float],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    default_weight: float = 1.0,
-    salt: str = "mix",
-) -> DataFrame:
+def mixture_sample(df: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Deterministic source-weighted data mixing (the Pile/LLaMA-style
     per-source epoch weights): weight w emits floor(w) full copies of
     every doc plus one more with probability frac(w), decided by the
@@ -172,8 +158,9 @@ def mixture_sample(
     threshold) per source — integer thresholds precomputed in Python so
     both engines compare the same integers, no float boundary — and a
     sequence+explode emits the copies. Zero shuffle at any scale;
-    weight 0 drops the source entirely."""
-    h = _key_hash(F.col(id_col), salt, 1_000_000)
+    weight 0 drops the source entirely, and a ``source`` not in
+    ``weights`` keeps one copy of each ``doc_id``."""
+    h = _key_hash(F.col("doc_id"), "mix", 1_000_000)
     copies = None
     for src, w in sorted(weights.items()):
         if w < 0:
@@ -181,12 +168,9 @@ def mixture_sample(
         k = int(w)
         thr = int(round((w - k) * 1_000_000))
         c = F.lit(k) + F.when(h < thr, 1).otherwise(0)
-        cond = F.col(source_col) == src
+        cond = F.col("source") == src
         copies = F.when(cond, c) if copies is None else copies.when(cond, c)
-    kd = int(default_weight)
-    thr_d = int(round((default_weight - kd) * 1_000_000))
-    c_d = F.lit(kd) + F.when(h < thr_d, 1).otherwise(0)
-    copies = c_d if copies is None else copies.otherwise(c_d)
+    copies = F.lit(1) if copies is None else copies.otherwise(1)
     return (
         df.withColumn("_c", copies)
         .filter(F.col("_c") > 0)
@@ -199,16 +183,14 @@ def chunk_documents(
     docs: DataFrame,
     budget: int,
     overlap: int = 0,
-    token_col: str = "n_tokens",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Sliding-window chunking: split each doc's token span [0, n) into
-    windows of ``budget`` tokens advancing by stride = budget - overlap
-    (context-window prep for long docs; the boundary-straddling docs of
-    ``pack_sequences`` are the natural input). The last window is the
-    first one whose end reaches n, so every token is covered and a doc
-    never emits a fully-redundant tail window. Zero-token docs emit no
-    chunks.
+    """Sliding-window chunking: split each doc's token span
+    [0, n_tokens) into windows of ``budget`` tokens advancing by
+    stride = budget - overlap (context-window prep for long docs; the
+    boundary-straddling docs of ``pack_sequences`` are the natural
+    input). The last window is the first one whose end reaches n, so
+    every token is covered and a doc never emits a fully-redundant tail
+    window. Zero-token docs emit no chunks.
 
     Pure map-side sequence+explode — NO shuffle at any scale. Chunk
     count uses integer ``div`` (exact in both engines; a floor of
@@ -217,16 +199,16 @@ def chunk_documents(
     stride = budget - overlap
     if stride <= 0:
         raise ValueError(f"overlap {overlap} must be < budget {budget}")
-    n = F.col(token_col)
+    n = F.col("n_tokens")
     kmax = F.when(n <= budget, F.lit(0)).otherwise(
-        F.expr(f"({token_col} - {budget} + {stride - 1}) div {stride}")
+        F.expr(f"(n_tokens - {budget} + {stride - 1}) div {stride}")
     )
     d = docs.filter(n > 0).withColumn(
         "chunk_idx", F.explode(F.sequence(F.lit(0), kmax))
     )
     start = F.col("chunk_idx") * stride
     return d.select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("bigint").alias("chunk_idx"),
         start.cast("bigint").alias("start_tok"),
         F.least(start + budget, n).cast("bigint").alias("end_tok"),

@@ -49,12 +49,12 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def infer_dim(df: DataFrame, vec_col: str = "embedding") -> int:
+def infer_dim(df: DataFrame) -> int:
     """Embedding dimensionality from the first row (driver-side peek of
     ONE row — schema-level metadata, not a data scan)."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = df.select(F.size(F.col("embedding")).alias("d")).first()
     if row is None or row.d is None or row.d <= 0:
-        raise ValueError(f"cannot infer embedding dim from column {vec_col!r}")
+        raise ValueError("cannot infer embedding dim from column 'embedding'")
     return int(row.d)
 
 
@@ -62,8 +62,6 @@ def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -71,9 +69,9 @@ def cosine_topk_bruteforce(
     (query_id, neighbor_id, cos) with ties broken by neighbor_id.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"))
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -111,48 +109,39 @@ def deterministic_planes(n_planes: int, dim: int, seed: int = 42) -> list[list[f
 
 
 def banded_signature_buckets(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_planes: int,
-    bands: int,
-    dim: int,
-    seed: int = 42,
-    out_id: str | None = None,
+    df: DataFrame, n_planes: int, bands: int, dim: int, out_id: str = "vec_id"
 ) -> DataFrame:
-    """(id, band, bkey) rows: one bucket row per band, single explode
-    pass over the input (the fact side is touched once)."""
-    planes = deterministic_planes(n_planes, dim, seed)
+    """(vec_id as out_id, band, bkey) rows: one bucket row per band,
+    single explode pass over the input (the fact side is touched once)."""
+    planes = deterministic_planes(n_planes, dim)
     r = n_planes // bands
     band_structs = []
     for b in range(bands):
         key = F.lit(0).cast("bigint")
         for j in range(r):
             key = key + F.when(
-                plane_dot(F.col(vec_col), planes[b * r + j]) > 0,
+                plane_dot(F.col("embedding"), planes[b * r + j]) > 0,
                 F.lit(2 ** j).cast("bigint"),
             ).otherwise(F.lit(0).cast("bigint"))
         band_structs.append(
             F.struct(F.lit(b).alias("band"), key.alias("bkey"))
         )
-    out = out_id or id_col
     return df.select(
-        F.col(id_col).alias(out), F.explode(F.array(*band_structs)).alias("_bb")
-    ).select(out, F.col("_bb.band").alias("band"), F.col("_bb.bkey").alias("bkey"))
+        F.col("vec_id").alias(out_id), F.explode(F.array(*band_structs)).alias("_bb")
+    ).select(out_id, F.col("_bb.band").alias("band"), F.col("_bb.bkey").alias("bkey"))
 
 
 # --- IVF (inverted-file) search ---------------------------------------------
 
 
-def ivf_codebook(n_cells: int, dim: int, seed: int = 7) -> list[list[float]]:
+def ivf_codebook(n_cells: int, dim: int) -> list[list[float]]:
     """Deterministic random-direction codebook — the zero-data baseline
     quantizer (plumbing tests); production uses ``sampled_codebook`` or
     ``train_centroids_lloyd``."""
-    return deterministic_planes(n_cells, dim, seed)
+    return deterministic_planes(n_cells, dim, seed=7)
 
 
-def sampled_codebook(parquet_path: str, n_cells: int,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> list[list[float]]:
+def sampled_codebook(parquet_path: str, n_cells: int) -> list[list[float]]:
     """Data-sampled coarse quantizer: the embeddings of the n_cells
     smallest ids (the standard k-means init; measured recall@10 = 0.92
     at nprobe=4/16 on the driver fixture — sampling beats both random
@@ -171,7 +160,7 @@ def sampled_codebook(parquet_path: str, n_cells: int,
 
     pf = pq.ParquetFile(parquet_path)
     best: list[tuple] = []  # max-heap on negated id → heap[0] is largest kept id
-    id_idx = pf.schema_arrow.get_field_index(id_col)
+    id_idx = pf.schema_arrow.get_field_index("vec_id")
     for rg in range(pf.metadata.num_row_groups):
         stats = pf.metadata.row_group(rg).column(id_idx).statistics
         if (
@@ -182,7 +171,7 @@ def sampled_codebook(parquet_path: str, n_cells: int,
         ):
             continue  # every id in this row group loses to the kept set
         for batch in pf.iter_batches(
-            batch_size=8192, row_groups=[rg], columns=[id_col, vec_col]
+            batch_size=8192, row_groups=[rg], columns=["vec_id", "embedding"]
         ):
             for i, v in zip(batch[0].to_pylist(), batch[1].to_pylist()):
                 if len(best) < n_cells:
@@ -229,9 +218,6 @@ def cosine_topk_ivf(
     nprobe: int = 4,
     dim: int | None = None,
     codebook: list[list[float]] | None = None,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via IVF: corpus → per-cell inverted lists
     (ONE map-side assignment, no shuffle), queries probe their nprobe
@@ -242,17 +228,17 @@ def cosine_topk_ivf(
     the data — the classic IVF selectivity. Here the probe list is
     broadcast (query batches are small); a huge query set would join
     shuffle-on-cell instead."""
-    dim = dim or infer_dim(corpus, vec_col)
-    cb = codebook or ivf_codebook(n_cells, dim, seed)
+    dim = dim or infer_dim(corpus)
+    cb = codebook or ivf_codebook(n_cells, dim)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        assign_cell(F.col(vec_col), cb).alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cv"),
+        assign_cell(F.col("embedding"), cb).alias("cell"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.explode(probe_cells(F.col(vec_col), cb, nprobe)).alias("cell"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qv"),
+        F.explode(probe_cells(F.col("embedding"), cb, nprobe)).alias("cell"),
     )
     scored = (
         c.join(F.broadcast(q), "cell")
@@ -271,8 +257,6 @@ def train_centroids_lloyd(
     corpus: DataFrame,
     n_cells: int,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Distributed Lloyd k-means for the IVF codebook.
 
@@ -286,15 +270,15 @@ def train_centroids_lloyd(
     previous centroid. Returns driver-side centroid lists usable as
     ``cosine_topk_ivf(codebook=...)``."""
     init_rows = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
+        corpus.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
     )
-    cents = [[float(x) for x in r[vec_col]] for r in init_rows]
+    cents = [[float(x) for x in r["embedding"]] for r in init_rows]
     if len(cents) < n_cells:
         raise ValueError(f"corpus has fewer than {n_cells} rows")
     for _ in range(iters):
         assigned = corpus.select(
-            assign_cell(F.col(vec_col), cents).alias("cell"),
-            F.posexplode(F.col(vec_col)).alias("pos", "val"),
+            assign_cell(F.col("embedding"), cents).alias("cell"),
+            F.posexplode(F.col("embedding")).alias("pos", "val"),
         )
         means = (
             assigned.groupBy("cell", "pos")
@@ -318,8 +302,6 @@ def cosine_topk_lsh(
     n_planes: int = 12,
     bands: int = 6,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates share ANY of the query's LSH bands.
 
@@ -328,23 +310,17 @@ def cosine_topk_lsh(
     by design; at 100 TB the banded bucket join replaces the full
     crossJoin scan (corpus shuffles once on its band keys).
     """
-    dim = dim or infer_dim(corpus, vec_col)
-    cb = banded_signature_buckets(
-        corpus.select(F.col(id_col), F.col(vec_col)),
-        vec_col, id_col, n_planes, bands, dim, out_id="neighbor_id",
-    )
-    qb = banded_signature_buckets(
-        queries.select(F.col(id_col), F.col(vec_col)),
-        vec_col, id_col, n_planes, bands, dim, out_id="query_id",
-    )
+    dim = dim or infer_dim(corpus)
+    cb = banded_signature_buckets(corpus, n_planes, bands, dim, out_id="neighbor_id")
+    qb = banded_signature_buckets(queries, n_planes, bands, dim, out_id="query_id")
     cand = (
         cb.join(F.broadcast(qb), ["band", "bkey"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
     scored = cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id").withColumn(
         "cos", cosine(F.col("_qv"), F.col("_cv"))
     )

@@ -26,14 +26,14 @@ def ingest_intel_lines(
     lines: DataFrame,
     feed_name: str,
     category: str,
-    line_col: str = "line",
 ) -> DataFrame:
-    """One feed file's lines → deduped (ip, feed_name, category) rows.
+    """One feed file's ``line`` rows → deduped (ip, feed_name, category)
+    rows.
 
     Mirrors ingestRecord (threatIntel.go:286-313): skip blank/#-comment
     lines, first IPv4 per line, skip private IPs.
     """
-    t = F.trim(F.col(line_col))
+    t = F.trim(F.col("line"))
     ip = F.regexp_extract(t, "(" + IPV4_RE + ")", 1)
     return (
         lines.filter((F.length(t) > 0) & ~t.startswith("#"))

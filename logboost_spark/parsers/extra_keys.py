@@ -17,14 +17,14 @@ from pyspark.sql import functions as F
 from ..semantics import EXTRA_KEYS_COL, LAYOUT_COLS
 
 
-def first_record_keys(df: DataFrame, fields_col: str = "fields") -> list[str]:
-    """Shallow-mode schema: keys of the first record (driver-side peek,
-    the columnar analog of reading line 1)."""
-    row = df.select(F.map_keys(F.col(fields_col)).alias("k")).first()
+def first_record_keys(df: DataFrame) -> list[str]:
+    """Shallow-mode schema: keys of the first record's ``fields``
+    (driver-side peek, the columnar analog of reading line 1)."""
+    row = df.select(F.map_keys(F.col("fields")).alias("k")).first()
     return list(row.k) if row else []
 
 
-def deep_keys(df: DataFrame, fields_col: str = "fields") -> list[str]:
+def deep_keys(df: DataFrame) -> list[str]:
     """Full-parse key union (-fullparse two-pass, helpers/helpers.go:55-57,
     parsers/parse_json.go:62, parse_kv.go:33-69, parse_cef.go:97-114):
     the reference scans the whole file once to union every record's keys
@@ -35,30 +35,28 @@ def deep_keys(df: DataFrame, fields_col: str = "fields") -> list[str]:
     total order keeps the projected schema deterministic."""
     row = df.select(
         F.array_distinct(
-            F.flatten(F.collect_set(F.map_keys(F.col(fields_col))))
+            F.flatten(F.collect_set(F.map_keys(F.col("fields"))))
         ).alias("k")
     ).first()
     return sorted(row.k) if row and row.k else []
 
 
-def full_project(df: DataFrame, fields_col: str = "fields") -> DataFrame:
+def full_project(df: DataFrame) -> DataFrame:
     """-fullparse projection: one column per key seen ANYWHERE in the
     input (two passes: key-union aggregation, then projection — exactly
     the reference's two file scans, helpers/helpers.go:55-57). No
     EXTRA_KEYS overflow can remain, but the column is kept for schema
     parity with shallow mode."""
-    return shallow_project(df, deep_keys(df, fields_col), fields_col)
+    return shallow_project(df, deep_keys(df))
 
 
-def shallow_project(
-    df: DataFrame, known_keys: list[str], fields_col: str = "fields"
-) -> DataFrame:
-    """fields map → one column per known key + EXTRA_KEYS overflow.
+def shallow_project(df: DataFrame, known_keys: list[str]) -> DataFrame:
+    """``fields`` map → one column per known key + EXTRA_KEYS overflow.
 
     Overflow encoding matches the reference: ``k:v, `` concatenation
     (parse_kv.go:193).
     """
-    m = F.col(fields_col)
+    m = F.col("fields")
     known = F.array(*[F.lit(k) for k in known_keys])
     extra = F.map_filter(m, lambda k, _: ~F.array_contains(known, k))
     extra_str = F.concat_ws(
@@ -74,7 +72,7 @@ def shallow_project(
     # so the projection never emits duplicate names and no later
     # withColumn/partition value overwrites a parsed value (the reference
     # has no collision space — its output holds only parsed headers)
-    carried = [c for c in df.columns if c != fields_col]
+    carried = [c for c in df.columns if c != "fields"]
     taken = set(carried) | {EXTRA_KEYS_COL, *LAYOUT_COLS}
     cols = []
     for k in known_keys:

@@ -340,11 +340,11 @@ def json_flatten(texts: pd.Series) -> pd.Series:
 
 def parse_stage(
     df: DataFrame,
-    text_col: str = "text",
     kv_separator: str = KV_SEPARATOR_DEFAULT,
     kv_delimiter: str = KV_DELIMITER_DEFAULT,
 ) -> DataFrame:
-    """Append ``format`` + ``fields`` columns (the P1-P11 parse stage).
+    """Append ``format`` + ``fields`` columns parsed from ``text`` (the
+    P1-P11 parse stage).
 
     Spark hoists pandas UDFs out of ``when`` branches (ArrowEvalPython
     can't be conditional), so json_flatten executes for EVERY row — but
@@ -355,7 +355,7 @@ def parse_stage(
     and in the group-committed pipeline that doubles every group job's
     input stage — the masked single pass keeps one scan.)
     """
-    t = F.col(text_col)
+    t = F.col("text")
     df = df.withColumn("format", detect_format(t, kv_separator, kv_delimiter))
     fmt = F.col("format")
     is_json = fmt.isin("json", "json_multi")
@@ -377,11 +377,11 @@ def parse_stage(
     return df.withColumn("fields", F.coalesce(fields, empty))
 
 
-def explode_multi_json(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """LogBoost row semantics for {"Records":[...]} blobs: one output row
+def explode_multi_json(df: DataFrame) -> DataFrame:
+    """LogBoost row semantics for {"Records":[...]} ``text`` blobs: one output row
     per array element (parse_json_multi.go:163-320) — from_json +
     explode, no brace-balancing tokenizer needed."""
-    recs = F.from_json(F.col(text_col), "STRUCT<Records: ARRAY<STRING>>")
+    recs = F.from_json(F.col("text"), "STRUCT<Records: ARRAY<STRING>>")
     return (
         df.withColumn("_rec", F.explode(recs["Records"]))
         .withColumn("fields", json_flatten(F.col("_rec")))

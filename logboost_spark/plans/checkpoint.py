@@ -121,16 +121,14 @@ def _adaptive_partitions_per_group(
 
 
 def _recount(spark, target: str) -> dict:
-    """Per-sink counts of one group read back from its committed parquet
+    """Per-sink counts of one group read back from its written parquet
     (``sink`` is a partition column of the layout); zeros when the group
-    wrote no data files."""
+    wrote no data, i.e. ``target`` does not exist. A read-back that fails
+    raises, so the group is not committed and is redone on resume."""
     per = {f"rows_{s}": 0 for s in SINKS}
-    try:
-        agg = spark.read.parquet(target).groupBy("sink").count().collect()
-    except Exception:
-        return {"rows": 0, **per}
-    for r in agg:
-        per[f"rows_{r['sink']}"] = int(r["count"])
+    if os.path.isdir(target):
+        for r in spark.read.parquet(target).groupBy("sink").count().collect():
+            per[f"rows_{r['sink']}"] = int(r["count"])
     return {"rows": sum(per.values()), **per}
 
 
@@ -216,7 +214,8 @@ def commit_chunk(
         # raises the same way for a chunk whose data WAS written, and
         # blindly zero-filling would corrupt sink_counts downstream.
         # Recount from the parquet just written: exact, and only ever
-        # paid on this exceptional path.
+        # paid on this exceptional path. A recount that cannot read the
+        # data raises before any manifest of the chunk is written.
         metrics = {
             g: _recount(sub.sparkSession, os.path.join(data_dir, f"group={g}"))
             for g in chunk

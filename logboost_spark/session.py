@@ -57,14 +57,18 @@ _DEFAULTS = {
     # so turn constraint propagation off.
     "spark.sql.constraintPropagation.enabled": "false",
     # Dynamic partition pruning's probe (PartitionPruning.trimAliases)
-    # recursively INLINES every projection alias below a join when a
-    # partitioned scan is in the plan — exponential on the staged
-    # extraction alias chain (thread-dumped: driver pinned >7 min in
-    # trimAliases on a 3000-row input once the broadcast joins sat above
-    # the cgroup-partitioned scan without a lineage barrier). DPP can
-    # never fire for this engine: the commit-group partition column is
-    # never a join key (lookups join on _join_ip/_join_v4), so the rule
-    # is pure planning cost here.
+    # recursively INLINES every projection alias below a join —
+    # exponential on the staged extraction alias chain (thread-dumped:
+    # driver pinned >7 min in trimAliases on a 3000-row input). Any plan
+    # with the extraction chain below the broadcast joins pays it, batch
+    # or stream: the scan need not be partitioned, and the salted
+    # exchange between extraction and joins is no barrier (measured on
+    # 4 cores with the rule on vs off, warm: run_pipeline over the
+    # unpartitioned sf0.01 parquet 266 s vs 12 s, the stream gate
+    # t_stream_pipeline 67 s vs 6 s, and out of heap with the rule on in
+    # a 2g driver). DPP can never fire for this engine: the commit-group
+    # partition column is never a join key (lookups join on
+    # _join_ip/_join_v4), so the rule is pure planning cost here.
     "spark.sql.optimizer.dynamicPartitionPruning.enabled": "false",
 }
 
@@ -105,24 +109,22 @@ def default_driver_memory() -> str:
 def get_spark(
     app_name: str = "logboost_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session.
+    """Build (or fetch) the session; ``extra_conf`` entries override the
+    defaults.
 
     ``cores`` defaults to :func:`default_cores`, the driver heap to
-    :func:`default_driver_memory`. ``shuffle_partitions`` defaults to 2×
-    cores — on a real cluster you would size this to total-cores × 2-3
+    :func:`default_driver_memory`. Shuffle partitions are 2× cores (at
+    least 8) — on a real cluster you would size this to total-cores × 2-3
     and let AQE coalesce.
     """
     if cores is None:
         cores = default_cores()
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(2 * cores, 8)))
         .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in _DEFAULTS.items():

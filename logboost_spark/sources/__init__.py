@@ -1,3 +1,3 @@
 """Input connectors (S1-S6): file-format readers with reference options."""
 
-from .readers import read_csv, read_jsonl, read_multiline_json, read_text  # noqa: F401
+from .readers import read_csv, read_multiline_json, read_text  # noqa: F401

@@ -34,14 +34,10 @@ def read_text(spark, path: str) -> DataFrame:
     return spark.read.text(path).withColumnRenamed("value", "line")
 
 
-def read_jsonl(spark, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).json(path)
-
-
-def read_multiline_json(spark, path: str, records_field: str = "Records") -> DataFrame:
+def read_multiline_json(spark, path: str) -> DataFrame:
     """CloudTrail-style {"Records":[...]} → one row per record."""
     df = spark.read.option("multiLine", "true").json(path)
-    return df.select(F.explode(F.col(records_field)).alias("record")).select("record.*")
+    return df.select(F.explode(F.col("Records")).alias("record")).select("record.*")
 
 
 def read_iis_w3c(spark, path: str) -> DataFrame:
@@ -79,9 +75,7 @@ def read_iis_w3c(spark, path: str) -> DataFrame:
 LOG_EXTS = (".csv", ".log", ".txt")
 
 
-def find_logs_to_process(
-    input_dir: str, getall: bool = False, exts: tuple[str, ...] = LOG_EXTS
-) -> list[str]:
+def find_logs_to_process(input_dir: str, getall: bool = False) -> list[str]:
     """Recursive log-file discovery (reference main.go:144-171): walk the
     tree collecting files whose extension is .csv/.log/.txt — their .gz
     variants included (Spark reads gzip transparently, S2) — and with
@@ -93,7 +87,7 @@ def find_logs_to_process(
     for root, _dirs, files in os.walk(input_dir):
         for fn in files:
             base = fn[:-3] if fn.endswith(".gz") else fn
-            if getall or base.lower().endswith(tuple(exts)):
+            if getall or base.lower().endswith(LOG_EXTS):
                 out.append(os.path.join(root, fn))
     return sorted(out)
 

@@ -175,6 +175,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.stream and args.input_format != "parquet":
         print("--stream requires --input-format parquet", file=sys.stderr)
         return 2
+    if args.groups < 1:
+        print("--groups must be at least 1", file=sys.stderr)
+        return 2
     if args.fullparse and (args.stream or args.no_parse):
         # fail loudly instead of silently writing the fields-map schema
         # the user asked to have projected away (round-6 self-review)

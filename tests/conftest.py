@@ -10,7 +10,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from logboost_spark.session import get_spark
 
-    return get_spark(app_name="logboost_tests", cores=8, shuffle_partitions=8)
+    return get_spark(
+        app_name="logboost_tests",
+        cores=8,
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
 
 
 @pytest.fixture(scope="session")

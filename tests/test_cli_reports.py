@@ -21,6 +21,20 @@ def test_cli_requires_input_output(capsys):
     assert M.main(["--input", "/nonexistent"]) == 2
 
 
+@pytest.mark.parametrize("groups", ["0", "-2"])
+@pytest.mark.parametrize("group_col", [[], ["--group-col", "grp"]])
+def test_cli_rejects_groups_below_one(tmp_path, capsys, groups, group_col):
+    """No commit group to write: rc 2 with a message, nothing written."""
+    from logboost_spark.fixtures.transcripts import fixture_path
+
+    out = tmp_path / "out"
+    argv = ["--input", fixture_path("sf0.001"), "--output", str(out),
+            "--groups", groups, *group_col]
+    assert M.main(argv) == 2
+    assert "--groups" in capsys.readouterr().err
+    assert not out.exists()
+
+
 def test_cli_ip_echo(spark, capsys):
     """--ip runs the pipeline's F2 extraction on the literal and echoes
     the result (reference main.go:588-598)."""

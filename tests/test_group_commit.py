@@ -2,14 +2,22 @@
 or between the two manifests of a chunk, resumes to exactly the output of
 an uninterrupted run; readers see committed groups only; every write
 task holds one commit group, and a chunk job's tasks fill the cluster
-once."""
+once. A lost observation is recounted from the written data, and a
+recount that cannot read it commits nothing. A CLI process killed
+mid-write resumes on another core count."""
 
 import glob
 import json
 import os
 import shutil
+import signal
+import subprocess
+import sys
+import time
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Observation
 
 from logboost_spark.fixtures import transcripts as TR
 from logboost_spark.plans import checkpoint
@@ -17,6 +25,7 @@ from logboost_spark.plans.checkpoint import committed_groups, read_sinks, sink_c
 from logboost_spark.plans.pipeline import run_pipeline
 
 N_GROUPS = 4
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(spark, sdf, lookups, out, resume=False, n_groups=N_GROUPS):
@@ -51,6 +60,27 @@ def _snapshot(spark, out):
     ]
     assert len(rows) == len(set(rows)), "a turn was written twice"
     return sink_counts(spark, out), set(rows)
+
+
+def _manifest_counts(out):
+    """{group: the row counts of its manifest}."""
+    counts = {}
+    for path in glob.glob(os.path.join(out, checkpoint.MANIFEST_DIR, "*.json")):
+        with open(path) as f:
+            entry = json.load(f)
+        counts[entry["group"]] = {k: v for k, v in entry.items() if k.startswith("rows")}
+    return counts
+
+
+def _lose_observation(monkeypatch, before=lambda: None):
+    """Make every ``Observation.get`` fail after running ``before``, so
+    commit_chunk recounts each chunk from the parquet it just wrote."""
+
+    def get(self):
+        before()
+        raise AssertionError("observation lost")
+
+    monkeypatch.setattr(Observation, "get", property(get))
 
 
 @pytest.fixture(scope="module")
@@ -191,3 +221,82 @@ def test_kill_between_manifests_of_a_chunk_then_resume(spark, lookups, source, r
     redo = _run(spark, source, lookups, out, resume=True)
     assert [m["group"] for m in redo] == [1, 2, 3]
     assert _snapshot(spark, out) == reference[1]
+
+
+def test_lost_observation_recounts_to_the_observed_manifests(spark, lookups, source, reference, tmp_path, monkeypatch):
+    """Every chunk's observation fails after its data landed: the
+    recount from the written parquet commits the same manifest counts as
+    the observed run."""
+    out = str(tmp_path / "sinks")
+    _lose_observation(monkeypatch)
+    _run(spark, source, lookups, out)
+    monkeypatch.undo()
+    assert _manifest_counts(out) == _manifest_counts(reference[0])
+    assert _snapshot(spark, out) == reference[1]
+
+
+def test_unreadable_recount_leaves_the_chunk_uncommitted(spark, lookups, source, reference, tmp_path, monkeypatch):
+    """The first chunk's observation fails and a part file of group 0
+    is truncated: the recount cannot read group 0, so the run raises
+    with no group committed (not a manifest of zero rows), and resume
+    redoes every group to the uninterrupted result."""
+    out = str(tmp_path / "sinks")
+
+    def truncate_group_0():
+        parts = glob.glob(os.path.join(out, "data", "group=0", "sink=*", "*.parquet"))
+        with open(sorted(parts)[0], "r+b") as f:
+            f.truncate(8)
+
+    _lose_observation(monkeypatch, truncate_group_0)
+    with pytest.raises(Py4JJavaError, match="is not a Parquet file"):
+        _run(spark, source, lookups, out)
+    monkeypatch.undo()
+    assert committed_groups(out) == set()
+
+    redo = _run(spark, source, lookups, out, resume=True)
+    assert [m["group"] for m in redo] == list(range(N_GROUPS))
+    assert _snapshot(spark, out) == reference[1]
+
+
+def test_cli_killed_mid_write_resumes_on_another_core_count(spark, tmp_path):
+    """``main.py`` is SIGKILLed, with its JVM and Python workers, while a
+    chunk job writes and after at least one group committed; a
+    ``--resume`` run on 2 cores then gives the output of an uninterrupted
+    run."""
+    import main as M
+
+    argv = [
+        "--input", os.path.join(ROOT, "data", "transcripts_sf0.01.parquet"),
+        "--groups", "8", "--no-whois", "--no-idb",
+    ]
+    out = str(tmp_path / "killed")
+    manifests = os.path.join(out, checkpoint.MANIFEST_DIR)
+    cli = [sys.executable, os.path.join(ROOT, "main.py"), *argv, "--output", out]
+    with open(tmp_path / "killed.log", "w") as log:
+        proc = subprocess.Popen(
+            cli, stdout=log, stderr=subprocess.STDOUT, start_new_session=True
+        )
+        try:
+            deadline = time.time() + 600
+            while not (
+                glob.glob(os.path.join(manifests, "*.json"))
+                and os.path.isdir(os.path.join(out, "data", "_temporary"))
+            ):
+                assert proc.poll() is None, "the run ended before the kill"
+                assert time.time() < deadline, "no chunk write seen in time"
+                time.sleep(0.02)
+        finally:
+            os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait()
+    assert 1 <= len(committed_groups(out)) < 8
+
+    with open(tmp_path / "resumed.log", "w") as log:
+        subprocess.run(
+            [*cli, "--resume", "--cores", "2"],
+            stdout=log, stderr=subprocess.STDOUT, check=True, timeout=900,
+        )
+    assert committed_groups(out) == set(range(8))
+
+    ref = str(tmp_path / "uninterrupted")
+    assert M.main([*argv, "--output", ref]) == 0
+    assert _snapshot(spark, out) == _snapshot(spark, ref)
