@@ -31,6 +31,9 @@ from .functions.textfns import (
     whitespace_token_count,
 )
 from .operators.dedup import (
+    DECONTAMINATE_N,
+    SHINGLE_N,
+    SIMHASH_BITS,
     exact_dedup,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -193,6 +196,50 @@ def t_stream_pipeline(spark, sf_dir):
 #: uniquifier for memory-sink table names (gates can run repeatedly
 #: in one process)
 _STREAM_GATE_SEQ = [0]
+_EVENTS_DDL = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+    "value double, props string"
+)
+
+
+def _events_stream(spark, sf_dir: str, prefix: str) -> DataFrame:
+    """The events fixture as a file stream, plus one far-future sentinel
+    event (user_id -1, event_type 'sentinel'): it advances the watermark
+    past every real event, so event-time state (open sessions, windows)
+    is emitted before an availableNow drain stops. The gates drop the
+    sentinel's own output."""
+    import datetime as dt
+    import shutil
+
+    src_dir = _gate_tmp(prefix)
+    shutil.copy(
+        os.path.join(sf_dir, "events.parquet"),
+        os.path.join(src_dir, "events.parquet"),
+    )
+    spark.createDataFrame(
+        [(999999, dt.datetime(2030, 1, 1), -1, "sentinel", 0.0, "{}")], _EVENTS_DDL
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(src_dir, "zz_sentinel"))
+    return (
+        spark.readStream.schema(_EVENTS_DDL)
+        .option("recursiveFileLookup", "true")
+        .parquet(src_dir)
+    )
+
+
+def _drain(stream: DataFrame, prefix: str) -> DataFrame:
+    """Drain ``stream`` (availableNow, append mode) into a fresh memory
+    table and return that table."""
+    _STREAM_GATE_SEQ[0] += 1
+    name = f"{prefix}_{_STREAM_GATE_SEQ[0]}"
+    (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return stream.sparkSession.table(name)
 
 
 def t_stream_sessionize(spark, sf_dir):
@@ -204,42 +251,11 @@ def t_stream_sessionize(spark, sf_dir):
     sessionization — a full rows+schema+hash gate for stateful
     streaming. Session bounds emitted as epoch micros (cross-engine
     timestamp stringification is not hash-stable)."""
-    import datetime as dt
-    import shutil
-
     from .plans.streaming import stream_sessionize
 
-    src_dir = _gate_tmp("lb_stream_sess_")
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    spark.createDataFrame(
-        [(999999, dt.datetime(2030, 1, 1), -1, "sentinel", 0.0, "{}")],
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(src_dir, "zz_sentinel"))
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-            "value double, props string"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    _STREAM_GATE_SEQ[0] += 1
-    name = f"lb_sessions_{_STREAM_GATE_SEQ[0]}"
-    q = (
-        stream_sessionize(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _events_stream(spark, sf_dir, "lb_stream_sess_")
     return (
-        spark.table(name)
+        _drain(stream_sessionize(stream), "lb_sessions")
         .filter(F.col("user_id") != -1)
         .select(
             "user_id",
@@ -279,18 +295,8 @@ def t_stream_exact_dedup(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    _STREAM_GATE_SEQ[0] += 1
-    name = f"lb_stream_dedup_{_STREAM_GATE_SEQ[0]}"
-    q = (
-        stream_exact_dedup(stream, "text", "ts", "30 days")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(F.md5("text").alias("h"))
+    deduped = _drain(stream_exact_dedup(stream, "30 days"), "lb_stream_dedup")
+    return deduped.select(F.md5("text").alias("h"))
 
 
 def t_stream_windowed_counts(spark, sf_dir):
@@ -303,43 +309,14 @@ def t_stream_windowed_counts(spark, sf_dir):
     window stays open and never emits. Window bounds returned as epoch
     micros. Oracle = the equivalent batch tumbling-window aggregate with
     explicit epoch-floor bucket math (engine-neutral alignment)."""
-    import datetime as dt
-    import shutil
-
     from .plans.streaming import stream_windowed_counts
 
-    src_dir = _gate_tmp("lb_stream_wc_")
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
+    routed = _events_stream(spark, sf_dir, "lb_stream_wc_").withColumn(
+        "sink", F.col("event_type")
     )
-    spark.createDataFrame(
-        [(999999, dt.datetime(2030, 1, 1), -1, "sentinel", 0.0, "{}")],
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(src_dir, "zz_sentinel"))
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-            "value double, props string"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    routed = stream.withColumn("sink", F.col("event_type"))
-    _STREAM_GATE_SEQ[0] += 1
-    name = f"lb_stream_wc_{_STREAM_GATE_SEQ[0]}"
-    q = (
-        stream_windowed_counts(routed, window="15 minutes", watermark="30 minutes")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    counts = stream_windowed_counts(routed, window="15 minutes", watermark="30 minutes")
     return (
-        spark.table(name)
+        _drain(counts, "lb_stream_wc")
         .filter(F.col("sink") != "sentinel")
         .select(
             F.unix_micros("window_start").alias("ws_us"),
@@ -1067,7 +1044,7 @@ def doc_minhash_lsh(spark, sf_dir):
     star-edge candidates, exact-Jaccard verify at 0.8 — the production
     near-dup path (selective banding: S-curve midpoint ≈ 0.77)."""
     return minhash_lsh_pairs(
-        _t_par(spark, sf_dir, "documents"), k=64, bands=8, ngram=2, threshold=0.8
+        _t_par(spark, sf_dir, "documents"), k=64, bands=8, threshold=0.8
     )
 
 
@@ -1079,7 +1056,7 @@ def doc_dup_clusters(spark, sf_dir):
     from .operators.dedup import near_dup_clusters
 
     pairs = minhash_lsh_pairs(
-        _t_par(spark, sf_dir, "documents"), k=64, bands=8, ngram=2, threshold=0.8
+        _t_par(spark, sf_dir, "documents"), k=64, bands=8, threshold=0.8
     )
     return near_dup_clusters(pairs)
 
@@ -1092,7 +1069,7 @@ def doc_dedup_apply(spark, sf_dir):
     from .operators.sampling import apply_dedup
 
     docs = _t_par(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, k=64, bands=8, ngram=2, threshold=0.8)
+    pairs = minhash_lsh_pairs(docs, k=64, bands=8, threshold=0.8)
     clusters = near_dup_clusters(pairs)
     return apply_dedup(docs, clusters).select("doc_id")
 
@@ -1103,7 +1080,7 @@ def doc_sample_hash(spark, sf_dir):
     map-side filter (no RNG, no shuffle: the 100 TB sampling shape)."""
     from .operators.sampling import hash_sample
 
-    return hash_sample(_t(spark, sf_dir, "documents"), "doc_id", 10.0).select("doc_id")
+    return hash_sample(_t(spark, sf_dir, "documents"), 10.0).select("doc_id")
 
 
 def doc_split_assign(spark, sf_dir):
@@ -1112,7 +1089,7 @@ def doc_split_assign(spark, sf_dir):
     corpus split consistently."""
     from .operators.sampling import split_assign
 
-    return split_assign(_t(spark, sf_dir, "documents"), "doc_id").select(
+    return split_assign(_t(spark, sf_dir, "documents")).select(
         "doc_id", "split"
     )
 
@@ -1125,7 +1102,7 @@ def doc_group_capped(spark, sf_dir):
     from .operators.sampling import group_capped_sample
 
     return group_capped_sample(
-        _t(spark, sf_dir, "documents"), "lang", "doc_id", cap=30
+        _t(spark, sf_dir, "documents"), "lang", cap=30
     ).select("doc_id", "lang")
 
 
@@ -1173,7 +1150,7 @@ def doc_decontaminate(spark, sf_dir):
     d = _t_par(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 50 == 0)
     corpus = d.filter(F.col("doc_id") % 50 != 0)
-    return decontaminate(corpus, bench, n=3)
+    return decontaminate(corpus, bench)
 
 
 def doc_pack_sequences(spark, sf_dir):
@@ -1266,14 +1243,14 @@ def doc_vocab_topk(spark, sf_dir):
 
 
 def doc_simhash(spark, sf_dir):
-    return simhash(_t_par(spark, sf_dir, "documents"), bits=32)
+    return simhash(_t_par(spark, sf_dir, "documents"))
 
 
 def doc_ngram_jaccard(spark, sf_dir):
     """Exact bigram-Jaccard join over the full table, hot shingles
     df-capped (bounded inverted-index join)."""
     d = _t_par(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(d, threshold=0.6, n=2, df_cap=100)
+    return ngram_jaccard_pairs(d, threshold=0.6, df_cap=100)
 
 
 # ===========================================================================
@@ -1512,7 +1489,8 @@ FROM k, unnest(range(0, kmax + 1)) t(u)"""
 
 
 def _lm_score_sql() -> str:
-    """Oracle mirror of functions.textfns.bpe_lm_score: same literal
+    """Oracle mirror of functions.textfns.bpe_lm_score_from_encoded over
+    bpe_encode (the doc_lm_score gate): same literal
     log-prob doubles, same sequential list fold, same NULL-for-empty.
     Values cast ::DOUBLE[] — bare SQL literals would become DECIMAL."""
     from .fixtures.bpe_vocab import TOKEN_LOGPROB, UNK_LOGPROB
@@ -1556,6 +1534,7 @@ FROM x GROUP BY source"""
 
 def build_oracles(sf: str = "sf0.01") -> dict[str, str]:
     from .functions.ip import IPV4_RE as IPV4_FOR_SQL
+    from .plans.streaming import SESSION_GAP_MINUTES
 
     mh = X.minhash_select_terms("hv", 8)
     P = MERSENNE_P
@@ -1590,17 +1569,17 @@ def build_oracles(sf: str = "sf0.01") -> dict[str, str]:
     _emb_path = f"/root/testdata/{sf}/embeddings.parquet"
     cb_ivf = sampled_codebook(_emb_path, 16) if os.path.exists(_emb_path) else None
 
-    # doc_minhash_lsh: 2-gram shingles, k=128 signatures, 16 bands × r=8
+    # doc_minhash_lsh: SHINGLE_N-gram shingles, k=64 signatures, 8 bands × r=8
     LSH_K, LSH_BANDS, LSH_THR = 64, 8, 0.8
-    sh2 = X.sql_shingles("text", 2)
+    sh2 = X.sql_shingles("text", SHINGLE_N)
     mh_lsh = X.minhash_select_terms("hv", LSH_K)
     lsh_band_union = X.minhash_band_union_sql(LSH_K, LSH_BANDS)
 
     simhash_votes = ", ".join(
-        f"sum(CASE WHEN (hv >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v{j}" for j in range(32)
+        f"sum(CASE WHEN (hv >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v{j}" for j in range(SIMHASH_BITS)
     )
     simhash_sum = " + ".join(
-        f"CASE WHEN v{j} > 0 THEN CAST({2 ** j} AS BIGINT) ELSE 0 END" for j in range(32)
+        f"CASE WHEN v{j} > 0 THEN CAST({2 ** j} AS BIGINT) ELSE 0 END" for j in range(SIMHASH_BITS)
     )
 
     # ANN oracle SQL factored to locals so the recall gates can compose
@@ -1687,11 +1666,11 @@ SELECT CAST(floor(epoch(ts)/900) AS BIGINT) * 900000000 AS ws_us,
        (CAST(floor(epoch(ts)/900) AS BIGINT) + 1) * 900000000 AS we_us,
        event_type AS sink, count(*) AS n_rows
 FROM events GROUP BY 1,2,3""",
-        "t_stream_sessionize": """
+        "t_stream_sessionize": f"""
 WITH o AS (
   SELECT user_id, ts,
     CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
+              OR epoch(ts) - epoch(lag(ts) OVER w) > {SESSION_GAP_MINUTES * 60}
          THEN 1 ELSE 0 END AS ns
   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
 s AS (SELECT user_id, ts,
@@ -1975,10 +1954,10 @@ FROM documents""",
         "doc_bpe_scalable_2k": (lambda c: f"WITH {c[0]}\nSELECT doc_id, n_chars, CAST(length(t) AS BIGINT) AS n_tokens FROM {c[1]}")(_bpe_ctes(merges=_merges_2k())),
         "doc_decontaminate": f"""
 WITH bench AS (
-  SELECT DISTINCT unnest({X.sql_shingles('text', 3)}) AS _g
+  SELECT DISTINCT unnest({X.sql_shingles('text', DECONTAMINATE_N)}) AS _g
   FROM documents WHERE doc_id % 50 = 0),
 corp AS (
-  SELECT doc_id, unnest({X.sql_shingles('text', 3)}) AS _g
+  SELECT doc_id, unnest({X.sql_shingles('text', DECONTAMINATE_N)}) AS _g
   FROM documents WHERE doc_id % 50 <> 0),
 h AS (SELECT corp.doc_id, corp._g FROM corp JOIN bench USING (_g))
 SELECT doc_id, count(*) AS hit_shingles, min(_g) AS example_shingle

@@ -174,31 +174,14 @@ def _make_str_encoder(merges):
     return lambda s: _bpe_encode_str(s, ranks)
 
 
-def make_bpe_encode_udf():
-    """Arrow-batched scalar pandas UDF applying the fixture-vocabulary
-    learned-BPE encoder (replace chain at fixture/2k vocab sizes,
-    priority-queue heap for production vocabularies — identical output,
-    see _make_str_encoder). The merge table rides the task closure;
-    :func:`make_bpe_token_count_udf` takes a larger table (e.g. the
-    2k-merge JSON under data/lookups/)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    from ..fixtures.bpe_vocab import MERGES
-
-    enc = _make_str_encoder(MERGES)
-
-    @pandas_udf(T.StringType())
-    def _enc(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda s: None if s is None else enc(s))
-
-    return _enc
-
-
 def make_bpe_token_count_udf(merges=None):
-    """Like :func:`make_bpe_encode_udf` but returns the token count
-    directly (avoids shipping the encoded string back through Arrow
-    when only the count is needed)."""
+    """Arrow-batched scalar pandas UDF counting the learned-BPE tokens of
+    each text: the fixture vocabulary by default, or ``merges`` (e.g. the
+    2k-merge JSON under data/lookups/). The encoder is the replace chain
+    at fixture/2k vocab sizes and the priority-queue heap for production
+    vocabularies — identical output, see :func:`_make_str_encoder`. The
+    merge table rides the task closure; only the count comes back
+    through Arrow."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -222,26 +205,21 @@ def load_merges_json(path: str) -> list:
     return [tuple(m) for m in obj["merges"]]
 
 
-def bpe_lm_score(text: Column) -> Column:
-    """CCNet-style perplexity-filter signal (Wenzek et al. 2019,
-    arXiv:1911.00359): mean unigram log-prob of the doc's BPE tokens
-    under the training-corpus LM (fixtures/bpe_vocab.TOKEN_LOGPROB,
-    Laplace add-1; unseen symbols get UNK_LOGPROB). Higher = more
-    in-domain; filter the low tail. Entirely JVM-side: encode is the
-    replace chain, the log-prob table is a constant-foldable literal
-    map, and the fold over tokens is a sequential array aggregate —
-    bit-identical to the DuckDB oracle's list_aggregate fold. Empty
-    docs score NULL.
-
-    When the caller ALSO needs the token count, stage ``bpe_encode``
-    into a column once and use :func:`bpe_lm_score_from_encoded` +
-    ``F.length`` — inlining both ran the ~190-pass replace chain twice
-    per row (Catalyst does not CSE across aggregate expressions)."""
-    return bpe_lm_score_from_encoded(bpe_encode(text))
-
-
 def bpe_lm_score_from_encoded(enc: Column) -> Column:
-    """:func:`bpe_lm_score` over an already-encoded symbol string."""
+    """CCNet-style perplexity-filter signal (Wenzek et al. 2019,
+    arXiv:1911.00359) over a ``bpe_encode``-d symbol string: mean
+    unigram log-prob of the doc's BPE tokens under the training-corpus
+    LM (fixtures/bpe_vocab.TOKEN_LOGPROB, Laplace add-1; unseen symbols
+    get UNK_LOGPROB). Higher = more in-domain; filter the low tail.
+    Entirely JVM-side: encode is the replace chain, the log-prob table
+    is a constant-foldable literal map, and the fold over tokens is a
+    sequential array aggregate — bit-identical to the DuckDB oracle's
+    list_aggregate fold. Empty docs score NULL.
+
+    Stage ``bpe_encode`` into a column once when the token count
+    (``F.length``) is needed too: inlining both ran the ~190-pass
+    replace chain twice per row (Catalyst does not CSE across aggregate
+    expressions)."""
     from ..fixtures.bpe_vocab import TOKEN_LOGPROB, UNK_LOGPROB
 
     toks = F.split(enc, "")

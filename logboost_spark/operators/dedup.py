@@ -38,11 +38,17 @@ from pyspark.sql import functions as F
 from ..functions.hashing import MERSENNE_P, md5_long, minhash_params
 
 MAX_LABEL_ROUNDS = 20
+#: word n-gram size of the near-dup shingles (MinHash-LSH, n-gram Jaccard)
+SHINGLE_N = 2
+#: word n-gram size of decontamination collisions; GPT-3 (appendix C)
+#: used 8-13-grams on real text, the fixture's tiny-vocab word salad
+#: needs 3 to show real overlap
+DECONTAMINATE_N = 3
+SIMHASH_BITS = 32
 
 
-def tokens(col, distinct: bool = True):
-    t = F.split(F.lower(F.trim(col)), r"\s+")
-    return F.array_distinct(t) if distinct else t
+def tokens(col):
+    return F.split(F.lower(F.trim(col)), r"\s+")
 
 
 def shingles_of_tokens(toks, n: int):
@@ -79,14 +85,8 @@ def shingles_of_tokens(toks, n: int):
 def with_shingles(df: DataFrame, n: int, out: str) -> DataFrame:
     """Append a shingle-array column of ``text`` via a staged token
     attribute."""
-    df = df.withColumn("_toks", tokens(F.col("text"), distinct=False))
+    df = df.withColumn("_toks", tokens(F.col("text")))
     return df.withColumn(out, shingles_of_tokens(F.col("_toks"), n)).drop("_toks")
-
-
-def shingles(col, n: int):
-    """Shingles directly from a text column — ONLY for tiny inputs/tests;
-    hot paths must stage tokens first (see shingles_of_tokens)."""
-    return shingles_of_tokens(tokens(col, distinct=False), n)
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -160,11 +160,10 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     k: int = 64,
     bands: int = 8,
-    ngram: int = 2,
     threshold: float | None = 0.8,
 ) -> DataFrame:
-    """Near-dup pairs via MinHash banding, star-edge candidates, and an
-    exact-Jaccard verify stage.
+    """Near-dup pairs via MinHash banding over word ``SHINGLE_N``-gram
+    shingles, star-edge candidates, and an exact-Jaccard verify stage.
 
     Candidate generation emits one edge per (bucket member, bucket
     representative=min id) — LINEAR in bucket size, so a degenerate hot
@@ -181,7 +180,7 @@ def minhash_lsh_pairs(
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b guaranteed by the
     min-representative construction.
     """
-    sig = minhash_signatures(docs, k, ngram)
+    sig = minhash_signatures(docs, k, SHINGLE_N)
     exploded = minhash_band_buckets(sig, k, bands)
     # Two-level min instead of min-over-window: groupBy combines MAP-SIDE
     # (only per-task partial mins shuffle), and the join-back is a real
@@ -218,7 +217,7 @@ def minhash_lsh_pairs(
     # and auto-broadcast here would serialize the whole shingle
     # recomputation into ONE broadcast-build task (measured 2×+ of the
     # query); the shuffle join keeps it parallel and scale-shaped.
-    sh = with_shingles(docs_cand, ngram, out="_sh").select("doc_id", "_sh").hint("shuffle_hash")
+    sh = with_shingles(docs_cand, SHINGLE_N, out="_sh").select("doc_id", "_sh").hint("shuffle_hash")
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sha"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_shb"))
     jac = F.size(F.array_intersect("_sha", "_shb")) / F.size(F.array_union("_sha", "_shb"))
@@ -231,18 +230,19 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
-    """SimHash fingerprint: per-bit majority vote of token hashes."""
+def simhash(docs: DataFrame) -> DataFrame:
+    """``SIMHASH_BITS``-bit SimHash fingerprint: per-bit majority vote of
+    token hashes."""
     th = _element_hashes(docs)
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("_hv"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"_v{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     agg = th.groupBy("doc_id").agg(*votes)
     sh = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(F.col(f"_v{j}") > 0, F.lit(2 ** j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         sh = term if sh is None else sh + term
     return agg.select(F.col("doc_id"), sh.alias("simhash"))
@@ -251,10 +251,10 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.6,
-    n: int = 2,
     df_cap: int | None = None,
 ) -> DataFrame:
-    """Exact token-n-gram Jaccard similarity join via inverted index.
+    """Exact word ``SHINGLE_N``-gram Jaccard similarity join via inverted
+    index.
 
     |A∩B| from the shingle-share counts, |A∪B| = |A|+|B|-|A∩B|. The
     shingle join is the shuffle; frequent shingles are the skew risk.
@@ -267,7 +267,7 @@ def ngram_jaccard_pairs(
     # explode_outer + not-null output filter: see _element_hashes — keeps
     # the inferred Generate filter from re-inlining the shingle build
     sh = (
-        with_shingles(docs, n, out="_grams")
+        with_shingles(docs, SHINGLE_N, out="_grams")
         .select(F.col("doc_id"), F.explode_outer(F.col("_grams")).alias("g"))
         .filter(F.col("g").isNotNull())
     )
@@ -302,16 +302,11 @@ def ngram_jaccard_pairs(
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing ANY word
-    n-gram with an evaluation/benchmark set — the standard pretraining
-    decontamination pass (GPT-3 appendix C / Dodge et al. 2021 use
-    8-13-gram collision; tests use smaller n because the fixture corpus
-    is a tiny-vocab word salad).
+    ``DECONTAMINATE_N``-gram with an evaluation/benchmark set — the
+    standard pretraining decontamination pass (GPT-3 appendix C / Dodge
+    et al. 2021).
 
     Returns one row per CONTAMINATED corpus doc: (id, hit_shingles =
     distinct colliding n-grams, example_shingle = lexicographically
@@ -330,12 +325,12 @@ def decontaminate(
     # null rows anyway, so semantics are identical and shingles are
     # built once per row (verified in the physical plan).
     bs = F.broadcast(
-        with_shingles(benchmark, n, out="_sh")
+        with_shingles(benchmark, DECONTAMINATE_N, out="_sh")
         .select(F.explode_outer("_sh").alias("_g"))
         .filter(F.col("_g").isNotNull())
         .distinct()
     )
-    cs = with_shingles(corpus, n, out="_sh").select(
+    cs = with_shingles(corpus, DECONTAMINATE_N, out="_sh").select(
         F.col("doc_id"), F.explode_outer("_sh").alias("_g")
     )
     return (

@@ -26,25 +26,22 @@ def _key_hash(id_col: Column, salt: str, mod: int) -> Column:
     return F.pmod(md5_long(F.concat(F.lit(salt), id_col.cast("string"))), F.lit(mod))
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, rate_pct: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep rows whose salted key hash falls in the lowest ``rate_pct``%
-    of 10k buckets. Deterministic (same keys survive every run and every
-    engine), stable under repartitioning, and a different ``salt`` draws
-    an independent sample. Map-side filter only."""
-    return df.filter(_key_hash(F.col(id_col), salt, 10_000) < int(rate_pct * 100))
+def hash_sample(df: DataFrame, rate_pct: float, salt: str = "sample") -> DataFrame:
+    """Keep rows whose salted ``doc_id`` hash falls in the lowest
+    ``rate_pct``% of 10k buckets. Deterministic (same keys survive every
+    run and every engine), stable under repartitioning, and a different
+    ``salt`` draws an independent sample. Map-side filter only."""
+    return df.filter(_key_hash(F.col("doc_id"), salt, 10_000) < int(rate_pct * 100))
 
 
-def split_assign(df: DataFrame, id_col: str) -> DataFrame:
+def split_assign(df: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment into a ``split`` column:
-    the salted key hash mod the total weight of ``SPLITS`` picks the
-    split. Every row lands in exactly one
-    split (ranges partition [0, total)); membership is a pure function
-    of the key, so late-arriving shards of the same corpus split
-    consistently."""
+    the salted ``doc_id`` hash mod the total weight of ``SPLITS`` picks
+    the split. Every row lands in exactly one split (ranges partition
+    [0, total)); membership is a pure function of the key, so
+    late-arriving shards of the same corpus split consistently."""
     total = sum(w for _, w in SPLITS)
-    h = _key_hash(F.col(id_col), "split", total)
+    h = _key_hash(F.col("doc_id"), "split", total)
     expr = None
     acc = 0
     for name, w in SPLITS:
@@ -57,15 +54,15 @@ def split_assign(df: DataFrame, id_col: str) -> DataFrame:
 def group_capped_sample(
     df: DataFrame,
     group_col: str,
-    id_col: str,
     cap: int,
 ) -> DataFrame:
     """Cap each group's contribution at ~``cap`` rows (per-domain /
     per-language caps in web corpora), deterministically.
 
     Scale shape: per-group counts via partial-agg groupBy, broadcast-or-
-    shuffle joined back, then each row keeps iff its key hash falls in
-    the lowest cap/count fraction of the space — a map-side decision.
+    shuffle joined back, then each row keeps iff its ``doc_id`` hash
+    falls in the lowest cap/count fraction of the space — a map-side
+    decision.
     Groups at-or-under the cap pass through whole (no hashing jitter);
     over-cap groups keep cap rows IN EXPECTATION (binomial jitter ~√cap:
     the price of having no per-group ordering — an exact top-k-by-hash
@@ -74,7 +71,7 @@ def group_capped_sample(
     """
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gn"))
     joined = df.join(counts, group_col)
-    h = _key_hash(F.col(id_col), "gcap", 1_000_000)
+    h = _key_hash(F.col("doc_id"), "gcap", 1_000_000)
     # floor of IEEE double division — bit-identical in the DuckDB oracle
     # (a plain bigint cast would round there and truncate here)
     keep = (F.col("_gn") <= cap) | (

@@ -16,10 +16,10 @@ The second scale path is IVF (inverted-file) search: assign every
 corpus vector to its nearest codebook centroid (map-side, no shuffle),
 group the corpus into per-cell inverted lists, probe only the
 ``nprobe`` cells nearest each query, exact-rank the survivors. The
-gate query uses a deterministic random-direction codebook (same LCG as
-the hyperplanes) so the DuckDB oracle replays the assignment
-bit-for-bit; ``train_centroids_lloyd`` is the production trainer
-(distributed Lloyd iterations, centroids as broadcast literals).
+gate queries use ``sampled_codebook`` (the embeddings of the smallest
+ids, read driver-side), so the DuckDB oracle replays the assignment
+from the same float64 literals bit-for-bit; ``ivf_codebook`` is the
+zero-data random-direction baseline (same LCG as the hyperplanes).
 
 Recall on the driver fixture is measured and asserted in
 tests/test_similarity.py (random 64-dim data is the adversarial case —
@@ -136,8 +136,7 @@ def banded_signature_buckets(
 
 def ivf_codebook(n_cells: int, dim: int) -> list[list[float]]:
     """Deterministic random-direction codebook — the zero-data baseline
-    quantizer (plumbing tests); production uses ``sampled_codebook`` or
-    ``train_centroids_lloyd``."""
+    quantizer (plumbing tests); production uses ``sampled_codebook``."""
     return deterministic_planes(n_cells, dim, seed=7)
 
 
@@ -251,48 +250,6 @@ def cosine_topk_ivf(
         .filter(F.col("rk") <= k)
         .select("query_id", "neighbor_id", F.round("cos", 5).alias("cos"))
     )
-
-
-def train_centroids_lloyd(
-    corpus: DataFrame,
-    n_cells: int,
-    iters: int = 2,
-) -> list[list[float]]:
-    """Distributed Lloyd k-means for the IVF codebook.
-
-    Init = the embeddings of the n_cells smallest ids (deterministic
-    sample). Each iteration: assign every vector to its nearest current
-    centroid (map-side literal fold — the codebook is tiny and rides in
-    the plan; at larger n_cells×dim it would be a broadcast join), then
-    recompute each centroid as the element-wise mean of its members
-    (posexplode → groupBy(cell, pos) avg — one shuffle of slim
-    (cell, pos, val) rows per iteration). Empty cells keep their
-    previous centroid. Returns driver-side centroid lists usable as
-    ``cosine_topk_ivf(codebook=...)``."""
-    init_rows = (
-        corpus.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
-    )
-    cents = [[float(x) for x in r["embedding"]] for r in init_rows]
-    if len(cents) < n_cells:
-        raise ValueError(f"corpus has fewer than {n_cells} rows")
-    for _ in range(iters):
-        assigned = corpus.select(
-            assign_cell(F.col("embedding"), cents).alias("cell"),
-            F.posexplode(F.col("embedding")).alias("pos", "val"),
-        )
-        means = (
-            assigned.groupBy("cell", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.transform("pm", lambda st: st["m"]).alias("centroid"))
-            .collect()
-        )
-        new = list(cents)
-        for r in means:
-            new[r["cell"] - 1] = [float(x) for x in r["centroid"]]
-        cents = new
-    return cents
 
 
 def cosine_topk_lsh(

@@ -8,7 +8,9 @@ expanded IP-by-IP (IPNetGenerator, ipNetGen.go:22-69).
 
 Spark shape: read feed fixture text → one regexp extract → private
 filter → dropDuplicates → a (ip, feed_name, category) table. CIDR lists
-stay as intervals for the range join (expansion available for parity).
+are not expanded IP by IP: datacenter membership is the ``is_dc``
+column of the ``geo_merged`` interval table, probed by the broadcast
+range join (operators/geo_join.py).
 The SQLite star schema (ips/feeds/categories with integer FKs,
 threatIntel.go:195-206) collapses into the flat table — the dimension
 normalization bought SQLite disk savings, not semantics.
@@ -47,32 +49,13 @@ def ingest_intel_lines(
     )
 
 
-def build_ti_table(spark, feeds: list[tuple[str, str, DataFrame]]) -> DataFrame:
+def build_ti_table(feeds: list[tuple[str, str, DataFrame]]) -> DataFrame:
     """All feeds → the flat TI table (insert-or-ignore = dropDuplicates)."""
     from functools import reduce
 
     parts = [ingest_intel_lines(df, name, cat) for name, cat, df in feeds]
     return reduce(DataFrame.unionByName, parts).dropDuplicates(
         ["ip", "feed_name", "category"]
-    )
-
-
-def expand_cidr(intervals: DataFrame) -> DataFrame:
-    """CIDR interval → one row per IP (IPNetGenerator parity,
-    ipNetGen.go:59-69). Bounded explode — the reference pays ~129M rows
-    / 7 GB for the DC list (README.md:41); we keep intervals for joins
-    and expand only on demand."""
-    return intervals.withColumn(
-        "ip_long", F.explode(F.sequence(F.col("net_start"), F.col("net_end")))
-    ).withColumn(
-        "ip",
-        F.concat_ws(
-            ".",
-            F.shiftright("ip_long", 24).bitwiseAND(F.lit(255)),
-            F.shiftright("ip_long", 16).bitwiseAND(F.lit(255)),
-            F.shiftright("ip_long", 8).bitwiseAND(F.lit(255)),
-            F.col("ip_long").bitwiseAND(F.lit(255)),
-        ),
     )
 
 

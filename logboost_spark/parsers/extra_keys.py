@@ -17,13 +17,6 @@ from pyspark.sql import functions as F
 from ..semantics import EXTRA_KEYS_COL, LAYOUT_COLS
 
 
-def first_record_keys(df: DataFrame) -> list[str]:
-    """Shallow-mode schema: keys of the first record's ``fields``
-    (driver-side peek, the columnar analog of reading line 1)."""
-    row = df.select(F.map_keys(F.col("fields")).alias("k")).first()
-    return list(row.k) if row else []
-
-
 def deep_keys(df: DataFrame) -> list[str]:
     """Full-parse key union (-fullparse two-pass, helpers/helpers.go:55-57,
     parsers/parse_json.go:62, parse_kv.go:33-69, parse_cef.go:97-114):
@@ -39,15 +32,6 @@ def deep_keys(df: DataFrame) -> list[str]:
         ).alias("k")
     ).first()
     return sorted(row.k) if row and row.k else []
-
-
-def full_project(df: DataFrame) -> DataFrame:
-    """-fullparse projection: one column per key seen ANYWHERE in the
-    input (two passes: key-union aggregation, then projection — exactly
-    the reference's two file scans, helpers/helpers.go:55-57). No
-    EXTRA_KEYS overflow can remain, but the column is kept for schema
-    parity with shallow mode."""
-    return shallow_project(df, deep_keys(df))
 
 
 def shallow_project(df: DataFrame, known_keys: list[str]) -> DataFrame:

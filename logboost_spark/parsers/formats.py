@@ -325,8 +325,9 @@ def _flatten_one(s) -> dict | None:
         return None
     if not isinstance(obj, dict):
         return None
-    # multi-line JSON: take Records[0]'s flattening (the per-record
-    # explode variant lives in explode_multi_json below)
+    # multi-line JSON in one text cell: take Records[0]'s flattening
+    # (a {"Records":[...]} FILE gets one row per record from
+    # sources.readers.read_multiline_json)
     recs = obj.get("Records")
     if isinstance(recs, list) and recs and isinstance(recs[0], dict):
         return _flatten_json(recs[0])
@@ -376,14 +377,3 @@ def parse_stage(
     )
     return df.withColumn("fields", F.coalesce(fields, empty))
 
-
-def explode_multi_json(df: DataFrame) -> DataFrame:
-    """LogBoost row semantics for {"Records":[...]} ``text`` blobs: one output row
-    per array element (parse_json_multi.go:163-320) — from_json +
-    explode, no brace-balancing tokenizer needed."""
-    recs = F.from_json(F.col("text"), "STRUCT<Records: ARRAY<STRING>>")
-    return (
-        df.withColumn("_rec", F.explode(recs["Records"]))
-        .withColumn("fields", json_flatten(F.col("_rec")))
-        .drop("_rec")
-    )

@@ -60,33 +60,48 @@ def _write_manifest(path: str, entry: dict) -> None:
     os.replace(tmp, path)
 
 
-def committed_groups(out_dir: str, n_groups: int | None = None) -> set[int]:
-    """Groups with a committed manifest. When ``n_groups`` is given,
-    REFUSES manifests written under a different bucketing: group
-    membership is pmod(xxhash64(conv_id), n_groups), so resuming with a
-    changed group count would silently skip or double-write
-    conversations."""
+def read_manifests(out_dir: str) -> dict[int, dict]:
+    """Committed group -> its manifest entry."""
     mdir = os.path.join(out_dir, MANIFEST_DIR)
     if not os.path.isdir(mdir):
-        return set()
-    out = set()
+        return {}
+    out = {}
     for name in os.listdir(mdir):
         if name.startswith("group-") and name.endswith(".json"):
-            g = int(name[6:-5])
-            if n_groups is not None:
-                with open(os.path.join(mdir, name)) as f:
-                    entry = json.load(f)
-                rec = entry.get("n_groups")
-                if rec is not None and rec != n_groups:
-                    raise ValueError(
-                        f"{out_dir}: manifest group-{g:04d} was committed with "
-                        f"n_groups={rec}, resume requested n_groups={n_groups} — "
-                        "refusing (bucketing mismatch would skip/double-write "
-                        "conversations); use the original group count or a "
-                        "fresh out_dir"
-                    )
-            out.add(g)
+            with open(os.path.join(mdir, name)) as f:
+                out[int(name[6:-5])] = json.load(f)
     return out
+
+
+def committed_groups(out_dir: str, n_groups: int | None = None) -> set[int]:
+    """Groups with a committed manifest. When ``n_groups`` is given (a
+    resume), REFUSES any manifest not written under that bucketing: one
+    with another ``n_groups``, or with none (a ``--stream`` output, whose
+    groups are micro-batches). Group membership is
+    pmod(xxhash64(conv_id), n_groups), so resuming over another bucketing
+    would silently skip or double-write conversations."""
+    entries = read_manifests(out_dir)
+    for g, entry in sorted(entries.items()):
+        if n_groups is not None and entry.get("n_groups") != n_groups:
+            raise ValueError(
+                f"{out_dir}: manifest group-{g:04d} was committed with "
+                f"n_groups={entry.get('n_groups')}, resume requested "
+                f"n_groups={n_groups} — refusing (bucketing mismatch would "
+                "skip/double-write conversations); use the original group "
+                "count or a fresh out_dir"
+            )
+    return set(entries)
+
+
+def _uncommit(out_dir: str, groups: list[int]) -> None:
+    """Remove the groups' manifests, then their data: from the first
+    step on, readers skip these groups instead of reading half-deleted
+    data under a committed manifest."""
+    for g in groups:
+        if os.path.exists(path := _manifest_path(out_dir, g)):
+            os.remove(path)
+    for g in groups:
+        shutil.rmtree(os.path.join(out_dir, "data", f"group={g}"), ignore_errors=True)
 
 
 def _adaptive_partitions_per_group(
@@ -189,18 +204,14 @@ def commit_chunk(
     sub = sub.observe(obs, *counters).sortWithinPartitions(
         "group", "sink", "conv_id", "turn_idx"
     )
-    # uncommit first: from here until the new manifest lands, readers
-    # skip these groups instead of reading half-deleted or half-written
-    # data under a committed manifest
+    # uncommit first: until the new manifest lands, readers skip these
+    # groups instead of reading half-written data. A killed earlier
+    # attempt may have left their files, or committed task output under
+    # _temporary that the next append's job commit would merge; only
+    # one job writes data/ at a time
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
-    for g in chunk:
-        if os.path.exists(path := _manifest_path(out_dir, g)):
-            os.remove(path)
-    # a killed earlier attempt may have left these groups' files, or
-    # committed task output under _temporary that the next append's
-    # job commit would merge; only one job writes data/ at a time
-    for name in [f"group={g}" for g in chunk] + ["_temporary"]:
-        shutil.rmtree(os.path.join(data_dir, name), ignore_errors=True)
+    _uncommit(out_dir, chunk)
+    shutil.rmtree(os.path.join(data_dir, "_temporary"), ignore_errors=True)
     t0 = time.time()
     sub.write.partitionBy("group", "sink").mode("append").parquet(data_dir)
     wall = round(time.time() - t0, 3)
@@ -273,10 +284,19 @@ def write_routed(
     drop every row with group >= n_groups from all sinks while manifests
     still commit.
 
+    One output holds one bucketing: a resume refuses manifests of
+    another (:func:`committed_groups`), and a run without ``resume``
+    uncommits the groups >= ``n_groups`` of an earlier, larger bucketing
+    before its first job (it rewrites every other group).
+
     Returns the manifest entries written this run; ``wall_sec`` is the
     wall time of the job that wrote the group.
     """
-    done = committed_groups(out_dir, n_groups=n_groups) if resume else set()
+    if resume:
+        done = committed_groups(out_dir, n_groups=n_groups)
+    else:
+        done = set()
+        _uncommit(out_dir, [g for g in committed_groups(out_dir) if g >= n_groups])
     if group_col_name and len(done) < n_groups:
         gc = F.col(group_col_name).cast("bigint")
         bad = (
@@ -326,16 +346,11 @@ def read_sinks(spark, out_dir: str) -> DataFrame:
     return spark.read.option("basePath", data_dir).parquet(*paths)
 
 
-def sink_counts(spark, out_dir: str) -> dict[str, int]:
+def sink_counts(out_dir: str) -> dict[str, int]:
     """Aggregate per-sink row counts from the lineage manifests alone —
     no data re-scan (the A3-style verified aggregate)."""
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
     totals: dict[str, int] = {s: 0 for s in SINKS}
-    for name in sorted(os.listdir(mdir)):
-        if not name.endswith(".json"):
-            continue
-        with open(os.path.join(mdir, name)) as f:
-            e = json.load(f)
+    for e in read_manifests(out_dir).values():
         for s in SINKS:
             totals[s] += int(e.get(f"rows_{s}", 0) or 0)
     return totals

@@ -89,7 +89,6 @@ def row_stage(
 
 
 def run_pipeline(
-    spark,
     transcripts: DataFrame,
     lookups: dict[str, DataFrame],
     out_dir: str,

@@ -33,8 +33,11 @@ from pyspark.sql import functions as F
 
 from ..operators.enrich import enrich_extract
 from ..sources.readers import glob_escape
-from .checkpoint import _adaptive_partitions_per_group, commit_chunk
+from .checkpoint import _adaptive_partitions_per_group, commit_chunk, read_manifests
 from .pipeline import extract_flags, row_stage
+
+#: inactivity that closes a session of :func:`stream_sessionize`
+SESSION_GAP_MINUTES = 30
 
 
 def _source_stream(spark: SparkSession, input_path: str) -> DataFrame:
@@ -79,7 +82,9 @@ def stream_pipeline(
     the batch pipeline writes a chunk: ``enrich_extract``, then
     ``checkpoint.commit_chunk`` with ``pipeline.row_stage`` after its
     salted exchange, micro-batch N as commit group N. Its manifests
-    carry no ``n_groups``: the groups are micro-batches, not buckets.
+    carry no ``n_groups``: the groups are micro-batches, not buckets. So
+    it refuses an output whose manifests carry one (a batch run's hash
+    buckets, which micro-batch N would overwrite).
 
     Exactly-once, END TO END: the checkpoint's source WAL guarantees a
     committed micro-batch is never re-fed, and micro-batch N owns
@@ -97,6 +102,14 @@ def stream_pipeline(
     each micro-batch before enrichment — the hook the CLI uses to apply
     the --startdate/--enddate filter on the stream path.
     """
+    bucketed = sorted(g for g, e in read_manifests(out_dir).items() if "n_groups" in e)
+    if bucketed:
+        raise ValueError(
+            f"{out_dir}: groups {bucketed} are the hash buckets of a batch "
+            "run (their manifests carry n_groups); the stream commits "
+            "micro-batch N as group N — refusing to mix the two, use a "
+            "fresh out_dir"
+        )
     src = _source_stream(spark, input_path)
     extract_kw = extract_flags(enrich_flags)
     stage = row_stage(
@@ -121,14 +134,13 @@ def stream_pipeline(
     return manifests
 
 
-def stream_sessionize(
-    events: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
+def stream_sessionize(events: DataFrame) -> DataFrame:
     """Streaming gap-sessionization — the custom STATEFUL operator the
     windowed builtins can't express (session windows keyed per user,
     closed by inactivity): ``applyInPandasWithState`` keeps one open
     session per user in the state store; events extend it or close it
-    (gap strictly > ``gap_minutes``, matching the batch sessionizer);
+    (gap strictly > ``SESSION_GAP_MINUTES``, matching the batch
+    sessionizer);
     an event-time timeout at ``last + gap`` flushes idle sessions once
     the watermark passes — so state is bounded by the ACTIVE-user count,
     not the stream length.
@@ -142,7 +154,7 @@ def stream_sessionize(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_s = gap_minutes * 60
+    gap_s = SESSION_GAP_MINUTES * 60
     out_schema = (
         "user_id bigint, session_start timestamp, "
         "session_end timestamp, n_events bigint"
@@ -201,7 +213,7 @@ def stream_sessionize(
             )
 
     return (
-        events.withWatermark("ts", f"{gap_minutes} minutes")
+        events.withWatermark("ts", f"{SESSION_GAP_MINUTES} minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -213,13 +225,8 @@ def stream_sessionize(
     )
 
 
-def stream_exact_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Ingest-time exact dedup: full-md5 content key +
+def stream_exact_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Ingest-time exact dedup of ``text``: full-md5 content key +
     ``dropDuplicatesWithinWatermark`` — state is bounded by the
     watermark horizon instead of growing with the stream (an unbounded
     ``dropDuplicates`` would OOM a long-running ingest). Web-crawl
@@ -229,8 +236,8 @@ def stream_exact_dedup(
     sighting + delay, so a re-sighting inside that window is dropped
     even if it arrives hours later by event time."""
     return (
-        stream.withColumn("_h", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
+        stream.withColumn("_h", F.md5(F.col("text")))
+        .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["_h"])
         .drop("_h")
     )

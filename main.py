@@ -163,6 +163,7 @@ def main(argv: list[str] | None = None) -> int:
     from logboost_spark.fixtures.lookups import build_lookup_dfs
     from logboost_spark.plans.pipeline import run_pipeline, date_filter
     from logboost_spark.plans.checkpoint import read_sinks, sink_counts
+    from logboost_spark.sources.readers import glob_escape, read_log_directory, read_text
 
     report_mode = args.summarizeti or args.tifeeds or args.ip is not None
     ti_build_mode = args.buildti or args.updateti
@@ -224,10 +225,8 @@ def main(argv: list[str] | None = None) -> int:
                 if parent != os.path.abspath(args.feeddir)
                 else "unknown"
             )
-            feeds.append(
-                (name, cat, spark.read.text(path).withColumnRenamed("value", "line"))
-            )
-        ti = build_ti_table(spark, feeds)
+            feeds.append((name, cat, read_text(spark, path)))
+        ti = build_ti_table(feeds)
         out_path = os.path.join(args.output, "ti.parquet")
         if args.updateti and os.path.exists(out_path):
             ti = (
@@ -258,9 +257,7 @@ def main(argv: list[str] | None = None) -> int:
         from logboost_spark.operators.ti_build import ingest_intel_lines
 
         custom = ingest_intel_lines(
-            spark.read.text(args.intelfile).withColumnRenamed("value", "line"),
-            args.intelname,
-            args.inteltype,
+            read_text(spark, args.intelfile), args.intelname, args.inteltype
         )
         lookups["ti"] = lookups["ti"].unionByName(custom).dropDuplicates(
             ["ip", "feed_name", "category"]
@@ -325,15 +322,12 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.input, lookups, args.output, pre_enrich=in_window, **flags
         )
     else:
-        from logboost_spark.sources.readers import glob_escape, read_log_directory
-
         if args.input_format == "logs":
             transcripts = read_log_directory(spark, args.input, getall=args.getall)
         else:
             # a plain path, not a Hadoop glob: t[1].parquet names itself
             transcripts = spark.read.parquet(glob_escape(args.input))
         manifests = run_pipeline(
-            spark,
             in_window(transcripts),
             lookups,
             args.output,
@@ -346,14 +340,17 @@ def main(argv: list[str] | None = None) -> int:
             ),
             **flags,
         )
-    counts = sink_counts(spark, args.output)
+    counts = sink_counts(args.output)
     # with no row committed there is no file to union (nor a schema)
     if args.combine and any(counts.values()):
         from pyspark.sql import functions as F
 
-        read_sinks(spark, args.output).withColumn(
-            "SourceFile", F.input_file_name()
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "combined"))
+        # the file's path relative to --output, data/group=g/sink=s/part-…:
+        # the same bytes wherever the output sits
+        rel = F.regexp_extract(F.input_file_name(), r"data/group=[^/]*/sink=[^/]*/[^/]*$", 0)
+        read_sinks(spark, args.output).withColumn("SourceFile", rel).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(args.output, "combined"))
     streamed = {"streamed": True} if args.stream else {}
     print(json.dumps(
         {**streamed, "groups_written": len(manifests), "sink_counts": counts}

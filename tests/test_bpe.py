@@ -91,7 +91,7 @@ def test_lm_score_ranks_quality_and_matches_python(spark):
     import math
 
     from logboost_spark.fixtures.bpe_vocab import TOKEN_LOGPROB, UNK_LOGPROB
-    from logboost_spark.functions.textfns import bpe_lm_score
+    from logboost_spark.functions.textfns import bpe_lm_score_from_encoded
 
     texts = [
         "the customer table joins the orders table",  # in-domain
@@ -100,7 +100,8 @@ def test_lm_score_ranks_quality_and_matches_python(spark):
         "北京 čhärs ∆∆∆",                              # fully OOV
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
-    got = {r.i: r.s for r in df.select("i", bpe_lm_score(F.col("t")).alias("s")).collect()}
+    score = bpe_lm_score_from_encoded(bpe_encode(F.col("t")))
+    got = {r.i: r.s for r in df.select("i", score.alias("s")).collect()}
 
     def py_score(s):
         enc = py_encode(s)
@@ -148,15 +149,16 @@ def test_scalable_encoder_equals_chain_pure_python():
 
 def test_scalable_encoder_2k_vocab_and_spark_udf(spark):
     """Production-vocab path: the 2000-merge JSON table gives identical
-    output to its replace chain (pure Python), and the Spark pandas UDF
-    matches the JVM replace chain per document at the fixture vocab."""
+    output to its replace chain (pure Python); at the fixture vocab the
+    Python encoder and the Spark pandas UDF's count match the JVM replace
+    chain per document."""
     import os
 
     from logboost_spark.functions.textfns import (
         _bpe_encode_str,
+        _make_str_encoder,
         bpe_ranks,
         load_merges_json,
-        make_bpe_encode_udf,
         make_bpe_token_count_udf,
     )
 
@@ -178,20 +180,19 @@ def test_scalable_encoder_2k_vocab_and_spark_udf(spark):
     for s in texts:
         assert _bpe_encode_str(s, r2k) == chain(s, m2k)
 
-    # Spark UDF (fixture vocab) vs the JVM replace chain, every doc
-    enc = make_bpe_encode_udf()
+    # fixture vocab: the Python encoder and the Spark UDF's count vs the
+    # JVM replace chain, every doc
+    enc = _make_str_encoder(MERGES)
     cnt = make_bpe_token_count_udf()
-    bad = (
-        d.select(
-            bpe_encode(F.col("text")).alias("jvm"),
-            enc(F.col("text")).alias("py"),
-            bpe_token_count(F.col("text")).alias("n_jvm"),
-            cnt(F.col("text")).alias("n_py"),
-        )
-        .filter((F.col("jvm") != F.col("py")) | (F.col("n_jvm") != F.col("n_py")))
-        .count()
+    rows = d.select(
+        "text",
+        bpe_encode(F.col("text")).alias("jvm"),
+        bpe_token_count(F.col("text")).alias("n_jvm"),
+        cnt(F.col("text")).alias("n_py"),
+    ).collect()
+    assert rows and all(
+        enc(r.text) == r.jvm and r.n_jvm == r.n_py for r in rows
     )
-    assert bad == 0
 
     # 2k vocab must compress strictly better than the 192 fixture vocab
     agg = d.select(

@@ -4,6 +4,8 @@ round-6 parse knobs: --summarizeti / --tifeeds / --ip report modes,
 flags main.go:52-54), --fullparse key-union projection (main.go:56)."""
 
 import json
+import re
+import shutil
 
 import pytest
 
@@ -208,6 +210,53 @@ def test_cli_fullparse_keeps_keys_named_like_layout_columns(spark, tmp_path, cap
         assert {r["group"] for r in rows} <= {0, 1}
         assert {r["sink"] for r in rows} <= set(SINKS)
     assert all(r["SourceFile"].endswith(".parquet") for r in combined.collect())
+
+
+def test_cli_rerun_with_fewer_groups_keeps_one_bucketing(spark, tmp_path, capsys):
+    """A run with --groups 2 into the output of a --groups 4 run (no
+    --resume) uncommits groups 2 and 3: the manifests and the committed
+    reader hold the input once, not a mix of two bucketings."""
+    from logboost_spark.fixtures.transcripts import fixture_path
+    from logboost_spark.plans.checkpoint import committed_groups, read_sinks
+
+    src, out = fixture_path("sf0.001"), str(tmp_path / "sinks")
+    turns = spark.read.parquet(src).count()
+    for groups in ("4", "2"):
+        argv = ["--input", src, "--output", out, "--groups", groups,
+                "--no-whois", "--no-idb", "--no-parse"]
+        assert M.main(argv) == 0
+    assert committed_groups(out) == {0, 1}
+    assert sum(_last_json(capsys)["sink_counts"].values()) == turns
+    assert read_sinks(spark, out).count() == turns
+
+
+def test_cli_combine_source_file_is_relative_to_output(spark, tmp_path, capsys):
+    """--combine's SourceFile is the sink file's path under --output, so
+    the same committed output combines to the same values wherever it
+    sits."""
+    from logboost_spark.fixtures.transcripts import fixture_path
+
+    src = fixture_path("sf0.001")
+    flags = ["--groups", "2", "--no-whois", "--no-idb", "--no-parse", "--combine"]
+    near = str(tmp_path / "a")
+    far = str(tmp_path / "deeper" / "nested" / "b")
+    assert M.main(["--input", src, "--output", near, *flags]) == 0
+    shutil.copytree(near, far, ignore=shutil.ignore_patterns("combined"))
+    assert M.main(["--input", src, "--output", far, "--resume", *flags]) == 0
+    capsys.readouterr()
+
+    def source_files(out):
+        rows = spark.read.parquet(out + "/combined").select(
+            "conv_id", "turn_idx", "SourceFile"
+        ).collect()
+        return sorted(tuple(r) for r in rows)
+
+    got = source_files(near)
+    assert got == source_files(far)
+    assert all(
+        re.fullmatch(r"data/group=[01]/sink=\w+/part-[^/]+\.parquet", f)
+        for _, _, f in got
+    )
 
 
 def test_cli_buildti_and_updateti(spark, tmp_path, capsys):

@@ -9,8 +9,8 @@ from logboost_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    shingles,
     simhash,
+    with_shingles,
 )
 
 DOCS = [
@@ -86,10 +86,10 @@ def test_shingles_short_doc_guard(spark):
     # docs shorter than n tokens yield NO shingles (a descending
     # F.sequence would otherwise emit a spurious 1-token gram)
     df = spark.createDataFrame([(0, "hello"), (1, "hello")], "doc_id bigint, text string")
-    grams = df.select(F.size(shingles(F.col("text"), 2)).alias("n")).collect()
+    grams = with_shingles(df, 2, "sh").select(F.size("sh").alias("n")).collect()
     assert all(r.n == 0 for r in grams)
     # ...so two short docs sharing a token are NOT jaccard-1.0 pairs
-    assert ngram_jaccard_pairs(df, threshold=0.1, n=2).count() == 0
+    assert ngram_jaccard_pairs(df, threshold=0.1).count() == 0
 
 
 def test_ngram_jaccard_df_cap_bounds_hot_shingle(spark):
@@ -100,10 +100,10 @@ def test_ngram_jaccard_df_cap_bounds_hot_shingle(spark):
     rows = [(i, f"hot gram unique{i} tail{i}") for i in range(20)]
     rows += [(100, "real dup pair body text"), (101, "real dup pair body text")]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = {(r.doc_a, r.doc_b) for r in ngram_jaccard_pairs(df, threshold=0.3, n=2, df_cap=10).collect()}
+    out = {(r.doc_a, r.doc_b) for r in ngram_jaccard_pairs(df, threshold=0.3, df_cap=10).collect()}
     assert out == {(100, 101)}
     # without the cap, the hot shingle creates 190 candidate pairs
-    uncapped = ngram_jaccard_pairs(df, threshold=0.01, n=2).count()
+    uncapped = ngram_jaccard_pairs(df, threshold=0.01).count()
     assert uncapped > 100
 
 

@@ -26,7 +26,7 @@ def test_lsh_star_edges_hot_bucket_no_window(spark):
     from logboost_spark.operators.dedup import minhash_lsh_pairs
 
     docs = _hot_docs(spark)
-    cand = minhash_lsh_pairs(docs, k=16, bands=4, ngram=2, threshold=None)
+    cand = minhash_lsh_pairs(docs, k=16, bands=4, threshold=None)
     plan = _plan(cand)
     assert "Window" not in plan, plan[:3000]
     # map-side partial min before the shuffle (two-level aggregation)
@@ -45,7 +45,7 @@ def test_ngram_df_cap_excludes_hot_shingle_no_window(spark):
     from logboost_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = _hot_docs(spark, n_dup=0, n_uniq=120)
-    out = ngram_jaccard_pairs(docs, threshold=0.2, n=2, df_cap=50)
+    out = ngram_jaccard_pairs(docs, threshold=0.2, df_cap=50)
     assert "Window" not in _plan(out)
     # every pair of unique docs overlaps ONLY through the hot
     # 'shared stopword' shingle; with df_cap below its df the shingle
@@ -53,7 +53,7 @@ def test_ngram_df_cap_excludes_hot_shingle_no_window(spark):
     assert out.count() == 0
     # without the cap the hot shingle creates pairwise overlap
     assert (
-        ngram_jaccard_pairs(docs.limit(20), threshold=0.05, n=2, df_cap=None).count() > 0
+        ngram_jaccard_pairs(docs.limit(20), threshold=0.05, df_cap=None).count() > 0
     )
 
 

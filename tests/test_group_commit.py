@@ -30,7 +30,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _run(spark, sdf, lookups, out, resume=False, n_groups=N_GROUPS):
     return run_pipeline(
-        spark, sdf, lookups, out, n_groups=n_groups, resume=resume,
+        sdf, lookups, out, n_groups=n_groups, resume=resume,
         use_whois=False, use_idb=False,
     )
 
@@ -59,7 +59,7 @@ def _snapshot(spark, out):
         for r in read_sinks(spark, out).select("conv_id", "turn_idx", "sink").collect()
     ]
     assert len(rows) == len(set(rows)), "a turn was written twice"
-    return sink_counts(spark, out), set(rows)
+    return sink_counts(out), set(rows)
 
 
 def _manifest_counts(out):

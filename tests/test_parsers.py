@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from logboost_spark.fixtures import transcripts as TR
-from logboost_spark.parsers.formats import detect_format, explode_multi_json, parse_stage
+from logboost_spark.parsers.formats import detect_format, parse_stage
 
 SAMPLES = {
     "clf_common": '203.0.113.7 - frank [10/Oct/2000:13:55:36 -0700] "GET /x HTTP/1.0" 200 2326',
@@ -62,17 +62,6 @@ def test_all_generator_templates_detected(spark):
         "clf_common", "clf_combined", "syslog_generic", "syslog_rfc3164",
         "syslog_rfc5424", "cef", "kv", "json", "json_multi", "iis_w3c", "raw",
     }
-
-
-def test_explode_multi_json(spark):
-    df = spark.createDataFrame(
-        [('{"Records":[{"a":1},{"a":2},{"a":3}]}',), ('{"Records":[{"a":9}]}',)],
-        "text string",
-    )
-    out = explode_multi_json(df)
-    assert out.count() == 4
-    vals = sorted(r.fields["a"] for r in out.collect())
-    assert vals == ["1", "2", "3", "9"]
 
 
 def test_cef_syslog_prefix_variants(spark):
@@ -158,7 +147,7 @@ def test_json_float_shortest_round_trip(spark):
 def test_deep_keys_union_and_full_project(spark):
     """-fullparse key union across records with disjoint key sets
     (helpers/helpers.go:55-57)."""
-    from logboost_spark.parsers.extra_keys import deep_keys, full_project, shallow_project
+    from logboost_spark.parsers.extra_keys import deep_keys, shallow_project
 
     rows = [
         ('{"a":1,"b":{"c":2}}',),
@@ -167,7 +156,7 @@ def test_deep_keys_union_and_full_project(spark):
     ]
     df = parse_stage(spark.createDataFrame(rows, "text string"))
     assert deep_keys(df) == ["a", "b_c", "d", "e"]
-    out = full_project(df).collect()
+    out = shallow_project(df, deep_keys(df)).collect()
     by_a = {r.a: r for r in out}
     assert by_a["1"].b_c == "2" and by_a["1"].d is None
     assert by_a["9"].d == "x"
@@ -321,12 +310,12 @@ def test_fullparse_key_collision_suffix(spark):
     """A parsed key that collides with a pipeline column ('ts' here) must
     project as '<key>_parsed' instead of emitting duplicate column names
     (--fullparse crashed on common keys like ts/role before round 6)."""
-    from logboost_spark.parsers.extra_keys import full_project
+    from logboost_spark.parsers.extra_keys import deep_keys, shallow_project
 
-    df = spark.createDataFrame(
+    df = parse_stage(spark.createDataFrame(
         [("2030-01-01", "ts=2024-05-05,msg=hello,n=1")], "ts string, text string"
-    )
-    out = full_project(parse_stage(df))
+    ))
+    out = shallow_project(df, deep_keys(df))
     assert len(out.columns) == len(set(out.columns))
     row = out.first()
     assert "ts_parsed" in out.columns and "msg" in out.columns

@@ -28,11 +28,11 @@ def test_pipeline_counts_and_resume(spark, lookups, tmp_path):
     sdf = spark.createDataFrame(pdf)
 
     manifests = run_pipeline(
-        spark, sdf, lookups, out, n_groups=4,
+        sdf, lookups, out, n_groups=4,
         use_whois=False, use_idb=False,
     )
     assert len(manifests) == 4
-    got = sink_counts(spark, out)
+    got = sink_counts(out)
     want = _oracle_sink_counts(pdf)
     assert {k: v for k, v in got.items() if v} == want
 
@@ -61,13 +61,13 @@ def test_pipeline_counts_and_resume(spark, lookups, tmp_path):
         for g in [0, 2]
     }
     redo = run_pipeline(
-        spark, sdf, lookups, out, n_groups=4, resume=True,
+        sdf, lookups, out, n_groups=4, resume=True,
         use_whois=False, use_idb=False,
     )
     assert sorted(m["group"] for m in redo) == [1, 3]  # committed groups skipped
     for g, mt in before.items():
         assert os.path.getmtime(os.path.join(out, "_manifest", f"group-{g:04d}.json")) == mt
-    assert sink_counts(spark, out) == got  # identical final counts
+    assert sink_counts(out) == got  # identical final counts
     assert read_sinks(spark, out).count() == 3000
 
 
@@ -75,7 +75,7 @@ def test_manifest_metrics(spark, lookups, tmp_path):
     out = str(tmp_path / "m")
     sdf = spark.createDataFrame(TR.gen_pandas(500))
     manifests = run_pipeline(
-        spark, sdf, lookups, out, n_groups=2,
+        sdf, lookups, out, n_groups=2,
         use_whois=False, use_idb=False,
     )
     total = sum(m["rows"] for m in manifests)
@@ -98,15 +98,15 @@ def test_resume_refuses_changed_group_count(spark, tmp_path):
     out = str(tmp_path / "sinks")
     df = gen_spark(spark, 400)
     lookups = build_lookup_dfs(spark)
-    run_pipeline(spark, df, lookups, out, n_groups=2, use_whois=False, use_idb=False)
+    run_pipeline(df, lookups, out, n_groups=2, use_whois=False, use_idb=False)
     with pytest.raises(ValueError, match="n_groups"):
         run_pipeline(
-            spark, df, lookups, out, n_groups=4, resume=True,
+            df, lookups, out, n_groups=4, resume=True,
             use_whois=False, use_idb=False,
         )
     # same count resumes cleanly as a no-op
     m = run_pipeline(
-        spark, df, lookups, out, n_groups=2, resume=True,
+        df, lookups, out, n_groups=2, resume=True,
         use_whois=False, use_idb=False,
     )
     assert m == []
@@ -142,14 +142,14 @@ def test_group_partitioned_source_parity(spark, lookups, tmp_path):
 
     out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
     run_pipeline(
-        spark, part, lookups, out_a, n_groups=3, group_col_name="cgroup",
+        part, lookups, out_a, n_groups=3, group_col_name="cgroup",
         use_whois=False, use_idb=False,
     )
     run_pipeline(
-        spark, sdf, lookups, out_b, n_groups=3,
+        sdf, lookups, out_b, n_groups=3,
         use_whois=False, use_idb=False,
     )
-    assert sink_counts(spark, out_a) == sink_counts(spark, out_b)
+    assert sink_counts(out_a) == sink_counts(out_b)
 
     def canon(out):
         return read_sinks(spark, out).drop("group").withColumn(
@@ -182,14 +182,14 @@ def test_group_col_modulus_mismatch_refused(spark, lookups, tmp_path):
     out = str(tmp_path / "out")
     with pytest.raises(ValueError, match="outside this run's n_groups=4"):
         run_pipeline(
-            spark, part, lookups, out, n_groups=4, group_col_name="cgroup",
+            part, lookups, out, n_groups=4, group_col_name="cgroup",
             use_whois=False, use_idb=False,
         )
     # nothing was committed
     assert committed_groups(out) == set()
     # matching modulus passes the validation and runs clean
     m = run_pipeline(
-        spark, part, lookups, out, n_groups=8, group_col_name="cgroup",
+        part, lookups, out, n_groups=8, group_col_name="cgroup",
         use_whois=False, use_idb=False,
     )
     assert len(m) == 8
@@ -236,7 +236,7 @@ def test_concurrent_groups_no_cross_row_bleed(spark, lookups, tmp_path):
     for trial in range(4):
         out = str(tmp_path / f"bleed{trial}")
         run_pipeline(
-            spark, sdf, lookups, out, n_groups=3,
+            sdf, lookups, out, n_groups=3,
             use_whois=False, use_idb=False,
         )
         bad = (
@@ -263,9 +263,24 @@ def test_leftover_manifest_tmp_is_ignored(tmp_path):
     with open(_manifest_path(out, 1) + ".tmp", "w") as f:
         f.write('{"group": 1, "n_groups": 2, "rows": 5, "rows_gen')  # torn
     assert committed_groups(out, n_groups=2) == {0}
-    counts = sink_counts(None, out)
+    counts = sink_counts(out)
     assert counts["general"] == 2 and counts["noip"] == 1
     assert sum(counts.values()) == 3
+
+
+def test_resume_refuses_manifests_without_a_group_count(tmp_path):
+    """A --stream output's manifests carry no n_groups (its groups are
+    micro-batches): a batch resume over it must refuse, not skip the
+    hash groups that share those numbers."""
+    import pytest
+    from logboost_spark.plans.checkpoint import _manifest_path, _write_manifest
+
+    out = str(tmp_path / "sinks")
+    os.makedirs(os.path.join(out, "_manifest"))
+    _write_manifest(_manifest_path(out, 0), {"group": 0, "rows": 3, "rows_general": 3})
+    assert committed_groups(out) == {0}
+    with pytest.raises(ValueError, match="n_groups=None"):
+        committed_groups(out, n_groups=2)
 
 
 def test_rewrite_uncommits_groups_before_deleting_their_data(spark, lookups, tmp_path, monkeypatch):
@@ -279,7 +294,7 @@ def test_rewrite_uncommits_groups_before_deleting_their_data(spark, lookups, tmp
     out = str(tmp_path / "sinks")
     sdf = spark.createDataFrame(TR.gen_pandas(2000))
     kw = dict(n_groups=4, use_whois=False, use_idb=False)
-    run_pipeline(spark, sdf, lookups, out, **kw)
+    run_pipeline(sdf, lookups, out, **kw)
     writer = type(sdf.write)
 
     def killed(self, path, *args, **kwargs):
@@ -287,7 +302,7 @@ def test_rewrite_uncommits_groups_before_deleting_their_data(spark, lookups, tmp
 
     monkeypatch.setattr(writer, "parquet", killed)
     with pytest.raises(RuntimeError, match="killed before the data write"):
-        run_pipeline(spark, sdf, lookups, out, **kw)
+        run_pipeline(sdf, lookups, out, **kw)
     monkeypatch.undo()
     assert not os.path.isdir(os.path.join(out, "data", "group=0"))
     assert committed_groups(out) == {2, 3}
@@ -295,4 +310,4 @@ def test_rewrite_uncommits_groups_before_deleting_their_data(spark, lookups, tmp
         r.sink: r.cnt
         for r in read_sinks(spark, out).groupBy("sink").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
-    assert {k: v for k, v in sink_counts(spark, out).items() if v} == read
+    assert {k: v for k, v in sink_counts(out).items() if v} == read

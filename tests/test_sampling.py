@@ -11,24 +11,24 @@ def _docs(spark, n=2000):
 
 def test_hash_sample_deterministic_and_near_rate(spark):
     d = _docs(spark)
-    a = {r.doc_id for r in hash_sample(d, "doc_id", 10.0).collect()}
-    b = {r.doc_id for r in hash_sample(d, "doc_id", 10.0).collect()}
+    a = {r.doc_id for r in hash_sample(d, 10.0).collect()}
+    b = {r.doc_id for r in hash_sample(d, 10.0).collect()}
     assert a == b                                   # same keys every run
     assert 0.07 <= len(a) / 2000 <= 0.13            # near the nominal rate
     # repartitioning must not change membership (per-partition RNG would)
-    c = {r.doc_id for r in hash_sample(d.repartition(13), "doc_id", 10.0).collect()}
+    c = {r.doc_id for r in hash_sample(d.repartition(13), 10.0).collect()}
     assert c == a
     # a different salt draws an (almost surely) different sample
-    s2 = {r.doc_id for r in hash_sample(d, "doc_id", 10.0, salt="other").collect()}
+    s2 = {r.doc_id for r in hash_sample(d, 10.0, salt="other").collect()}
     assert s2 != a
     # rate monotonicity: the 10% sample nests inside the 20% sample
-    big = {r.doc_id for r in hash_sample(d, "doc_id", 20.0).collect()}
+    big = {r.doc_id for r in hash_sample(d, 20.0).collect()}
     assert a <= big
 
 
 def test_split_assign_partitions_exactly(spark):
     d = _docs(spark)
-    out = split_assign(d, "doc_id").collect()
+    out = split_assign(d).collect()
     assert len(out) == 2000                          # every row assigned
     counts = {}
     for r in out:
@@ -37,7 +37,7 @@ def test_split_assign_partitions_exactly(spark):
     assert counts["train"] > counts["val"] and counts["train"] > counts["test"]
     assert 0.95 <= counts["train"] / 2000 <= 0.995
     # deterministic: same assignment on rerun
-    again = {(r.doc_id, r.split) for r in split_assign(d, "doc_id").collect()}
+    again = {(r.doc_id, r.split) for r in split_assign(d).collect()}
     assert again == {(r.doc_id, r.split) for r in out}
 
 
@@ -62,7 +62,7 @@ def test_group_capped_sample(spark):
 
     rows = [(i, "big") for i in range(1000)] + [(1000 + i, "small") for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id bigint, grp string")
-    out = group_capped_sample(df, "grp", "doc_id", cap=50).collect()
+    out = group_capped_sample(df, "grp", cap=50).collect()
     by = {}
     for r in out:
         by.setdefault(r.grp, set()).add(r.doc_id)
@@ -71,7 +71,7 @@ def test_group_capped_sample(spark):
     # over-cap group lands near the cap (binomial jitter ~ sqrt(cap))
     assert 25 <= len(by["big"]) <= 80, len(by["big"])
     # deterministic
-    again = {r.doc_id for r in group_capped_sample(df, "grp", "doc_id", cap=50).collect()}
+    again = {r.doc_id for r in group_capped_sample(df, "grp", cap=50).collect()}
     assert again == {r.doc_id for r in out}
 
 
@@ -213,13 +213,13 @@ def test_decontaminate_flags_exact_ngram_overlap(spark):
         ],
         "doc_id bigint, text string",
     )
-    out = {r.doc_id: r for r in decontaminate(corpus, bench, n=3).collect()}
+    out = {r.doc_id: r for r in decontaminate(corpus, bench).collect()}
     assert set(out) == {1, 3}
     assert out[1].hit_shingles == 1
     assert out[1].example_shingle == "quick brown fox"
     assert out[3].hit_shingles >= 2
     clean = corpus.join(
-        decontaminate(corpus, bench, n=3).select("doc_id"), "doc_id", "left_anti"
+        decontaminate(corpus, bench).select("doc_id"), "doc_id", "left_anti"
     )
     assert [r.doc_id for r in clean.collect()] == [2]
 
@@ -231,7 +231,7 @@ def test_decontaminate_plan_is_broadcast(spark):
 
     bench = spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string")
     corpus = spark.createDataFrame([(2, "a b c d e")], "doc_id bigint, text string")
-    plan = decontaminate(corpus, bench, n=3)._jdf.queryExecution().executedPlan().toString()
+    plan = decontaminate(corpus, bench)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 

@@ -12,7 +12,7 @@ from logboost_spark.operators.similarity import (
     cosine_topk_lsh,
     infer_dim,
     ivf_codebook,
-    train_centroids_lloyd,
+    sampled_codebook,
 )
 
 SF001 = "/root/testdata/sf0.01"
@@ -100,30 +100,13 @@ def test_ivf_returns_true_cosines(spark, emb):
     assert all(v <= 5 for v in per_q.values())
 
 
-def test_lloyd_trainer_deterministic_and_improves(spark, emb):
-    """Two runs agree bit-for-bit; iterating reduces mean distance of a
-    vector to its assigned centroid (the k-means objective)."""
-    vecs, df = emb
-
-    def objective(cents):
-        c = np.array(cents)
-        d = ((vecs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        return float(d.min(axis=1).mean())
-
-    c0 = train_centroids_lloyd(df, n_cells=6, iters=0)
-    c1 = train_centroids_lloyd(df, n_cells=6, iters=1)
-    c1b = train_centroids_lloyd(df, n_cells=6, iters=1)
-    c3 = train_centroids_lloyd(df, n_cells=6, iters=3)
-    assert c1 == c1b
-    assert len(c1) == 6 and all(len(c) == 16 for c in c1)
-    assert objective(c1) <= objective(c0)
-    assert objective(c3) <= objective(c1)
-
-
-def test_ivf_with_trained_codebook(spark, emb):
-    """The trained codebook plugs into cosine_topk_ivf."""
+def test_ivf_with_trained_codebook(spark, emb, tmp_path):
+    """A data-sampled codebook plugs into cosine_topk_ivf."""
     _, df = emb
-    cents = train_centroids_lloyd(df, n_cells=6, iters=1)
+    path = str(tmp_path / "emb.parquet")  # one file, as pyarrow reads it
+    df.toPandas().to_parquet(path)
+    cents = sampled_codebook(path, 6)
+    assert len(cents) == 6 and all(len(c) == 16 for c in cents)
     q = df.filter(F.col("vec_id") < 2)
     got = cosine_topk_ivf(df, q, k=5, nprobe=2, dim=16, codebook=cents).collect()
     assert len(got) > 0
@@ -133,8 +116,6 @@ def test_ivf_with_trained_codebook(spark, emb):
 def test_ivf_recall_on_fixture(spark):
     """Recall@10 of the gate query's IVF (16 sampled cells, nprobe=4)
     vs exact brute force — the measured number backing ann_topk_ivf."""
-    from logboost_spark.operators.similarity import sampled_codebook
-
     path = os.path.join(SF001, "embeddings.parquet")
     embp = spark.read.parquet(path)
     cb = sampled_codebook(path, 16)

@@ -56,7 +56,7 @@ def test_stream_defaults_match_batch(spark, tmp_path):
     lookups = build_lookup_dfs(spark)
     stream_out, batch_out = str(tmp_path / "stream"), str(tmp_path / "batch")
     stream_pipeline(spark, src, lookups, stream_out)
-    run_pipeline(spark, spark.read.parquet(src), lookups, batch_out)
+    run_pipeline(spark.read.parquet(src), lookups, batch_out)
     stream = read_sinks(spark, stream_out)
     batch = read_sinks(spark, batch_out)
     assert stream.columns == batch.columns
@@ -183,7 +183,7 @@ def test_stream_sessionize_equals_batch(spark, tmp_path):
         .option("recursiveFileLookup", "true")
         .parquet(str(src_dir))
     )
-    sess = stream_sessionize(stream, gap_minutes=30)
+    sess = stream_sessionize(stream)
     q = (
         sess.writeStream.format("memory")
         .queryName("sessions")
@@ -281,7 +281,7 @@ def test_stream_pipeline_crash_rerun_idempotent(spark, tmp_path):
         for r in spark.read.parquet(data)
         .groupBy("sink").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
-    want_counts = sink_counts(spark, out)
+    want_counts = sink_counts(out)
     want_read = read_sinks(spark, out).count()
 
     commits = os.path.join(out, "_checkpoint", "commits")
@@ -304,8 +304,25 @@ def test_stream_pipeline_crash_rerun_idempotent(spark, tmp_path):
         .groupBy("sink").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
     assert got == want and got_sinks == want_sinks
-    assert sink_counts(spark, out) == want_counts
+    assert sink_counts(out) == want_counts
     assert read_sinks(spark, out).count() == want_read == want
+
+
+def test_stream_refuses_a_batch_output(spark, lookups, tmp_path):
+    """Micro-batch N commits as group N: over a batch output, whose
+    manifests carry n_groups, the stream refuses before writing instead
+    of overwriting hash groups 0..N."""
+    src = fixture_path("sf0.001")
+    out = str(tmp_path / "sinks")
+    kw = dict(do_parse=False, use_whois=False, use_idb=False)
+    run_pipeline(spark.read.parquet(src), lookups, out, n_groups=2, **kw)
+    want = sink_counts(out)
+    with pytest.raises(ValueError, match="n_groups"):
+        stream_pipeline(spark, src, lookups, out, **kw)
+    assert checkpoint.committed_groups(out, n_groups=2) == {0, 1}
+    assert sink_counts(out) == want
+    assert read_sinks(spark, out).count() == spark.read.parquet(src).count()
+    assert not os.path.exists(os.path.join(out, "_checkpoint"))
 
 
 def test_stream_batch_without_manifest_is_not_read(spark, tmp_path, monkeypatch):
@@ -319,7 +336,7 @@ def test_stream_batch_without_manifest_is_not_read(spark, tmp_path, monkeypatch)
     lookups = build_lookup_dfs(spark)
     first = stream_pipeline(spark, str(src_dir), lookups, out, do_parse=False)
     assert [m["group"] for m in first] == [0]
-    want_counts = sink_counts(spark, out)
+    want_counts = sink_counts(out)
 
     shutil.copy(fixture_path("sf0.001"), src_dir / "b.parquet")
     commit = checkpoint._write_manifest
@@ -337,12 +354,12 @@ def test_stream_batch_without_manifest_is_not_read(spark, tmp_path, monkeypatch)
     got = read_sinks(spark, out)
     assert {r.group for r in got.select("group").distinct().collect()} == {0}
     assert got.count() == 2000
-    assert sink_counts(spark, out) == want_counts
+    assert sink_counts(out) == want_counts
 
     redo = stream_pipeline(spark, str(src_dir), lookups, out, do_parse=False)
     assert [m["group"] for m in redo] == [1]
     assert read_sinks(spark, out).count() == 4000
-    assert sink_counts(spark, out) == {s: 2 * n for s, n in want_counts.items()}
+    assert sink_counts(out) == {s: 2 * n for s, n in want_counts.items()}
 
 
 def test_stream_single_file_name_with_glob_characters(spark, tmp_path):
@@ -428,7 +445,7 @@ def test_stream_sessionize_out_of_order_across_batches(spark, tmp_path):
         .parquet(str(d))
     )
     q = (
-        stream_sessionize(stream, gap_minutes=30)
+        stream_sessionize(stream)
         .writeStream.format("memory")
         .queryName("sess_ooo")
         .outputMode("append")

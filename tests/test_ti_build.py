@@ -4,12 +4,11 @@ from pyspark.sql import functions as F
 
 from logboost_spark.operators.ti_build import (
     build_ti_table,
-    expand_cidr,
     ingest_intel_lines,
     summarize_ti,
     ti_category_counts,
 )
-from logboost_spark.parsers.extra_keys import first_record_keys, shallow_project
+from logboost_spark.parsers.extra_keys import shallow_project
 from logboost_spark.parsers.formats import parse_stage
 from logboost_spark.semantics import EXTRA_KEYS_COL
 
@@ -36,18 +35,12 @@ def test_ingest_intel_lines(spark):
 def test_build_ti_table_multi_feed(spark):
     l1 = spark.createDataFrame([("8.8.8.8",), ("1.1.1.1",)], "line string")
     l2 = spark.createDataFrame([("8.8.8.8",), ("9.9.9.9",)], "line string")
-    ti = build_ti_table(spark, [("f1", "tor", l1), ("f2", "proxy", l2)])
+    ti = build_ti_table([("f1", "tor", l1), ("f2", "proxy", l2)])
     assert ti.count() == 4
     s = summarize_ti(ti).collect()[0]
     assert s.distinct_ips == 3
     cats = {r.category: r.cnt for r in ti_category_counts(ti).collect()}
     assert cats == {"tor": 2, "proxy": 2}
-
-
-def test_expand_cidr(spark):
-    iv = spark.createDataFrame([(3232235776, 3232235779)], "net_start bigint, net_end bigint")
-    ips = sorted(r.ip for r in expand_cidr(iv).collect())
-    assert ips == ["192.168.1.0", "192.168.1.1", "192.168.1.2", "192.168.1.3"]
 
 
 def test_extra_keys_overflow(spark):
@@ -56,9 +49,7 @@ def test_extra_keys_overflow(spark):
         ('{"a":"9","c":"7","d":"8"}',),  # c,d overflow
     ]
     df = parse_stage(spark.createDataFrame(rows, "text string"))
-    keys = first_record_keys(df)
-    assert keys == ["a", "b"]
-    out = shallow_project(df, keys).orderBy("a").collect()
+    out = shallow_project(df, ["a", "b"]).orderBy("a").collect()
     assert out[0][EXTRA_KEYS_COL] == ""
     assert out[1]["a"] == "9" and out[1]["b"] is None
     assert out[1][EXTRA_KEYS_COL] == "c:7, d:8, "

@@ -52,7 +52,7 @@ lookups = build_lookup_dfs(spark)
 out = f"/dev/shm/scaling_sinks_{{cores}}"
 shutil.rmtree(out, ignore_errors=True)
 t0 = time.time()
-run_pipeline(spark, transcripts, lookups, out, n_groups=4, group_col_name="cgroup",
+run_pipeline(transcripts, lookups, out, n_groups=4, group_col_name="cgroup",
              use_whois=False, use_idb=False)
 wall = time.time() - t0
 shutil.rmtree(out, ignore_errors=True)
