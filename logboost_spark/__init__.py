@@ -12,9 +12,9 @@ Design principles (see SURVEY.md):
   * DataFrame/SQL first; Catalyst plans everything. No RDDs.
   * All per-row lookups in the reference become broadcast hash joins
     (CIDR geo data becomes a prefix-bucketed broadcast range join).
-  * No per-row Python in the hot path: native pyspark.sql.functions,
-    Arrow-batched pandas UDFs only where column exprs cannot express
-    the semantics (the JSON flatten).
+  * No Python in the pipeline plan: native pyspark.sql.functions, and a
+    Java UDF compiled from the repo's source (jvm/JsonFlatten.java) where
+    column exprs cannot express the semantics (the JSON flatten).
   * Skew (heavy-tailed conversations / hot route categories) handled with
     salted repartitioning + AQE.
   * Resumable: per-partition lineage manifest; committed work is skipped.

@@ -1,11 +1,14 @@
-"""Pure-Python row-at-a-time oracle of the reference enrichment semantics.
+"""Pure-Python row-at-a-time oracle of the reference enrichment semantics
+and of its JSON line flatten.
 
 This is the stand-in for running the Go reference itself (SURVEY.md §5):
 an independent, direct transcription of ``enrichRecord``
 (helpers/helpers.go:295-480) + ``RegexFirstPublicIPFromString``
 (helpers/helpers.go:850-893) + ``IsPrivateIP`` (helpers/network.go:124-142)
 + ``CheckIPinTI`` (helpers/threatIntel.go:381-423) over the deterministic
-fixture lookup tables. Tests assert the Spark engine's output equals this
+fixture lookup tables, and of the JSON parsers' parent_child flatten
+(parsers/parse_json_multi.go:322-432), which the engine runs as the JVM
+function ``jvm/JsonFlatten.java``. Tests assert the Spark engine's output equals this
 oracle's output row-for-row.
 
 Deliberately written with plain-Python data structures — no Spark, no
@@ -15,7 +18,10 @@ are shared so both sides parse identically; the *logic* is independent).
 
 from __future__ import annotations
 
+import json
+import math
 import re
+from decimal import Decimal
 from functools import lru_cache
 
 from .fixtures import lookups as L
@@ -241,3 +247,82 @@ def route_category(row: dict) -> str:
     if row["role"] == "tool" or row["tool"] != "none":
         return "tool_activity"
     return "general"
+
+
+# --- JSON line flatten (P3-P5) ------------------------------------------------
+
+_SURROGATE = re.compile("[\ud800-\udfff]")
+
+
+def _valid_utf16(s: str) -> str:
+    """Go's encoding/json decodes an unpaired surrogate escape as U+FFFD
+    (``json.loads`` has joined every valid pair already)."""
+    return _SURROGATE.sub("\ufffd", s)
+
+
+def _go_str(v) -> str:
+    """Go-style stringification (parsers/parse_json_multi.go:369-432): a
+    string as is, nil → ErrorNil, bool → true/false, an int in full,
+    float → FormatFloat('E',-1,64), an array → fmt.Sprint's ``[a b]``, an
+    object → fmt's ``map[k:v]`` with sorted keys."""
+    if isinstance(v, str):
+        return _valid_utf16(v)
+    if v is None:
+        return "ErrorNil"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, float):
+        # the shortest digits that round-trip, as repr and Go's -1
+        # precision pick them; the exponent has at least two digits
+        d = Decimal(repr(v))
+        digits = "".join(map(str, d.as_tuple().digits)).rstrip("0") or "0"
+        mant = digits[0] + ("." + digits[1:] if digits[1:] else "")
+        exp = d.adjusted() if v else 0
+        return f"{'-' if d.is_signed() else ''}{mant}E{exp:+03d}"
+    if isinstance(v, list):
+        return "[" + " ".join(map(_go_str, v)) + "]"
+    if isinstance(v, dict):
+        items = {_valid_utf16(k): _go_str(x) for k, x in v.items()}
+        return "map[" + " ".join(f"{k}:{s}" for k, s in sorted(items.items())) + "]"
+    return str(v)
+
+
+def _reject_constant(token: str):
+    raise ValueError(f"non-finite JSON number {token}")
+
+
+def _finite_float(token: str) -> float:
+    v = float(token)
+    if math.isinf(v):
+        raise ValueError(f"JSON number out of float64 range: {token}")
+    return v
+
+
+def _flatten_json(obj: dict, prefix: str = "") -> dict[str, str]:
+    """parent_child underscore flattening (parse_json_multi.go:322-367)."""
+    out: dict[str, str] = {}
+    for key, v in obj.items():
+        key = _valid_utf16(key)
+        name = f"{prefix}_{key}" if prefix else key
+        if isinstance(v, dict):
+            out.update(_flatten_json(v, name))
+        else:
+            out[name] = _go_str(v)
+    return out
+
+
+def flatten_json_line(s: str) -> dict[str, str] | None:
+    """The ``fields`` of one JSON line, or None when the line is not one
+    JSON object: bad syntax, trailing data, NaN, ±Infinity or a number
+    past float64, all of which Go's encoding/json rejects. A
+    ``{"Records":[...]}`` line flattens ``Records[0]``."""
+    try:
+        obj = json.loads(s, parse_constant=_reject_constant, parse_float=_finite_float)
+    except (ValueError, RecursionError):
+        return None
+    if not isinstance(obj, dict):
+        return None
+    recs = obj.get("Records")
+    if isinstance(recs, list) and recs and isinstance(recs[0], dict):
+        return _flatten_json(recs[0])
+    return _flatten_json(obj)

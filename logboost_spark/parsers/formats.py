@@ -23,22 +23,22 @@ each reference parser:
 * IIS/W3C (parsers/parse_iis_w3c.go:15-54): ``#Fields:`` directive names
   zipped with the data row (space=W3C, comma=IIS).
 * JSON / multi-line JSON / Azure blob (parsers/parse_json*.go): deep
-  ``parent_child`` flatten with Go-style scalar stringification —
-  the one pandas UDF in the parse stage (recursive variable-shape JSON
-  is not expressible as a static column expression; Arrow-batched).
+  ``parent_child`` flatten with Go-style value stringification, a Java
+  UDF (``jvm/JsonFlatten.java``, compiled from source on first use):
+  recursive variable-shape JSON is not a static column expression, and
+  Go's shortest float digits need JVM code. Its Python twin is
+  ``oracle.flatten_json_line``.
 """
 
 from __future__ import annotations
 
-import json
-import math
 import re
-from decimal import Decimal
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import jvm
 
 FORMATS = [
     "iis_w3c",
@@ -173,9 +173,7 @@ CEF_5424_RE = r"(<\d{1,5}>)(\d)\s(\d{4}-\d{1,2}-\d{1,2}T\d{2}:\d{2}:\d{2}\.\d{3}
 CEF_GENERIC_RE = r"([a-zA-Z]{3}\s{1,3}\d{1,2}\s\d{1,2}:\d{2}:\d{2})\s(?:<.+>\s)?(.*?)\s(.*?)\[?(\d{0,6})\]?:\s(CEF.*)"
 
 def _empty_map():
-    # built lazily: a module-level Column would be constructed again when
-    # the executor's Python worker re-imports this module to unpickle the
-    # pandas UDF — where no SparkContext exists
+    # built lazily: a module-level Column needs a SparkContext at import
     return F.map_from_arrays(F.array(), F.array())
 
 
@@ -259,84 +257,23 @@ def _iis_w3c(text: Column) -> Column:
     )
 
 
-# --- JSON deep flatten (P3/P4/P5): the one pandas UDF -----------------------
+# --- JSON deep flatten (P3/P4/P5): a JVM function ---------------------------
+
+JSON_FLATTEN = "json_flatten"
 
 
-def _go_str(v) -> str:
-    """Go-style scalar stringification (parsers/parse_json_multi.go:369-432):
-    float → FormatFloat('E',-1,64), bool → true/false, arrays → fmt.Sprint,
-    nil → ErrorNil."""
-    if v is None:
-        return "ErrorNil"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, float):
-        # the shortest digits that round-trip, as repr and Go's -1
-        # precision pick them; the exponent has at least two digits
-        d = Decimal(repr(v))
-        digits = "".join(map(str, d.as_tuple().digits)).rstrip("0") or "0"
-        mant = digits[0] + ("." + digits[1:] if digits[1:] else "")
-        exp = d.adjusted() if v else 0
-        return f"{'-' if d.is_signed() else ''}{mant}E{exp:+03d}"
-    if isinstance(v, list):
-        return "[" + " ".join(_go_str(x) if not isinstance(x, str) else x for x in v) + "]"
-    return str(v)
-
-
-def _reject_constant(token: str):
-    raise ValueError(f"non-finite JSON number {token}")
-
-
-def _finite_float(token: str) -> float:
-    v = float(token)
-    if math.isinf(v):
-        raise ValueError(f"JSON number out of float64 range: {token}")
-    return v
-
-
-def _loads_finite(s: str):
-    """``json.loads`` that rejects NaN, ±Infinity and numbers overflowing
-    float64, as Go's encoding/json does: such a line is not JSON."""
-    return json.loads(s, parse_constant=_reject_constant, parse_float=_finite_float)
-
-
-def _flatten_json(obj: dict, prefix: str = "") -> dict[str, str]:
-    """parent_child underscore flattening (parse_json_multi.go:322-367)."""
-    out: dict[str, str] = {}
-    for key, v in obj.items():
-        name = f"{prefix}_{key}" if prefix else key
-        if isinstance(v, dict):
-            out.update(_flatten_json(v, name))
-        else:
-            out[name] = _go_str(v)
-    return out
-
-
-def _flatten_one(s) -> dict | None:
-    # PERF: Spark hoists pandas UDFs out of `when` branches and evaluates
-    # them on EVERY row (ArrowEvalPython can't be conditional), so the
-    # non-JSON fast path must not raise — a raised-and-caught ValueError
-    # per non-JSON row made the fused parse stage ~20× slower.
-    if not isinstance(s, str) or not s.lstrip()[:1] == "{":
-        return None
-    try:
-        obj = _loads_finite(s)
-    except (ValueError, RecursionError):
-        return None
-    if not isinstance(obj, dict):
-        return None
-    # multi-line JSON in one text cell: take Records[0]'s flattening
-    # (a {"Records":[...]} FILE gets one row per record from
-    # sources.readers.read_multiline_json)
-    recs = obj.get("Records")
-    if isinstance(recs, list) and recs and isinstance(recs[0], dict):
-        return _flatten_json(recs[0])
-    return _flatten_json(obj)
-
-
-@F.pandas_udf(T.MapType(T.StringType(), T.StringType()))
-def json_flatten(texts: pd.Series) -> pd.Series:
-    return texts.map(_flatten_one)
+def _register_json_flatten(spark) -> None:
+    """Put ``jvm/JsonFlatten.java`` in this session's function registry
+    unless it holds it already: a new session, or a new JVM in the same
+    process, registers again."""
+    if spark.catalog.functionExists(JSON_FLATTEN):
+        return
+    spark.sql(f"ADD JAR '{jvm.jar(spark)}'")
+    spark.udf.registerJavaFunction(
+        JSON_FLATTEN,
+        "logboost_spark.jvm.JsonFlatten",
+        T.MapType(T.StringType(), T.StringType()),
+    )
 
 
 def parse_stage(
@@ -345,17 +282,11 @@ def parse_stage(
     kv_delimiter: str = KV_DELIMITER_DEFAULT,
 ) -> DataFrame:
     """Append ``format`` + ``fields`` columns parsed from ``text`` (the
-    P1-P11 parse stage).
-
-    Spark hoists pandas UDFs out of ``when`` branches (ArrowEvalPython
-    can't be conditional), so json_flatten executes for EVERY row — but
-    its INPUT is masked to null for non-JSON rows, so the Arrow round
-    trip ships a null bitmap instead of the full text and the Python
-    side is a no-op per non-JSON row. (A filter→flatten→union split was
-    measured 2× WORSE end-to-end: each branch re-scans the upstream plan,
-    and in the group-committed pipeline that doubles every group job's
-    input stage — the masked single pass keeps one scan.)
+    P1-P11 parse stage). The plan is JVM code only: JSON rows go through
+    the ``json_flatten`` JVM function, which the ``when`` evaluates on
+    those rows alone; a line it rejects keeps ``{"line": text}``.
     """
+    _register_json_flatten(df.sparkSession)
     t = F.col("text")
     df = df.withColumn("format", detect_format(t, kv_separator, kv_delimiter))
     fmt = F.col("format")
@@ -365,7 +296,7 @@ def parse_stage(
     )
     fields = (
         F.when(fmt == "iis_w3c", _iis_w3c(t))
-        .when(is_json, json_flatten(F.when(is_json, t)))
+        .when(is_json, F.call_function(JSON_FLATTEN, t))
         .when(fmt == "cef", _cef(t))
         .when(fmt == "clf_combined", _clf(t, combined=True))
         .when(fmt == "clf_common", _clf(t, combined=False))

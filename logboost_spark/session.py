@@ -13,7 +13,8 @@ import os
 from pyspark.sql import SparkSession
 
 #: Defaults chosen for scale: AQE on (runtime re-planning), Arrow on
-#: (vectorized pandas-UDF transfer), UTC timestamps everywhere,
+#: (DataFrame <-> pandas transfer and the pandas UDFs of the gate queries
+#: and operators; the pipeline plan has none), UTC timestamps everywhere,
 #: ANSI off so malformed log data degrades to NULL instead of failing a
 #: 1000-executor job 6 hours in (we use try_* semantics throughout anyway).
 _DEFAULTS = {

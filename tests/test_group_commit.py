@@ -4,7 +4,8 @@ an uninterrupted run; readers see committed groups only; every write
 task holds one commit group, and a chunk job's tasks fill the cluster
 once. A lost observation is recounted from the written data, and a
 recount that cannot read it commits nothing. A CLI process killed
-mid-write resumes on another core count."""
+mid-write, or between the two manifests of a chunk, resumes on another
+core count."""
 
 import glob
 import json
@@ -296,6 +297,60 @@ def test_cli_killed_mid_write_resumes_on_another_core_count(spark, tmp_path):
             stdout=log, stderr=subprocess.STDOUT, check=True, timeout=900,
         )
     assert committed_groups(out) == set(range(8))
+
+    ref = str(tmp_path / "uninterrupted")
+    assert M.main([*argv, "--output", ref]) == 0
+    assert _snapshot(spark, out) == _snapshot(spark, ref)
+
+
+#: main.py's CLI, SIGKILLing its own process group (its JVM too) right
+#: after the manifest of group argv[2] lands:
+#: python -c _KILLED_AFTER_MANIFEST ROOT GROUP CLI-ARGS...
+_KILLED_AFTER_MANIFEST = """
+import os, signal, sys
+sys.path.insert(0, sys.argv[1])
+import main
+from logboost_spark.plans import checkpoint
+
+write, group = checkpoint._write_manifest, int(sys.argv[2])
+
+def write_then_kill(path, entry):
+    write(path, entry)
+    if entry["group"] == group:
+        os.killpg(os.getpgrp(), signal.SIGKILL)
+
+checkpoint._write_manifest = write_then_kill
+sys.exit(main.main(sys.argv[3:]))
+"""
+
+
+def test_cli_killed_between_manifests_resumes_on_another_core_count(spark, tmp_path):
+    """A CLI process is SIGKILLed, with its JVM, right after the first
+    manifest of chunk (2, 3) lands: exactly groups 0-2 are committed, and
+    a ``--resume`` run on 2 cores rewrites group 3 to the output of an
+    uninterrupted run."""
+    import main as M
+
+    argv = [
+        "--input", os.path.join(ROOT, "data", "transcripts_sf0.001.parquet"),
+        "--groups", "4", "--no-whois", "--no-idb",
+    ]
+    out = str(tmp_path / "killed")
+    with open(tmp_path / "killed.log", "w") as log:
+        killed = subprocess.run(
+            [sys.executable, "-c", _KILLED_AFTER_MANIFEST, ROOT, "2", *argv, "--output", out],
+            stdout=log, stderr=subprocess.STDOUT, start_new_session=True, timeout=900,
+        )
+    assert killed.returncode == -signal.SIGKILL
+    assert committed_groups(out) == {0, 1, 2}
+
+    with open(tmp_path / "resumed.log", "w") as log:
+        subprocess.run(
+            [sys.executable, os.path.join(ROOT, "main.py"), *argv, "--output", out,
+             "--resume", "--cores", "2"],
+            stdout=log, stderr=subprocess.STDOUT, check=True, timeout=900,
+        )
+    assert committed_groups(out) == set(range(4))
 
     ref = str(tmp_path / "uninterrupted")
     assert M.main([*argv, "--output", ref]) == 0

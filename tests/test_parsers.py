@@ -19,6 +19,29 @@ SAMPLES = {
     "raw": "completely unstructured line with no recognizable format",
 }
 
+#: JSON lines holding a number Go's encoding/json rejects
+NON_FINITE = [
+    '{"src": "8.8.8.8", "n": 1e400}',
+    '{"n": -1e400}',
+    '{"n": NaN}',
+    '{"n": Infinity}',
+    '{"n": -Infinity}',
+]
+
+#: JSON float token -> its FormatFloat(v, 'E', -1, 64)
+FLOATS = {
+    "0.1": "1E-01",
+    "123456789.0": "1.23456789E+08",
+    "1.7976931348623157e308": "1.7976931348623157E+308",
+    "1.5e3": "1.5E+03",
+    "3.14159265": "3.14159265E+00",
+    "5e-324": "5E-324",
+    "[2.5, 0.1234567891]": "[2.5E+00 1.234567891E-01]",
+}
+
+#: records with disjoint key sets
+DISJOINT_KEYS = ['{"a":1,"b":{"c":2}}', '{"a":9,"d":"x"}', '{"e":true}']
+
 
 def test_detection_precedence(spark):
     rows = [(fmt, text) for fmt, text in SAMPLES.items()]
@@ -87,40 +110,41 @@ def test_cef_syslog_prefix_variants(spark):
     assert got["generic"][1]["PROCESS"] == "secd" and got["generic"][1]["PROCID"] == "42"
 
 
-def test_json_flatten_input_masked(spark):
-    """The hoisted pandas UDF's INPUT must be null-masked for non-JSON
-    rows (VERDICT r1 'What's wrong' #4): the Arrow round trip then ships
-    a null bitmap, not the full text, for the ~2/3 non-JSON fraction.
-    (A filter→union split was measured 2× worse: it doubles the upstream
-    scan per branch.)"""
-    df = parse_stage(spark.createDataFrame(TR.gen_pandas(240)))
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("json_flatten") == 1
-    # the UDF argument is the masked conditional, not the raw column
-    import re
-    arg = re.search(r"json_flatten\((.*?)\)#", plan)
-    assert arg and "CASE WHEN" in arg.group(1), arg
-    # and the mask really zeroes non-JSON inputs end-to-end
-    got = {r.format: r.fields for r in df.collect()}
-    assert got["json"]["remoteIP"]  # JSON rows still flattened
-    assert got["raw"]["line"]  # raw rows keep the line fallback
+def test_parse_plan_has_no_python(spark, lookups, tmp_path, monkeypatch):
+    """The JSON flatten is a JVM function: the plans of run_pipeline's
+    chunk jobs and of parse_stage call json_flatten and have no Python
+    evaluation node, so a parse starts no Python worker."""
+    from logboost_spark.plans import checkpoint
+    from logboost_spark.plans.pipeline import run_pipeline
+
+    src = spark.read.parquet(TR.fixture_path("sf0.001"))
+    plans = [parse_stage(src)._jdf.queryExecution().executedPlan().toString()]
+    commit = checkpoint.commit_chunk
+
+    def planned(sub, out_dir, chunk, parts, post_shuffle, *rest):
+        def recorded(df):
+            out = post_shuffle(df)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        return commit(sub, out_dir, chunk, parts, recorded, *rest)
+
+    monkeypatch.setattr(checkpoint, "commit_chunk", planned)
+    run_pipeline(src, lookups, str(tmp_path / "out"), n_groups=4, use_whois=False, use_idb=False)
+    assert len(plans) == 3
+    for plan in plans:
+        assert "json_flatten(" in plan
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_json_non_finite_number_is_not_json(spark):
     """NaN, ±Infinity and numbers overflowing float64 are not JSON (Go's
     encoding/json rejects them): such a line keeps the {"line": text}
     fallback of any unparseable JSON line instead of failing the task."""
-    bad = [
-        '{"src": "8.8.8.8", "n": 1e400}',
-        '{"n": -1e400}',
-        '{"n": NaN}',
-        '{"n": Infinity}',
-        '{"n": -Infinity}',
-    ]
     ok = '{"src": "8.8.8.8", "n": 1.5e3}'
-    df = parse_stage(spark.createDataFrame([(t,) for t in bad + [ok]], "text string"))
+    df = parse_stage(spark.createDataFrame([(t,) for t in NON_FINITE + [ok]], "text string"))
     got = {r.text: (r.format, r.fields) for r in df.collect()}
-    for t in bad:
+    for t in NON_FINITE:
         assert got[t] == ("json", {"line": t}), t
     assert got[ok] == ("json", {"src": "8.8.8.8", "n": "1.5E+03"})
 
@@ -129,19 +153,91 @@ def test_json_float_shortest_round_trip(spark):
     """JSON floats print as Go's FormatFloat(v, 'E', -1, 64): the
     shortest digits that round-trip, an exponent of at least two digits;
     arrays print their elements the same way, space-separated."""
-    want = {
-        "0.1": "1E-01",
-        "123456789.0": "1.23456789E+08",
-        "1.7976931348623157e308": "1.7976931348623157E+308",
-        "1.5e3": "1.5E+03",
-        "3.14159265": "3.14159265E+00",
-        "5e-324": "5E-324",
-        "[2.5, 0.1234567891]": "[2.5E+00 1.234567891E-01]",
-    }
-    lines = [f'{{"n": {v}}}' for v in want]
+    lines = [f'{{"n": {v}}}' for v in FLOATS]
     df = parse_stage(spark.createDataFrame([(t,) for t in lines], "text string"))
     got = {r.text: r.fields["n"] for r in df.collect()}
-    assert got == {f'{{"n": {v}}}': s for v, s in want.items()}
+    assert got == {f'{{"n": {v}}}': s for v, s in FLOATS.items()}
+
+
+def test_json_lone_surrogate_becomes_replacement_char(spark):
+    """A truncated line can end a string in half a surrogate pair. Go's
+    encoding/json decodes an unpaired surrogate escape as U+FFFD, in
+    keys and values alike; a valid pair stays one character."""
+    lines = {
+        '{"a":"\\ud800x"}': {"a": "\ufffdx"},
+        '{"\\udc00k":"v","b":["\\ud83d"]}': {"\ufffdk": "v", "b": "[\ufffd]"},
+        '{"a":"\\ud83d\\ude00","b":"\\ud83d\\u0041"}': {"a": "\U0001f600", "b": "\ufffdA"},
+    }
+    df = parse_stage(spark.createDataFrame([(t,) for t in lines], "text string"))
+    got = {r.text: dict(r.fields) for r in df.collect()}
+    assert got == lines
+
+
+def test_json_array_of_objects_prints_go_map(spark):
+    """An object inside an array prints as Go's fmt prints a map:
+    map[k:v ...] with sorted keys, each value formatted as an array
+    element (a string as is, a float in 'E' form, nested maps and
+    arrays alike)."""
+    line = '{"a":[{"n":1.5,"k":"v","m":{"z":null,"y":[true]}},{}],"b":{"c":[{"x":1}]}}'
+    df = parse_stage(spark.createDataFrame([(line,)], "text string"))
+    assert dict(df.first().fields) == {
+        "a": "[map[k:v m:map[y:[true] z:ErrorNil] n:1.5E+00] map[]]",
+        "b_c": "[map[x:1]]",
+    }
+
+
+def test_json_flatten_matches_oracle_on_parser_cases(flatten_mismatches):
+    """Every JSON line of this file: the JVM flatten gives the Python
+    oracle's entries, in the oracle's order."""
+    lines = (
+        [SAMPLES["json"], SAMPLES["json_multi"]]
+        + NON_FINITE
+        + ['{"src": "8.8.8.8", "n": 1.5e3}']
+        + [f'{{"n": {v}}}' for v in FLOATS]
+        + DISJOINT_KEYS
+        + ['{"a":"\\ud800x"}', '{"a":[{"k":"v","n":1.5}]}']
+    )
+    assert flatten_mismatches(lines) == []
+
+
+#: parse JSON, stop the session and its JVM, start a new one, parse again
+_TWO_JVMS = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import SparkContext
+from logboost_spark.parsers.formats import parse_stage
+from logboost_spark.session import get_spark
+
+for jvm in (1, 2):
+    spark = get_spark(cores=1)
+    df = spark.createDataFrame([('{"a":{"b":1.5}}',)], "text string")
+    print(jvm, dict(parse_stage(df).first().fields), flush=True)
+    spark.stop()
+    gateway = SparkContext._gateway
+    gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
+    gateway.proc.stdin.close()  # the JVM exits when its stdin closes
+    gateway.proc.wait(timeout=60)
+"""
+
+
+def test_parse_on_a_second_jvm_in_one_process():
+    """A process that stops its JVM and starts another parses JSON on
+    both: the flatten is registered in each session, not bound to the
+    first JVM."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", _TWO_JVMS, root],
+        capture_output=True, text=True, timeout=600, env=env,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    lines = [ln for ln in done.stdout.splitlines() if ln[:2] in ("1 ", "2 ")]
+    assert lines == ["1 {'a_b': '1.5E+00'}", "2 {'a_b': '1.5E+00'}"], done.stdout
 
 
 def test_deep_keys_union_and_full_project(spark):
@@ -149,12 +245,7 @@ def test_deep_keys_union_and_full_project(spark):
     (helpers/helpers.go:55-57)."""
     from logboost_spark.parsers.extra_keys import deep_keys, shallow_project
 
-    rows = [
-        ('{"a":1,"b":{"c":2}}',),
-        ('{"a":9,"d":"x"}',),
-        ('{"e":true}',),
-    ]
-    df = parse_stage(spark.createDataFrame(rows, "text string"))
+    df = parse_stage(spark.createDataFrame([(t,) for t in DISJOINT_KEYS], "text string"))
     assert deep_keys(df) == ["a", "b_c", "d", "e"]
     out = shallow_project(df, deep_keys(df)).collect()
     by_a = {r.a: r for r in out}
